@@ -14,9 +14,19 @@ locations), exactly like the reference's array-index arithmetic
 (``UnivariateTimeSeries.scala:176-208`` nearest, ``:267-290`` linear) — on a
 uniform index this coincides with time distance.
 
-Scale note: each method is a constant number of window functions over the same
-(key, loc) ordering — a single exchange per key partitioning, reused across
-chained fills; no driver collects, no per-row Python.
+Scale note: each method is a constant number of window functions over
+``PARTITION BY key`` — one exchange, reused across chained fills, and at most
+two sorts per method: (key, loc) for previous-looking windows and
+(key, loc DESC) for next-looking ones. A next-looking window is written as the
+mirror of its natural form: ``first(x, ignorenulls)`` over
+``rowsBetween(0, unboundedFollowing)`` becomes ``last(x, ignorenulls)`` over
+``rowsBetween(unboundedPreceding, 0)`` on the descending order. Spark evaluates
+a frame with a fixed lower edge and an unbounded upper edge by recomputing the
+aggregate from every row to the end of the partition — O(n²) per series —
+while a growing prefix frame is updated row by row in O(n). ``nearest`` and
+``linear`` run the descending window first, so an ascending window that
+follows (the next fill or ``roll_*``) reuses the ascending sort. No driver
+collects, no per-row Python.
 """
 
 from __future__ import annotations
@@ -29,6 +39,22 @@ from pyspark.sql import functions as F
 
 def _w(key_col: str, order_col: str) -> Window:
     return Window.partitionBy(key_col).orderBy(order_col)
+
+
+def suffix_window(partition_cols, order_col: str, start: int = 0) -> Window:
+    """The frame ``rowsBetween(start, unboundedFollowing)`` over ascending
+    ``order_col``, written as its mirror ``rowsBetween(unboundedPreceding,
+    -start)`` over descending ``order_col``; swap ``first`` for ``last``
+    when reading a row off it. Spark recomputes a suffix frame from every
+    row to the partition end (O(n²) per partition) but grows a prefix frame
+    incrementally (O(n)). Ascending order puts NULLs first and descending
+    puts them last, so the two frames hold the same rows whenever
+    ``order_col`` is unique within a partition."""
+    return (
+        Window.partitionBy(*partition_cols)
+        .orderBy(F.col(order_col).desc())
+        .rowsBetween(Window.unboundedPreceding, -start)
+    )
 
 
 def fill(
@@ -66,8 +92,8 @@ def fill_next(
     df: DataFrame, key_col="key", order_col="loc", value_col="value"
 ) -> DataFrame:
     """NOCB (``UnivariateTimeSeries.scala:230-248``)."""
-    w = _w(key_col, order_col).rowsBetween(0, Window.unboundedFollowing)
-    return df.withColumn(value_col, F.first(value_col, ignorenulls=True).over(w))
+    w = suffix_window([key_col], order_col)
+    return df.withColumn(value_col, F.last(value_col, ignorenulls=True).over(w))
 
 
 def fill_value(
@@ -108,15 +134,17 @@ def fill_previous_limit(
 
 
 def _prev_next_cols(df, key_col, order_col, value_col):
-    """Attach prev/next non-null value and their positions."""
+    """Attach next/prev non-null value and their positions. The descending
+    (next) window runs first so the ascending (prev) sort is the one a
+    following ascending window reuses."""
+    wn = suffix_window([key_col], order_col)
     wp = _w(key_col, order_col).rowsBetween(Window.unboundedPreceding, 0)
-    wn = _w(key_col, order_col).rowsBetween(0, Window.unboundedFollowing)
     pos_if_val = F.when(F.col(value_col).isNotNull(), F.col(order_col))
     return (
-        df.withColumn("_prev_v", F.last(value_col, ignorenulls=True).over(wp))
+        df.withColumn("_next_v", F.last(value_col, ignorenulls=True).over(wn))
+        .withColumn("_next_i", F.last(pos_if_val, ignorenulls=True).over(wn))
+        .withColumn("_prev_v", F.last(value_col, ignorenulls=True).over(wp))
         .withColumn("_prev_i", F.last(pos_if_val, ignorenulls=True).over(wp))
-        .withColumn("_next_v", F.first(value_col, ignorenulls=True).over(wn))
-        .withColumn("_next_i", F.first(pos_if_val, ignorenulls=True).over(wn))
     )
 
 

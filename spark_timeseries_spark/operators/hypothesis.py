@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .fill import suffix_window
+
 __all__ = [
     "jarque_bera",
     "mann_whitney_halves",
@@ -283,28 +285,26 @@ def fdr_bh(
     column. NULL p rows are excluded from m and pass through with NULL
     q / NULL reject.
 
-    Plan: two windows (ascending rank + backward running min) on ONE
-    sort over the p table — a table of test RESULTS (one row per
-    series/test), orders of magnitude smaller than the data; with
-    ``group_col`` (one test family per group) both windows partition
-    by it."""
+    Plan: an ascending rank window, then the backward running min as a
+    prefix frame over the materialized rank descending
+    (:func:`~.fill.suffix_window`) — two sorts over the p table, a table
+    of test RESULTS (one row per series/test), orders of magnitude
+    smaller than the data; with ``group_col`` (one test family per
+    group) both windows partition by it."""
     if not (0.0 < alpha < 1.0):
         raise ValueError(f"alpha must be in (0, 1), got {alpha}")
     gcols = [group_col] if group_col is not None else []
     w_rank = Window.partitionBy(*gcols).orderBy(F.col(p_col).asc())
     w_part = Window.partitionBy(*gcols)
-    w_back = (
-        Window.partitionBy(*gcols)
-        .orderBy(F.col(p_col).asc())
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
+    # ordered by the unique rank, not by p: tied p-values keep their ranks
+    w_back = suffix_window(gcols, "_i")
     ok = df.where(F.col(p_col).isNotNull())
-    i = F.row_number().over(w_rank).cast("double")
     m = F.count(F.lit(1)).over(w_part).cast("double")
-    d = ok.withColumn("_raw", F.col(p_col) * m / i)
+    d = ok.withColumn("_i", F.row_number().over(w_rank))
+    d = d.withColumn("_raw", F.col(p_col) * m / F.col("_i").cast("double"))
     d = d.withColumn(
         "q", F.least(F.min("_raw").over(w_back), F.lit(1.0))
-    ).drop("_raw")
+    ).drop("_raw", "_i")
     d = d.withColumn("reject", F.col("q") <= F.lit(float(alpha)))
     bad = df.where(F.col(p_col).isNull()).withColumn(
         "q", F.lit(None).cast("double")
@@ -1062,7 +1062,12 @@ def kendall_tau_b(
 
     Plan: one groupBy(x, y) full-data pass; a |X|×|Y| crossJoin
     densification; two window passes per direction on the bounded
-    grid; margin groupBys on the cell table; ONE reduce."""
+    grid; margin groupBys on the cell table; ONE reduce.
+
+    Eager: the call runs the groupBy(x, y) pass at once and pins it with
+    ``localCheckpoint(eager=True)``; the returned DataFrame reads those
+    executor blocks, which live until it is garbage-collected and are
+    not recomputed if an executor is lost."""
     x = F.col(x_col).cast("double")
     y = F.col(y_col).cast("double")
     # the cell table is referenced five times below (grid margins, the
@@ -1085,10 +1090,7 @@ def kendall_tau_b(
             "_x", "_y", F.coalesce(F.col("_n"), F.lit(0)).alias("_n")
         )
     )
-    w_y_hi = (
-        Window.partitionBy("_x").orderBy("_y")
-        .rowsBetween(1, Window.unboundedFollowing)
-    )
+    w_y_hi = suffix_window(["_x"], "_y", start=1)
     w_y_lo = (
         Window.partitionBy("_x").orderBy("_y")
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -1098,10 +1100,7 @@ def kendall_tau_b(
     ).withColumn(
         "_lty", F.coalesce(F.sum("_n").over(w_y_lo), F.lit(0))
     )
-    w_x_hi = (
-        Window.partitionBy("_y").orderBy("_x")
-        .rowsBetween(1, Window.unboundedFollowing)
-    )
+    w_x_hi = suffix_window(["_y"], "_x", start=1)
     d = d.withColumn(
         "_cc", F.coalesce(F.sum("_gty").over(w_x_hi), F.lit(0))
     ).withColumn(

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .experiment import chi2_crit_05
+from .fill import suffix_window
 
 
 def time_to_event(
@@ -610,7 +611,12 @@ def stratified_log_rank(
     totals, per-(stratum, group) running-exit windows for the at-risk
     ledger, per-(stratum, duration) windows for the shared totals, and
     two one-row reduces. Bin durations at scale (the KM caveat);
-    stratum cardinality is covariate-bounded."""
+    stratum cardinality is covariate-bounded.
+
+    Eager: the call runs the groupBy(stratum, group, duration) pass at
+    once and pins it with ``localCheckpoint(eager=True)``; the returned
+    DataFrame reads those executor blocks, which live until it is
+    garbage-collected and are not recomputed if an executor is lost."""
     # the cell table feeds the grid scaffold, the totals, and the
     # densification join; materialize it once so the full-data pass (and
     # whatever pipeline produced df — time_to_event is itself windowed)
@@ -741,7 +747,12 @@ def concordance_index(
 
     Plan: one groupBy(duration, risk) full-data pass; a |T|×|R|
     crossJoin densification; two bounded-grid window passes; ONE
-    reduce. No data-sized joins, no Python."""
+    reduce. No data-sized joins, no Python.
+
+    Eager: the call runs the groupBy(duration, risk) pass at once and
+    pins it with ``localCheckpoint(eager=True)``; the returned DataFrame
+    reads those executor blocks, which live until it is
+    garbage-collected and are not recomputed if an executor is lost."""
     t = F.col(duration_col).cast("double")
     r = F.col(risk_col).cast("double")
     e = F.col(event_col).cast("boolean").cast("int")
@@ -767,11 +778,7 @@ def concordance_index(
             F.coalesce(F.col("_ncens"), F.lit(0)).alias("_ncens"),
         )
     )
-    w_later = (
-        Window.partitionBy("_r")
-        .orderBy("_t")
-        .rowsBetween(1, Window.unboundedFollowing)
-    )
+    w_later = suffix_window(["_r"], "_t", start=1)
     d = dense.withColumn(
         "_later",
         F.coalesce(F.sum("_n").over(w_later), F.lit(0)) + F.col("_ncens"),
@@ -781,11 +788,7 @@ def concordance_index(
         .orderBy("_r")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    w_hi = (
-        Window.partitionBy("_t")
-        .orderBy("_r")
-        .rowsBetween(1, Window.unboundedFollowing)
-    )
+    w_hi = suffix_window(["_t"], "_r", start=1)
     d = d.withColumn(
         "_conc_a", F.coalesce(F.sum("_later").over(w_lo), F.lit(0))
     ).withColumn(

@@ -114,7 +114,12 @@ def var_es(
     construction). NULL where fewer than 2 returns. One lag window +
     one percentile aggregate + one conditional re-aggregate (the
     percentile must land before the tail mean can filter — two passes
-    over the per-key returns, both map-side combinable)."""
+    over the per-key returns, both map-side combinable).
+
+    Eager: the call runs the lag-window returns pass at once and pins it
+    with ``localCheckpoint(eager=True)``; the returned DataFrame reads
+    those executor blocks, which live until it is garbage-collected and
+    are not recomputed if an executor is lost."""
     if not 0.5 <= alpha < 1.0:
         raise ValueError(f"alpha must be in [0.5, 1), got {alpha}")
     v = F.col(value_col)

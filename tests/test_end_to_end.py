@@ -84,29 +84,78 @@ def test_off_index_observations_dropped(spark, index):
 
 
 def test_fill_linear_roll_mean_vs_pandas(spark, obs, index):
-    ts = TimeSeriesDataFrame.from_observations(obs, index)
-    result = ts.fill("linear").roll_mean(5, "left")
-    got = (
-        result.df.toPandas()
-        .pivot_table(index="loc", columns="key", values="value", dropna=False)
-        .sort_index()
+    # fill edge cases beside the fixture's single holes: "d" has leading
+    # and trailing NULL runs, "e" is NULL in every row, "f" has one value
+    start = pd.Timestamp("2015-04-09")
+    edge_vals = {
+        "d": [None, None, 3.0, 4.0, None, 6.0, None, None, None, None],
+        "e": [None] * 10,
+        "f": [None] * 4 + [7.0] + [None] * 5,
+    }
+    edge = spark.createDataFrame(
+        [
+            ((start + pd.Timedelta(days=i)).to_pydatetime(), key, v)
+            for key, vals in edge_vals.items()
+            for i, v in enumerate(vals)
+        ],
+        "ts timestamp, key string, value double",
     )
+    ts = TimeSeriesDataFrame.from_observations(obs.unionByName(edge), index)
+    keys = ["a", "b", "c", *edge_vals]
+
+    def pivot(df):
+        return (
+            df.toPandas()
+            .pivot_table(index="loc", columns="key", values="value", dropna=False)
+            .sort_index()[keys]
+        )
+
     # pandas oracle
     pidx = index.to_pandas()
-    frame = {}
+    series = {}
     for s, key in enumerate(["a", "b", "c"]):
         v = [float(s * 10 + i) for i in range(10)]
         for hole_s, hole_i in {(0, 3), (1, 0), (2, 9)}:
             if hole_s == s:
                 v[hole_i] = np.nan
-        ser = pd.Series(v, index=pidx).interpolate(limit_area="inside")
-        # left-aligned: stamp at window start = pandas right-stamp shifted
-        frame[key] = (
-            ser.rolling(5).mean().shift(-4).iloc[0:6].reset_index(drop=True)
+        series[key] = pd.Series(v, index=pidx)
+    for key, vals in edge_vals.items():
+        series[key] = pd.Series(vals, index=pidx, dtype=float)
+
+    def nearest(ser):
+        # closer of previous/next non-null by position; previous wins ties
+        pos = pd.Series(np.arange(len(ser), dtype=float), index=ser.index)
+        known = pos.where(ser.notna())
+        prev, nxt = ser.ffill(), ser.bfill()
+        take_prev = nxt.isna() | (pos - known.ffill() <= known.bfill() - pos)
+        return prev.where(take_prev, nxt)
+
+    oracles = {
+        "linear": lambda ser: ser.interpolate(limit_area="inside"),
+        "next": lambda ser: ser.bfill(),
+        "nearest": nearest,
+    }
+    for method, oracle in oracles.items():
+        got = pivot(ts.fill(method).df)
+        want = pd.DataFrame({k: oracle(series[k]).to_numpy() for k in keys})
+        assert got.shape == want.shape == (10, 6), method
+        np.testing.assert_allclose(
+            got.to_numpy(), want.to_numpy(), rtol=0, equal_nan=True,
+            err_msg=method,
         )
-    want = pd.DataFrame(frame)
-    assert got.shape == want.shape == (6, 3)
-    np.testing.assert_allclose(got.to_numpy(), want.to_numpy(), rtol=1e-12)
+
+    result = ts.fill("linear").roll_mean(5, "left")
+    got = pivot(result.df)
+    # left-aligned: stamp at window start = pandas right-stamp shifted
+    want = pd.DataFrame({
+        k: oracles["linear"](series[k]).rolling(5).mean().shift(-4)
+        .iloc[0:6].reset_index(drop=True)
+        for k in keys
+    })
+    assert got.shape == want.shape == (6, 6)
+    np.testing.assert_allclose(
+        got.to_numpy(), want.to_numpy(), rtol=1e-12, equal_nan=True
+    )
     # left-aligned: 6 surviving stamps starting at the index start
     assert result.index.size == 6
     assert result.index.first() == pd.Timestamp("2015-04-09")

@@ -58,16 +58,95 @@ def grid(spark):
     )
 
 
-def test_series_transforms_single_sort_zero_extra_exchanges(spark, grid):
-    """fill→fill→roll stacks five window functions on ONE (key, loc) sort;
-    no exchange between them (cached input is already materialized)."""
+def test_series_transforms_pinned_sorts_zero_extra_exchanges(spark, grid):
+    """fill→fill→roll stacks its window functions on one key partitioning;
+    no exchange between them (cached input is already materialized).
+    fill_linear's next-looking windows run on a (key, loc DESC) sort — the
+    mirrored form of Spark's O(n²) suffix frame — before its (key, loc)
+    windows, so a following roll_* reuses the ascending sort: three sorts
+    after fill_previous, two without it."""
     chain = rolling.roll_mean(
         fill_ops.fill_linear(fill_ops.fill_previous(grid)), 7
     )
     shuffles, sorts, p = _counts(chain)
-    assert sorts == 1, p
+    assert sorts == 3, p
     assert shuffles <= 1, p  # at most the partition-by-key on top of the cache
     assert p.count("Window") >= 5
+
+    shuffles, sorts, p = _counts(rolling.roll_mean(fill_ops.fill_linear(grid), 7))
+    assert sorts == 2, p
+    assert shuffles <= 1, p
+
+
+# a frame whose lower edge is bounded and whose upper edge is unbounded:
+# Spark recomputes it from every row to the partition end, O(n²) per
+# partition. Full-partition frames (unboundedPreceding lower edge) are O(n).
+_SUFFIX_FRAME_SRC = re.compile(
+    r"rowsBetween\((?!\s*Window\.unboundedPreceding\b)[^,()]+,"
+    r"\s*Window\.unboundedFollowing\s*\)"
+)
+_SUFFIX_FRAME_PLAN = re.compile(
+    r"specifiedwindowframe\(\w+, (?!unboundedpreceding\$\(\))[^,()]+"
+    r"(?:\(\))?, unboundedfollowing\$\(\)\)"
+)
+
+
+def test_no_suffix_window_frames_in_source():
+    import pathlib
+
+    root = pathlib.Path(sts.__file__).parent
+    hits = [
+        f"{path.relative_to(root)}: {m.group(0)}"
+        for path in sorted(root.rglob("*.py"))
+        for m in _SUFFIX_FRAME_SRC.finditer(path.read_text())
+    ]
+    assert not hits, hits
+    # the pattern does catch the forms it forbids
+    assert _SUFFIX_FRAME_SRC.search("rowsBetween(0, Window.unboundedFollowing)")
+    assert _SUFFIX_FRAME_SRC.search(
+        "rowsBetween(\n    1, Window.unboundedFollowing\n)"
+    )
+    assert not _SUFFIX_FRAME_SRC.search(
+        "rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)"
+    )
+
+
+def test_fill_and_rank_tests_plan_no_suffix_frames(spark, grid):
+    from spark_timeseries_spark.operators.hypothesis import (
+        fdr_bh,
+        kendall_tau_b,
+    )
+    from spark_timeseries_spark.operators.survival import concordance_index
+
+    pairs = spark.createDataFrame(
+        [(float(i % 5), float(i % 3), i % 2) for i in range(30)],
+        "x double, y double, event int",
+    )
+    outs = {
+        "fill_next": fill_ops.fill_next(grid),
+        "fill_nearest": fill_ops.fill_nearest(grid),
+        "fill_linear": fill_ops.fill_linear(grid),
+        "fdr_bh": fdr_bh(grid.select((F.col("loc") / 100.0).alias("p"))),
+        "kendall_tau_b": kendall_tau_b(pairs),
+        "concordance_index": concordance_index(
+            pairs, duration_col="x", event_col="event", risk_col="y"
+        ),
+    }
+    for name, out in outs.items():
+        p = _plan(out)
+        assert "Window" in p, (name, p)
+        assert not _SUFFIX_FRAME_PLAN.search(p), (name, p)
+    # the pattern does catch Spark's rendering of a suffix frame
+    assert _SUFFIX_FRAME_PLAN.search(
+        "specifiedwindowframe(RowFrame, currentrow$(), unboundedfollowing$())"
+    )
+    assert _SUFFIX_FRAME_PLAN.search(
+        "specifiedwindowframe(RowFrame, 1, unboundedfollowing$())"
+    )
+    assert not _SUFFIX_FRAME_PLAN.search(
+        "specifiedwindowframe(RowFrame, unboundedpreceding$(), "
+        "unboundedfollowing$())"
+    )
 
 
 def test_lag_diff_chain_shares_window_partitioning(spark, grid):

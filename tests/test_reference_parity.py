@@ -103,6 +103,13 @@ FILL_CASES = {
         ([1.0, None, 2.0], [1.0, 2.0, 2.0]),
         ([1.0, None, None, 2.0], [1.0, 2.0, 2.0, 2.0]),
         ([1.0, None, 3.0, None, 2.0], [1.0, 3.0, 3.0, 2.0, 2.0]),
+        # leading and trailing NULL runs
+        ([None, None, 1.0, None, 2.0, None, None],
+         [1.0, 1.0, 1.0, 2.0, 2.0, None, None]),
+        ([None, None, None], [None, None, None]),
+        ([None, 3.0, None], [3.0, 3.0, None]),
+        # third element: loc per row; a NULL loc sorts first
+        ([None, None, 2.0, None], [2.0, 2.0, 2.0, None], [None, 0, 1, 2]),
     ],
     "linear": [
         ([1.0, None, 2.0], [1.0, 1.5, 2.0]),
@@ -110,11 +117,21 @@ FILL_CASES = {
         ([1.0, None, None, 4.0], [1.0, 2.0, 3.0, 4.0]),
         ([1.0, None, None, None, 5.0], [1.0, 2.0, 3.0, 4.0, 5.0]),
         ([1.0, None, 3.0, None, 2.0], [1.0, 2.0, 3.0, 2.5, 2.0]),
+        ([None, None, 1.0, None, 3.0, None, None],
+         [None, None, 1.0, 2.0, 3.0, None, None]),
+        ([None, None, None], [None, None, None]),
+        ([None, 3.0, None], [None, 3.0, None]),
+        ([None, 1.0, None, 3.0], [None, 1.0, 2.0, 3.0], [None, 0, 1, 2]),
     ],
     "nearest": [
         ([1.0, None, 2.0], [1.0, 1.0, 2.0]),  # prev wins ties
         ([1.0, None, None, 2.0], [1.0, 1.0, 2.0, 2.0]),
         ([None, 1.0], [1.0, 1.0]),
+        ([None, None, 1.0, None, None, 4.0, None, None],
+         [1.0, 1.0, 1.0, 1.0, 4.0, 4.0, 4.0, 4.0]),
+        ([None, None, None], [None, None, None]),
+        ([None, 3.0, None], [3.0, 3.0, 3.0]),
+        ([None, None, 2.0, None], [2.0, 2.0, 2.0, 2.0], [None, 0, 1, 2]),
     ],
 }
 
@@ -125,9 +142,11 @@ FILL_CASES = {
     ids=lambda x: str(x)[:40],
 )
 def test_fill_methods_reference_examples(spark, method, case):
-    vals, want = case
+    vals, want, *locs = case
+    locs = locs[0] if locs else range(len(vals))
     df = spark.createDataFrame(
-        [("k", i, v) for i, v in enumerate(vals)], "key string, loc long, value double"
+        list(zip(["k"] * len(vals), locs, vals)),
+        "key string, loc long, value double",
     )
     out = (
         fill_ops.fill(df, method)

@@ -13,26 +13,30 @@ from __future__ import annotations
 import argparse
 import json
 import math
+import sys
 
 
-def main():
+def main(argv=None):
     ap = argparse.ArgumentParser()
     ap.add_argument("before")
     ap.add_argument("after")
     ap.add_argument("--top", type=int, default=20)
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     b = json.load(open(args.before))
     a = json.load(open(args.after))
     bq, aq = b["queries"], a["queries"]
     common = sorted(set(bq) & set(aq))
-    ratios = {}
-    for q in common:
-        if aq[q] > 0:
-            ratios[q] = bq[q] / aq[q]
-    geo = math.exp(sum(math.log(r) for r in ratios.values()) / len(ratios))
+    if not common:
+        sys.exit(f"no query rows in common between {args.before} "
+                 f"and {args.after}")
     tb = sum(bq[q] for q in common)
     ta = sum(aq[q] for q in common)
+    if not a["value"] or not ta:
+        sys.exit(f"cannot compare: {args.after} has a zero total")
+    ratios = {q: bq[q] / aq[q] for q in common if aq[q] > 0 and bq[q] > 0}
+    geo = (math.exp(sum(math.log(r) for r in ratios.values()) / len(ratios))
+           if ratios else float("nan"))
     print(f"totals (reported): {b['value']} -> {a['value']}  "
           f"({b['value'] / a['value']:.3f}x)")
     print(f"common rows: {len(common)}  sum {tb:.1f} -> {ta:.1f} "
