@@ -2,8 +2,10 @@
 
 The reference applies models via ``mapSeries(v => Model.fitModel(v)...)``
 (SURVEY §2.9): one single-threaded estimator per series, parallel across
-series. Here that is a grouped-map pandas UDF: ``df.groupBy(key)
-.applyInPandas(...)`` — one Arrow batch per series, numpy estimator inside,
+series. Here that is :func:`~spark_timeseries_spark.parallel.map_groups`
+— the ``groupBy(key).applyInPandas(...)`` contract run as one wave of
+tasks, each streaming its key-clustered partition through one Python
+call that cuts out the series one by one; numpy estimator inside,
 results as plain DataFrames:
 
 - :func:`fit_models`   → (key, model, params ARRAY<double>, aux...)
@@ -11,8 +13,9 @@ results as plain DataFrames:
 - :func:`residuals`    → (key, loc, ts, value) with model effects removed
 - :func:`test_series`  → (key, stat, p_value) for a named statistical test
 
-Scale notes: the plan is one exchange on the key (reused if the input is
-already hash-partitioned by key); each series must fit in executor memory —
+Scale notes: the plan is one exchange on the key into ``defaultParallelism``
+partitions, carrying only the columns the kernel reads (all of them where
+it returns the input rows); each series must fit in executor memory —
 the same envelope the reference assumes
 (``src/site/markdown/index.md:35-40``). Models never touch the driver.
 """
@@ -24,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..parallel import map_groups
 from . import arima as arima_mod
 from . import arx as arx_mod
 from . import univariate as uni
@@ -34,27 +38,9 @@ def _series_from(pdf: pd.DataFrame, order_col: str, value_col: str) -> np.ndarra
     return pdf[value_col].to_numpy(dtype=float, na_value=np.nan)
 
 
-def _spread(df: DataFrame, key_col: str) -> DataFrame:
-    """Repartition by key with an EXPLICIT partition count before a
-    grouped-map stage. Without this, AQE coalesces the small shuffled input
-    to one partition and the (CPU-bound, Python-side) per-series estimators
-    run serially — the classic small-input/expensive-UDF mismatch. AQE's
-    byte-based coalescing cannot see Python CPU cost, but it preserves
-    user-specified repartition counts, so this explicit repartition is
-    enough — no session-wide coalescing override (which would force
-    full-width task counts on every tiny JVM shuffle in the plan).
-
-    The count must DIFFER from the upstream partitioning: when the input is
-    already hash-partitioned by key with the same count (e.g. a window-fill
-    chain over `partitionBy(key)` with `spark.sql.shuffle.partitions`
-    partitions), the optimizer prunes the repartition as redundant, the
-    grouped map rides the upstream ENSURE_REQUIREMENTS exchange, and AQE
-    coalesces that to ONE partition — measured 7× slowdown (serialized
-    fits). An odd `2·parallelism + 1` count never matches cores or the
-    usual shuffle-partition settings and load-balances CPU-skewed series."""
-    from ..parallel import spread_kernel
-
-    return spread_kernel(df, key_col)
+def _narrow(df: DataFrame, *cols: str) -> DataFrame:
+    """Only the columns a per-series kernel reads cross its exchange."""
+    return df.select(*dict.fromkeys(cols))
 
 
 def _clean(y: np.ndarray) -> np.ndarray:
@@ -190,8 +176,9 @@ def fit_models(
             {"key": [key], "model": [model], "params": [params.tolist()]}
         )
 
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(
-        _fit, schema="key string, model string, params array<double>"
+    return map_groups(
+        _narrow(df, key_col, order_col, value_col), key_col, _fit,
+        "key string, model string, params array<double>",
     )
 
 
@@ -241,8 +228,9 @@ def forecast(
             }
         )
 
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(
-        _fc, schema="key string, step long, forecast double"
+    return map_groups(
+        _narrow(df, key_col, order_col, value_col), key_col, _fc,
+        "key string, step long, forecast double",
     )
 
 
@@ -257,7 +245,6 @@ def residuals(
     """Fit per series and remove time-dependent effects
     (``TimeSeriesModel.removeTimeDependentEffects``)."""
     model = _require(model, _RESIDUAL_MODELS)
-    out_schema = df.schema
 
     def _resid(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order_col).reset_index(drop=True)
@@ -277,7 +264,7 @@ def residuals(
         pdf[value_col] = [None if np.isnan(v) else float(v) for v in res]
         return pdf
 
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(_resid, schema=out_schema)
+    return map_groups(df, key_col, _resid, df.schema)
 
 
 def apply_model_effects(
@@ -304,9 +291,7 @@ def apply_model_effects(
         pdf[value_col] = [None if np.isnan(v) else float(v) for v in out]
         return pdf
 
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(
-        _apply, schema=df.schema
-    )
+    return map_groups(df, key_col, _apply, df.schema)
 
 
 def fit_xreg_models(
@@ -379,9 +364,9 @@ def fit_xreg_models(
             }
         )
 
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(
-        _fit,
-        schema="key string, model string, params array<double>, aux array<double>",
+    return map_groups(
+        _narrow(df, key_col, order_col, value_col, *xreg_cols), key_col, _fit,
+        "key string, model string, params array<double>, aux array<double>",
     )
 
 
@@ -424,8 +409,9 @@ def variance_forecast(
             }
         )
 
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(
-        _vf, schema="key string, step long, variance double"
+    return map_groups(
+        _narrow(df, key_col, order_col, value_col), key_col, _vf,
+        "key string, step long, variance double",
     )
 
 
@@ -503,8 +489,9 @@ def fit_improvement(
             ok = False
         return pd.DataFrame({"key": [key], "n": [len(y)], "ok": [ok]})
 
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(
-        _c, schema="key string, n long, ok boolean"
+    return map_groups(
+        _narrow(df, key_col, order_col, value_col), key_col, _c,
+        "key string, n long, ok boolean",
     )
 
 
@@ -548,8 +535,9 @@ def fit_xreg_improvement(
             ok = False
         return pd.DataFrame({"key": [key], "n": [len(y)], "ok": [ok]})
 
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(
-        _c, schema="key string, n long, ok boolean"
+    return map_groups(
+        _narrow(df, key_col, order_col, value_col, *xreg_cols), key_col, _c,
+        "key string, n long, ok boolean",
     )
 
 
@@ -577,8 +565,9 @@ def test_series(
         stat, p = _run_series_test(test, y, kwargs)
         return pd.DataFrame({"key": [key], "stat": [stat], "p_value": [p]})
 
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(
-        _t, schema="key string, stat double, p_value double"
+    return map_groups(
+        _narrow(df, key_col, order_col, value_col), key_col, _t,
+        "key string, stat double, p_value double",
     )
 
 
@@ -652,8 +641,9 @@ def test_series_suite(
     fields = ", ".join(
         f"`{name}_stat` double, `{name}_p` double" for name, _, _ in specs
     )
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(
-        _t, schema=f"key string, {fields}"
+    return map_groups(
+        _narrow(df, key_col, order_col, value_col), key_col, _t,
+        f"key string, {fields}",
     )
 
 

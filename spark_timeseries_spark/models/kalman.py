@@ -150,10 +150,10 @@ def kalman_local_level(
             "q_hat": qq, "r_hat": r_hat,
         })
 
-    from ..parallel import spread_kernel
+    from ..parallel import map_groups
 
-    return spread_kernel(df, key_col).groupBy(key_col).applyInPandas(
-        kern,
+    return map_groups(
+        df, key_col, kern,
         f"`{key_col}` {kt}, `{order_col}` {lt}, value double, "
         "level double, level_var double, smoothed double, "
         "smoothed_var double, q_hat double, r_hat double",

@@ -25,11 +25,11 @@ Determinism contract (the cross-engine oracle story):
   engine-independent. Ties on quantized costs prefer the NON-burst
   state (stated).
 
-Scale: ONE exchange (hash repartition on key) + one partition-local
+Scale: :func:`~spark_timeseries_spark.parallel.map_groups` — ONE
+exchange (hash repartition on key) + one partition-local (key, time)
 sort feed a ``mapInPandas`` pass that computes gaps, rates, and the
-per-key Viterbi itself — no window passes, no per-group Arrow framing
-(a whole partition streams as ~`maxRecordsPerBatch` batches; a key
-split across batches is carried over inside the generator). Emission
+per-key Viterbi itself — no window passes, no per-group Arrow framing.
+A NULL key is one series like any other. Emission
 costs are quantized VECTORIZED (numpy elementwise — the identical
 IEEE multiply/add/floor sequence as scalar math); only the two-cost
 recurrence itself runs as a plain-float scalar loop (it is a true
@@ -50,7 +50,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..parallel import map_groups
+
 __all__ = ["kleinberg_bursts", "burst_episodes"]
+
+_NO_GAPS = pd.DataFrame(columns=["key", "ts", "gap_seconds", "state"])
 
 
 def kleinberg_bursts(
@@ -83,8 +87,6 @@ def kleinberg_bursts(
         df.select(F.col(key_col).alias("key"), F.col(ts_col).alias("ts"))
         .where(F.col(ts_col).isNotNull())
         .withColumn("_us", F.unix_micros(F.col(ts_col).cast("timestamp")))
-        .repartition("key")
-        .sortWithinPartitions("key", "_us")
     )
 
     def _labels(us: np.ndarray):
@@ -148,51 +150,22 @@ def kleinberg_bursts(
             state[t - 1] = st
         return g, state
 
-    def _process(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        ks, tss, gs, sts = [], [], [], []
-        for key, grp in pdf.groupby("key", sort=False):
-            res = _labels(grp["_us"].to_numpy(dtype=np.int64))
-            if res is None:
-                continue
-            g, state = res
-            ks.append(np.full(g.size, key, dtype=object))
-            tss.append(grp["ts"].to_numpy()[1:])
-            gs.append(g)
-            sts.append(state)
-        if not ks:
-            return None
+    def _one(grp: pd.DataFrame) -> pd.DataFrame:
+        res = _labels(grp["_us"].to_numpy(dtype=np.int64))
+        if res is None:
+            return _NO_GAPS
+        g, state = res
         return pd.DataFrame({
-            "key": np.concatenate(ks),
-            "ts": np.concatenate(tss),
-            "gap_seconds": np.concatenate(gs),
-            "state": np.concatenate(sts),
+            "key": grp["key"].iat[0],
+            "ts": grp["ts"].to_numpy()[1:],
+            "gap_seconds": g,
+            "state": state,
         })
 
-    def run(it):
-        # rows arrive sorted by (key, _us); a key may split across
-        # Arrow batches — carry the trailing key until it completes
-        buf = None
-        for pdf in it:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            if not len(pdf):
-                buf = None
-                continue
-            kv = pdf["key"].to_numpy()
-            tail = int((kv == kv[-1]).sum())
-            head = pdf.iloc[: len(pdf) - tail]
-            buf = pdf.iloc[len(pdf) - tail:]
-            if len(head):
-                out = _process(head)
-                if out is not None:
-                    yield out
-        if buf is not None and len(buf):
-            out = _process(buf)
-            if out is not None:
-                yield out
-
-    return d.mapInPandas(
-        run, "key string, ts timestamp, gap_seconds double, state int"
+    return map_groups(
+        d, "key", _one,
+        "key string, ts timestamp, gap_seconds double, state int",
+        order_by=("_us",),
     )
 
 

@@ -404,9 +404,9 @@ def bocpd(
              "run_map": run_map}
         )
 
-    from ..parallel import spread_kernel
+    from ..parallel import map_groups
 
-    return spread_kernel(df, key_col).groupBy(key_col).applyInPandas(
-        kern,
+    return map_groups(
+        df, key_col, kern,
         f"`{key_col}` {kt}, `{order_col}` {lt}, p_cp double, run_map long",
     )

@@ -236,10 +236,10 @@ def theil_sen(
                  "intercept": [inter], "n_pairs": [int(sl.size)]}
             )
 
-        from ..parallel import spread_kernel
+        from ..parallel import map_groups
 
-        return spread_kernel(src, key_col).groupBy(key_col).applyInPandas(
-            kern,
+        return map_groups(
+            src, key_col, kern,
             f"`{key_col}` {kt}, slope double, intercept double, n_pairs long",
         )
 
@@ -358,13 +358,9 @@ def _mk_s_groups(
                 out["s"] = [c - d]
             return pd.DataFrame(out)
 
-        from ..parallel import spread_kernel
+        from ..parallel import map_groups
 
-        return (
-            spread_kernel(src, *group_cols)
-            .groupBy(*group_cols)
-            .applyInPandas(kern, f"{fields}, s long")
-        )
+        return map_groups(src, group_cols, kern, f"{fields}, s long")
 
     if method == "join":
         return _join_plan(ptsn)

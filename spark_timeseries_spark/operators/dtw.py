@@ -159,11 +159,9 @@ def dtw_nearest(
         F.col(order_col).alias("_o"),
         F.col(value_col).alias("_v"),
     )
-    from ..parallel import spread_kernel
+    from ..parallel import map_groups
 
-    dists = spread_kernel(pts, "_k").groupBy("_k").applyInPandas(
-        _d, schema="key string, n long, dtw double"
-    )
+    dists = map_groups(pts, "_k", _d, "key string, n long, dtw double")
     from pyspark.sql import Window as W
 
     w = W.orderBy(F.col("dtw").asc_nulls_last(), F.col("key").asc())

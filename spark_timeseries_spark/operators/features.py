@@ -748,10 +748,10 @@ def sample_entropy(
                  "b": [bcnt], "a": [acnt]}
             )
 
-        from ..parallel import spread_kernel
+        from ..parallel import map_groups
 
-        return spread_kernel(src, key_col).groupBy(key_col).applyInPandas(
-            kern, f"`{key_col}` {kt}, n long, b long, a long"
+        return map_groups(
+            src, key_col, kern, f"`{key_col}` {kt}, n long, b long, a long"
         )
 
     if method == "join":

@@ -244,8 +244,8 @@ def _natural_cubic_spline_fill(x: np.ndarray, y: np.ndarray) -> np.ndarray:
 def fill_spline(
     df: DataFrame, key_col="key", order_col="loc", value_col="value"
 ) -> DataFrame:
-    """Natural-cubic-spline fill via ``applyInPandas`` — the only fill method
-    that needs Python; Arrow-batched, one group per series."""
+    """Natural-cubic-spline fill via ``parallel.map_groups`` — the only
+    fill method that needs Python; one kernel call per series."""
     schema = df.schema
     ki, oi, vi = (
         schema.fieldNames().index(key_col),
@@ -262,13 +262,9 @@ def fill_spline(
         pdf[value_col] = [None if np.isnan(v) else float(v) for v in filled]
         return pdf
 
-    from ..parallel import spread_kernel
+    from ..parallel import map_groups
 
-    return (
-        spread_kernel(df, key_col)
-        .groupBy(key_col)
-        .applyInPandas(_fill, schema=df.schema)
-    )
+    return map_groups(df, key_col, _fill, df.schema)
 
 
 def missingness_profile(

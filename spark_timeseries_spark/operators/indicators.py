@@ -93,11 +93,9 @@ def _ema_kernel(df, alpha, key_col, order_col, value_col, out_col):
         pdf[out_col] = e
         return pdf
 
-    from ..parallel import spread_kernel
+    from ..parallel import map_groups
 
-    return spread_kernel(df, key_col).groupBy(key_col).applyInPandas(
-        kern, f"{fields}, `{out_col}` double"
-    )
+    return map_groups(df, key_col, kern, f"{fields}, `{out_col}` double")
 
 
 def _ema_col(

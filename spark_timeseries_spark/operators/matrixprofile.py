@@ -121,8 +121,8 @@ def matrix_profile(
         F.col(order_col).alias("_o"),
         F.col(value_col).alias("_v"),
     )
-    from ..parallel import spread_kernel
+    from ..parallel import map_groups
 
-    return spread_kernel(obs, "_k").groupBy("_k").applyInPandas(
-        _mp, schema="key string, loc long, mp double, mp_idx long"
+    return map_groups(
+        obs, "_k", _mp, "key string, loc long, mp double, mp_idx long"
     )

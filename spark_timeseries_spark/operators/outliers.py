@@ -311,15 +311,13 @@ def esd_outliers(
         })
 
     # pre-filter JVM-side: null values never reach the Arrow transfer
-    from ..parallel import spread_kernel
+    from ..parallel import map_groups
 
-    return (
-        spread_kernel(df.where(F.col(value_col).isNotNull()), key_col)
-        .groupBy(key_col)
-        .applyInPandas(
-            kern,
-            f"`{key_col}` {kt}, iter int, `{order_col}` {lt}, "
-            "value double, r_stat double, lambda_crit double, "
-            "is_outlier boolean",
-        )
+    return map_groups(
+        df.where(F.col(value_col).isNotNull()),
+        key_col,
+        kern,
+        f"`{key_col}` {kt}, iter int, `{order_col}` {lt}, "
+        "value double, r_stat double, lambda_crit double, "
+        "is_outlier boolean",
     )

@@ -142,11 +142,9 @@ def _periodogram_fft(df: DataFrame, key_col, loc_col, value_col) -> DataFrame:
             }
         )
 
-    from ..parallel import spread_kernel
+    from ..parallel import map_groups
 
-    return spread_kernel(df, key_col).groupBy(key_col).applyInPandas(
-        kernel, schema
-    )
+    return map_groups(df, key_col, kernel, schema)
 
 
 def _periodogram_with_n(

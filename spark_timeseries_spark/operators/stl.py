@@ -173,6 +173,6 @@ def stl_decompose(
         f"`{key_col}` {key_t}, `{loc_col}` {loc_t}, `{ts_col}` {ts_t}, "
         f"`{value_col}` double, trend double, seasonal double, resid double"
     )
-    from ..parallel import spread_kernel
+    from ..parallel import map_groups
 
-    return spread_kernel(df, key_col).groupBy(key_col).applyInPandas(_k, schema)
+    return map_groups(df, key_col, _k, schema)

@@ -1,49 +1,52 @@
-"""Scale-adaptive parallelism helpers for CPU-bound kernel stages.
+"""Parallelism helpers for CPU-bound kernel stages.
 
-AQE's partition coalescing is BYTE-based: a shuffle whose output is a few
-MB collapses to one post-shuffle partition, which is exactly right for
-byte-bound JVM stages and exactly wrong for the CPU-bound Python kernel
-stages this package runs downstream of those shuffles (grouped-map model
-fits, sequential-posterior filters, FFT/entropy kernels, broadcast-scoring
-crossJoins). On a tiny input every per-series estimator then runs
-SERIALLY in one Python worker — measured 7× slowdowns at bench scale, and
-on a cluster the same mismatch appears whenever an aggregated (small)
-frame feeds an expensive kernel.
+A Python task has a fixed cost a JVM task does not: on a 4-vCPU
+container at ``local[4]``, 40 trivial Python tasks (ten waves) took
+2.26 s against 0.23 s for 40 JVM tasks, ~0.2 s per wave even on reused
+workers (``python -m tools.python_task_cost`` measures it on any box).
+So :func:`map_groups`, the grouped-map primitive every per-series Python
+kernel runs on, uses ONE wave of ``defaultParallelism`` tasks and ONE
+``mapInPandas`` call per task, where ``groupBy().applyInPandas`` frames
+and invokes every group separately. Its exchange is an explicit
+``repartition(n, keys…, lit(0))``: AQE's byte-based coalescing never
+shrinks an explicit count (it would squeeze a small input into ONE task
+running every estimator serially, measured 7× slower), and the constant
+keeps the planner from pruning the exchange against an upstream one
+already hash-partitioned by the key at the same (coalescible) count.
 
-``spread_kernel`` is the shared fix (hoisted from ``models.fit._spread``,
-r9): an EXPLICIT repartition, which AQE preserves (it only coalesces
-ENSURE_REQUIREMENTS exchanges), sized from the runtime's core count, not
-from a constant — local[8] gets 17, local[32] gets 65, a 400-core cluster
-gets 801. The odd ``2·parallelism + 1`` count deliberately differs from
-any usual shuffle-partition setting so the optimizer cannot prune the
-repartition as redundant against an upstream exchange (which WOULD be
-AQE-coalesced; see ``models/fit.py:_spread`` for the measured case), and
-the 2× over-decomposition load-balances CPU-skewed groups.
-
-``spread_rows`` is the keyless variant for row-parallel (not grouped)
-kernel stages fed by a single-file scan or a coalesced exchange:
-round-robin, same count. Use it before broadcast-scoring joins and
-mapInPandas stages whose per-row cost, not byte volume, is the bill.
-
-Neither changes values: grouped-map kernels receive each group WHOLE
-either way and sort internally, and row-parallel stages are row-local.
+``spread_kernel`` keeps the ``2·cores + 1`` key repartition for the JVM
+pair-fold stages in ``operators/rolling.py``, which pay no Python task
+cost; ``spread_rows`` is its round-robin variant for row-parallel stages
+fed by a single-file scan or a coalesced exchange. None of them changes
+values.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator, Sequence
+
+import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+#: Arrow → pandas widens a nullable column when THIS frame holds a NULL
+#: (integers to float64, booleans to object). applyInPandas converts per
+#: group, map_groups per batch, so NULL-free groups get these back
+_NULL_FREE_DTYPES = {
+    T.ByteType: "int8", T.ShortType: "int16", T.IntegerType: "int32",
+    T.LongType: "int64", T.BooleanType: "bool",
+}
 
 
 def kernel_parallelism(df: DataFrame) -> int:
-    """Partition count for CPU-bound kernel stages: 2·cores + 1."""
+    """Partition count of ``spread_kernel``/``spread_rows``: 2·cores + 1."""
     return 2 * df.sparkSession.sparkContext.defaultParallelism + 1
 
 
 def spread_kernel(df: DataFrame, *key_cols: str) -> DataFrame:
     """Repartition by the grouping key(s) with an explicit, cores-scaled
-    partition count so a downstream grouped-map kernel runs parallel."""
-    from pyspark.sql import functions as F
-
+    partition count so a downstream JVM pair-fold stage runs parallel."""
     return df.repartition(
         kernel_parallelism(df), *[F.col(c) for c in key_cols]
     )
@@ -53,3 +56,62 @@ def spread_rows(df: DataFrame) -> DataFrame:
     """Round-robin repartition with an explicit, cores-scaled count for
     row-parallel kernel stages (broadcast scoring, mapInPandas decode)."""
     return df.repartition(kernel_parallelism(df))
+
+
+def map_groups(
+    df: DataFrame,
+    keys: str | Sequence[str],
+    fn: Callable[[pd.DataFrame], pd.DataFrame],
+    schema: T.StructType | str,
+    order_by: Sequence[str] = (),
+) -> DataFrame:
+    """``df.groupBy(keys).applyInPandas(fn, schema)`` in one wave, same
+    contract: each ``fn`` call gets one whole group with every input
+    column, a fresh ``RangeIndex`` and per-group dtypes; NULL keys form
+    one group; output columns match by name. Rows of a group arrive
+    sorted by ``order_by``.
+
+    Plan: one ``REPARTITION_BY_NUM`` exchange into ``defaultParallelism``
+    partitions, a partition-local sort on ``keys + order_by``, and one
+    ``mapInPandas`` call per partition that cuts each Arrow batch into
+    its groups, carrying a group still open at a batch's end into the
+    next batch."""
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    restore = {
+        f.name: _NULL_FREE_DTYPES[type(f.dataType)]
+        for f in df.schema.fields
+        if f.nullable and type(f.dataType) in _NULL_FREE_DTYPES
+    }
+    clustered = df.repartition(
+        df.sparkSession.sparkContext.defaultParallelism,
+        *[F.col(k) for k in keys], F.lit(0),
+    ).sortWithinPartitions(*[F.col(c) for c in (*keys, *order_by)])
+
+    def call(parts: list[pd.DataFrame]) -> pd.DataFrame:
+        pdf = pd.concat(parts, ignore_index=True)
+        for col, dtype in restore.items():
+            if pdf[col].dtype != dtype and pdf[col].notna().all():
+                pdf[col] = pdf[col].astype(dtype)
+        return fn(pdf)
+
+    def same_key(a: pd.DataFrame, b: pd.DataFrame) -> bool:
+        return all(
+            x == y or (pd.isna(x) and pd.isna(y))
+            for x, y in ((a[k].iat[0], b[k].iat[0]) for k in keys)
+        )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        held: list[pd.DataFrame] = []  # parts of the group still open
+        for pdf in batches:
+            done = []
+            for _, g in pdf.groupby(keys, sort=False, dropna=False):
+                if held and not same_key(held[0], g):
+                    done.append(call(held))
+                    held = []
+                held.append(g)
+            if outs := [o for o in done if len(o)]:
+                yield pd.concat(outs, ignore_index=True)
+        if held and len(out := call(held)):
+            yield out
+
+    return clustered.mapInPandas(run, schema)

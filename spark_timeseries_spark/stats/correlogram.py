@@ -92,8 +92,10 @@ def pacf(
             }
         )
 
-    from ..models.fit import _spread
+    from ..models.fit import _narrow
+    from ..parallel import map_groups
 
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(
-        _p, schema="key string, lag long, pacf double, conf_bound double"
+    return map_groups(
+        _narrow(df, key_col, order_col, value_col), key_col, _p,
+        "key string, lag long, pacf double, conf_bound double",
     )

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from .index import DateTimeIndex, LazyIrregularDateTimeIndex
 from .operators import align, fill as fill_ops, filters, lag as lag_ops, layout, resample as resample_ops, rolling
+from .parallel import map_groups
 
 
 class TimeSeriesDataFrame:
@@ -529,25 +530,13 @@ class TimeSeriesDataFrame:
             pdf[value] = out.to_numpy()
             return pdf
 
-        from .parallel import spread_kernel
-
-        out = (
-            spread_kernel(self.df, self.KEY)
-            .groupBy(self.KEY)
-            .applyInPandas(_apply, schema=self.df.schema)
-        )
+        out = map_groups(self.df, self.KEY, _apply, self.df.schema)
         return TimeSeriesDataFrame(out, self.index)
 
     def aggr_series(self, fn: Callable[[pd.DataFrame], pd.DataFrame], schema):
         """Per-series arbitrary aggregation → caller-defined schema
         (``mapValues``, ``TimeSeries.scala:361-363``)."""
-        from .parallel import spread_kernel
-
-        return (
-            spread_kernel(self.df, self.KEY)
-            .groupBy(self.KEY)
-            .applyInPandas(fn, schema=schema)
-        )
+        return map_groups(self.df, self.KEY, fn, schema)
 
     # -- basic sugar -------------------------------------------------------
     def sum(self) -> DataFrame:

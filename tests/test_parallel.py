@@ -1,0 +1,142 @@
+"""``parallel.map_groups`` keeps the ``groupBy().applyInPandas()``
+contract: checked against Spark's own grouped map on the same function,
+with three-row Arrow batches so that groups straddle batch boundaries."""
+
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+from spark_timeseries_spark.parallel import map_groups
+
+OUT = (
+    "n long, k2 long, k1 string, index_ok boolean, loc_min long, "
+    "v_sum double, dtypes string"
+)
+
+
+def _describer():
+    """A grouped-map function built per test: Spark pickles a nested
+    function by value, a test module's top-level one by a module name
+    the Python workers cannot import."""
+
+    def describe(pdf: pd.DataFrame) -> pd.DataFrame:
+        """One row per group; reads ``pdf.loc[0]`` (a fresh index),
+        reports the dtypes the group arrived with, and returns its
+        columns in an order different from the schema (matched by
+        name). The group ``("none", 1)`` returns zero rows."""
+        row0 = pdf.loc[0]
+        out = pd.DataFrame({
+            "v_sum": [float(pdf["v"].sum())],
+            "dtypes": [",".join(map(str, pdf.dtypes))],
+            "loc_min": [int(pdf["loc"].min())],
+            "index_ok": [pdf.index.equals(pd.RangeIndex(len(pdf)))],
+            "k1": [row0["k1"]],
+            "k2": [row0["k2"]],
+            "n": [len(pdf)],
+        })
+        return out.iloc[:0] if (row0["k1"], row0["k2"]) == ("none", 1) else out
+
+    return describe
+
+
+@pytest.fixture(scope="module")
+def rows(spark):
+    data = []
+    # (k1, k2, count): one key spans more than two 3-row batches, a NULL
+    # key in each column, single-row groups, and a group that returns
+    # nothing
+    groups = [
+        ("a", 1, 8), ("a", 2, 2), ("b", 1, 1), (None, 1, 4),
+        ("b", None, 3), (None, None, 2), ("none", 1, 3), ("c", 7, 5),
+    ]
+    for gi, (k1, k2, cnt) in enumerate(groups):
+        for i in range(cnt):
+            data.append((
+                k1, k2, gi * 100 + i, float(i),
+                # nullable long / boolean: NULL only inside some groups,
+                # so a per-batch conversion would widen other groups
+                None if (gi == 0 and i == 3) else i,
+                None if (gi == 7 and i == 0) else i % 2 == 0,
+            ))
+    return spark.createDataFrame(
+        data,
+        "k1 string, k2 long, loc long, v double, cnt long, flag boolean",
+    )
+
+
+@pytest.fixture()
+def small_batches(spark):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    yield
+    spark.conf.set(key, old)
+
+
+def _sorted(df):
+    return sorted(
+        (tuple(r) for r in df.collect()),
+        key=lambda t: tuple((x is None, x) for x in t),
+    )
+
+
+@pytest.mark.parametrize("keys", [["k1"], ["k1", "k2"]])
+def test_map_groups_matches_apply_in_pandas(spark, rows, small_batches, keys):
+    want = _sorted(rows.groupBy(*keys).applyInPandas(_describer(), OUT))
+    got = _sorted(map_groups(rows, keys, _describer(), OUT))
+    assert got == want
+    assert all(r[3] for r in got)  # fresh RangeIndex in every call
+    # the NULL key(s) form one group each, never dropped
+    assert any(r[2] is None for r in got)
+    if keys == ["k1", "k2"]:
+        assert len(got) == 7  # 8 groups, one returns zero rows
+    # ordered within the group when asked
+    ordered = map_groups(
+        rows, keys,
+        lambda p: pd.DataFrame({"ok": [bool(p["loc"].is_monotonic_increasing)]}),
+        "ok boolean", order_by=("loc",),
+    )
+    assert all(r.ok for r in ordered.collect())
+
+
+def test_map_groups_empty_input(spark, rows, small_batches):
+    empty = rows.where(F.lit(False))
+    assert map_groups(empty, "k1", _describer(), OUT).collect() == []
+    assert empty.groupBy("k1").applyInPandas(_describer(), OUT).collect() == []
+
+
+def test_null_key_is_one_group_everywhere(spark):
+    """Every per-series kernel keeps the NULL-key series as one group:
+    kleinberg_bursts used to drop it (pandas ``groupby`` defaults to
+    ``dropna=True``) while fit_models kept it."""
+    from spark_timeseries_spark import DayFrequency, TimeSeriesDataFrame, uniform
+    from spark_timeseries_spark.models import fit_models
+    from spark_timeseries_spark.operators.bursts import kleinberg_bursts
+
+    start = pd.Timestamp("2024-01-01")
+    rows = [
+        (k, i, (start + pd.Timedelta(days=i * (1 + i % 3))).to_pydatetime(),
+         float((i * 7) % 5) + (0.0 if k else 10.0))
+        for k in ("a", None)
+        for i in range(12)
+    ]
+    df = spark.createDataFrame(
+        rows, "key string, loc long, ts timestamp, value double"
+    )
+
+    bursts = kleinberg_bursts(df.select("key", "ts"))
+    assert {r.key for r in bursts.select("key").distinct().collect()} == {
+        None, "a",
+    }
+    assert bursts.where(F.col("key").isNull()).count() == 11  # 12 events
+
+    fits = fit_models(df, "ar", max_lag=1).collect()
+    assert {r.key for r in fits} == {None, "a"} and len(fits) == 2
+    assert all(len(r.params) == 2 for r in fits)
+
+    t = TimeSeriesDataFrame(df, uniform("2024-01-01", 12, DayFrequency(1)))
+    out = t.map_series(lambda s: s - s.iloc[0]).df
+    firsts = out.where(F.col("loc") == 0).collect()
+    assert {r.key for r in firsts} == {None, "a"}
+    assert all(r.value == 0.0 for r in firsts)
+    assert out.count() == 24

@@ -111,6 +111,61 @@ def test_no_suffix_window_frames_in_source():
     )
 
 
+def _key_grouped_apply_in_pandas(source: str) -> list[str]:
+    """Every ``.applyInPandas(`` call in ``source`` whose groupBy is not
+    the single constant group (``F.lit(1)``, or a ``_g`` column set to
+    ``F.lit(1)`` right before it). Those sites are one task by
+    construction; every key-grouped kernel goes through map_groups."""
+    import ast
+
+    hits = []
+    for node in ast.walk(ast.parse(source)):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "applyInPandas"
+        ):
+            continue
+        g = node.func.value
+        single = False
+        if (
+            isinstance(g, ast.Call)
+            and isinstance(g.func, ast.Attribute)
+            and g.func.attr == "groupBy"
+            and len(g.args) == 1
+        ):
+            arg, recv = ast.unparse(g.args[0]), ast.unparse(g.func.value)
+            single = arg.startswith("F.lit(1)") or (
+                arg == "'_g'" and recv.endswith(".withColumn('_g', F.lit(1))")
+            )
+        if not single:
+            hits.append(f"line {node.lineno}: {ast.unparse(node)[:80]}")
+    return hits
+
+
+def test_no_key_grouped_apply_in_pandas_in_source():
+    import pathlib
+
+    root = pathlib.Path(sts.__file__).parent
+    hits = [
+        f"{path.relative_to(root)} {hit}"
+        for path in sorted(root.rglob("*.py"))
+        for hit in _key_grouped_apply_in_pandas(path.read_text())
+    ]
+    assert not hits, hits
+    # the scan does catch the forms it forbids, and passes the allowed
+    assert _key_grouped_apply_in_pandas(
+        "spread_kernel(df, k).groupBy(k).applyInPandas(f, s)"
+    )
+    assert _key_grouped_apply_in_pandas(
+        "df.withColumn('_g', F.col('key')).groupBy('_g').applyInPandas(f, s)"
+    )
+    assert not _key_grouped_apply_in_pandas(
+        "df.withColumn('_g', F.lit(1)).groupBy('_g').applyInPandas(f, s)\n"
+        "df.groupBy(F.lit(1).alias('_g')).applyInPandas(f, s)"
+    )
+
+
 def test_fill_and_rank_tests_plan_no_suffix_frames(spark, grid):
     from spark_timeseries_spark.operators.hypothesis import (
         fdr_bh,
@@ -321,15 +376,25 @@ def test_instant_filters_trigger_no_job_on_construction(spark, grid, monkeypatch
 
 
 def test_model_fit_single_exchange(spark, grid):
-    """Grouped-map model stages must add exactly ONE exchange (the explicit
-    _spread repartition that defeats AQE's serialize-the-Python-stage
-    coalescing) — no hidden ENSURE_REQUIREMENTS shuffle on top."""
+    """Grouped-map model stages add exactly ONE exchange: map_groups'
+    REPARTITION_BY_NUM into defaultParallelism partitions (one wave, which
+    AQE never coalesces) feeding MapInPandas — one Python call per
+    partition, no per-series FlatMapGroupsInPandas framing. The input is a
+    window chain, already hash-partitioned by key at shuffle.partitions ==
+    cores: a plain repartition(n, key) would be pruned there, leaving the
+    kernel on the window's coalescible ENSURE_REQUIREMENTS exchange."""
     from spark_timeseries_spark.models import fit_models
 
-    out = fit_models(grid.where(F.col("value").isNotNull()), "ar", max_lag=1)
-    shuffles, _, p = _counts(out)
-    assert shuffles == 1, p
-    assert "ArrowEvalPython" in p or "FlatMapGroupsInPandas" in p, p
+    n = spark.sparkContext.defaultParallelism
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
+    src = rolling.roll_mean(grid.where(F.col("value").isNotNull()), 3)
+    p = _plan(fit_models(src, "ar", max_lag=1))
+    exchanges = re.findall(r"Exchange hashpartitioning\(([^()]*)\), (\w+)", p)
+    assert [origin for _, origin in exchanges] == [
+        "REPARTITION_BY_NUM", "ENSURE_REQUIREMENTS",
+    ], p
+    assert exchanges[0][0].endswith(f", {n}"), p
+    assert "MapInPandas" in p and "FlatMapGroupsInPandas" not in p, p
 
 
 def test_sessionize_single_exchange(spark, grid):
@@ -755,7 +820,7 @@ def test_ema_chain_auto_plans_without_union_blowup(spark, grid):
     split, not one per pass — before, each chained _ema_col planned a
     closed+kernel Union over its whole input, doubling the subplan per
     pass (adx's 4 chained EMAs planned a 16×-duplicated tree with 60
-    FlatMapGroupsInPandas nodes and ~5 s of driver analysis time).
+    grouped-map kernel nodes and ~5 s of driver analysis time).
     Pin: one Union, and exactly as many kernel nodes as EMA passes."""
     from spark_timeseries_spark.operators.indicators import adx, macd
 
@@ -767,10 +832,10 @@ def test_ema_chain_auto_plans_without_union_blowup(spark, grid):
     )
     p = _plan(adx(bars, 14, method="auto"))
     assert p.count("Union") <= 1, p
-    assert p.count("FlatMapGroupsInPandas") <= 4, p
+    assert p.count("MapInPandas") <= 4, p
     p = _plan(macd(grid, method="auto"))
     assert p.count("Union") <= 1, p
-    assert p.count("FlatMapGroupsInPandas") <= 3, p
+    assert p.count("MapInPandas") <= 3, p
 
 
 def test_threshold_runs_single_exchange_no_python(spark, grid):
@@ -859,16 +924,16 @@ def test_pettitt_no_join(spark, grid):
 
 def test_mann_kendall_kernel_no_pair_join(spark, grid):
     """Forced-kernel Mann-Kendall must plan the S stage as a grouped-map
-    (FlatMapGroupsInPandas) with no pairwise self-join on the S path;
+    (MapInPandas via map_groups) with no pairwise self-join on the S path;
     var/ties stay JVM aggregates."""
     from spark_timeseries_spark.operators.cusum import mann_kendall
 
     out = mann_kendall(grid, s_method="kernel")
     p = _plan(out)
-    assert "FlatMapGroupsInPandas" in p, p
+    assert "MapInPandas" in p, p
     # the only joins permitted are the K-row assembly joins of n/s/tie
     # frames — no join may sit BELOW the grouped-map (pair explosion)
-    below = p.split("FlatMapGroupsInPandas")[-1]
+    below = p.split("MapInPandas")[-1]
     assert "Join" not in below, below
 
 
@@ -924,8 +989,8 @@ def test_sample_entropy_kernel_no_pair_join(spark, grid):
     from spark_timeseries_spark.operators.features import sample_entropy
 
     p = _plan(sample_entropy(grid, method="kernel"))
-    assert "FlatMapGroupsInPandas" in p, p
-    below = p.split("FlatMapGroupsInPandas")[-1]
+    assert "MapInPandas" in p, p
+    below = p.split("MapInPandas")[-1]
     assert "Join" not in below, below
 
 
