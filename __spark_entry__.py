@@ -998,33 +998,11 @@ def _q_minhash_lsh_dedup_oph(spark, sf_dir):
 
 def bench_only_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Extra entries bench.py times but the correctness harness skips
-    (non-oracle-replayable variants of already-proven pipelines).
-
-    ``corr_matrix_compact`` is OCCASIONAL-cadence (r10 verdict item 6:
-    it was 11% of bench wall-clock measuring an already-adjudicated
-    CPU-vs-shuffle reversal, documented with measured numbers at
-    ``operators/rolling.py``): set ``SPARK_GRAFT_BENCH_EXTRA=1`` to
-    re-measure it — PERFORMANCE.md records the cadence."""
-    import os as _os
-
-    qs = {
+    (non-oracle-replayable variants of already-proven pipelines)."""
+    return {
         "minhash_lsh_dedup_xx": _q_minhash_lsh_dedup_xx,
         "minhash_lsh_dedup_oph": _q_minhash_lsh_dedup_oph,
     }
-    if _os.environ.get("SPARK_GRAFT_BENCH_EXTRA"):
-        qs["corr_matrix_compact"] = _q_corr_matrix_compact
-    return qs
-
-
-def _q_corr_matrix_compact(spark, sf_dir):
-    from spark_timeseries_spark.operators import rolling as roll_ops
-
-    grid = _daily_grid(spark, sf_dir)
-    out = roll_ops.corr_matrix(grid, min_overlap=5, method="compact")
-    return out.select(
-        "key_a", "key_b", "n_overlap",
-        _stable_round(F.col("corr"), 6).alias("corr"),
-    )
 
 
 def _q_simhash_near_dups(spark, sf_dir):
@@ -2627,16 +2605,14 @@ def _q_half_life(spark, sf_dir):
 
 def _q_corr_matrix(spark, sf_dir):
     """Corpus-wide pairwise Pearson correlation (strict upper triangle,
-    pairwise-complete) over the daily grid, via the default JOIN kernel
-    (location equi-join + per-pair native moment aggregate — measured
-    ~1.7× faster than the compact array fold on this CPU-bound box;
-    the compact low-shuffle variant is benched alongside as
-    ``corr_matrix_compact``). O(K²) output is the result's size, not a
-    plan defect. The oracle replays covar_samp/(sa·sb) with NULLIF."""
+    pairwise-complete) over the daily grid: location equi-join +
+    per-pair native moment aggregate. O(K²) output is the result's
+    size, not a plan defect. The oracle replays covar_samp/(sa·sb) with
+    NULLIF."""
     from spark_timeseries_spark.operators import rolling as roll_ops
 
     grid = _daily_grid(spark, sf_dir)
-    out = roll_ops.corr_matrix(grid, min_overlap=5, method="join")
+    out = roll_ops.corr_matrix(grid, min_overlap=5)
     return out.select(
         "key_a", "key_b", "n_overlap",
         _stable_round(F.col("corr"), 6).alias("corr"),

@@ -26,6 +26,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..parallel import map_groups, route_by_length
+
+#: series length (season length for :func:`seasonal_mann_kendall`) up to
+#: which theil_sen and the Mann-Kendall S run the SQL-exact pairwise
+#: self-join; longer ones take the in-core ``map_groups`` kernel
+_KERNEL_THRESHOLD = 1000
+
 __all__ = ["cusum", "cusum_changepoints", "theil_sen", "mann_kendall",
            "seasonal_mann_kendall", "page_hinkley"]
 
@@ -128,7 +135,6 @@ def theil_sen(
     loc_col: str = "loc",
     value_col: str = "value",
     method: str = "auto",
-    kernel_threshold: int = 1000,
 ) -> DataFrame:
     """Theil–Sen robust trend per series → (key, slope, intercept,
     n_pairs): slope = median of all pairwise slopes (29% breakdown
@@ -139,7 +145,9 @@ def theil_sen(
 
     Exact Theil–Sen is O(n²) pairs anywhere; what matters at scale is
     WHERE the quadratic lives. ``method``: "auto" (default) routes each
-    series by length — for n ≤ ``kernel_threshold`` the pairwise
+    series by length through
+    :func:`~spark_timeseries_spark.parallel.route_by_length` — for
+    n ≤ ``_KERNEL_THRESHOLD`` the pairwise
     self-join (the SQL-oracle-replayable form; O(n²) SHUFFLED rows per
     series, fine inside the reference's one-series-in-memory envelope,
     ``src/site/markdown/index.md:35-40``); above it a grouped-map numpy
@@ -154,8 +162,6 @@ def theil_sen(
     persist the input grid before calling — the lazy builder cannot own
     a cache lifetime (the ``pretrain_clean`` caller-owns-the-cache
     rule)."""
-    if method not in ("auto", "join", "kernel"):
-        raise ValueError(f"method must be auto|join|kernel, got {method}")
     pts = df.where(F.col(value_col).isNotNull()).select(
         key_col,
         F.col(loc_col).alias("_l"),
@@ -236,27 +242,15 @@ def theil_sen(
                  "intercept": [inter], "n_pairs": [int(sl.size)]}
             )
 
-        from ..parallel import map_groups
-
         return map_groups(
             src, key_col, kern,
             f"`{key_col}` {kt}, slope double, intercept double, n_pairs long",
         )
 
-    if method == "join":
-        out = _join_plan(pts)
-    elif method == "kernel":
-        out = _kernel_plan(pts)
-    else:
-        wn = Window.partitionBy(key_col)
-        ptsn = pts.withColumn("_gn", F.count(F.lit(1)).over(wn))
-        out = _join_plan(
-            ptsn.where(F.col("_gn") <= kernel_threshold).drop("_gn")
-        ).unionByName(
-            _kernel_plan(
-                ptsn.where(F.col("_gn") > kernel_threshold).drop("_gn")
-            ).where(F.col("slope").isNotNull())
-        )
+    out = route_by_length(
+        pts, [key_col], _KERNEL_THRESHOLD, _join_plan, _kernel_plan,
+        method, sides=("join", "kernel"),
+    )
     # anchor on every input series so <2-point series report NULLs
     return (
         df.select(key_col)
@@ -269,9 +263,6 @@ def theil_sen(
             F.coalesce("n_pairs", F.lit(0)).alias("n_pairs"),
         )
     )
-
-
-_MK_KERNEL_THRESHOLD = 1000
 
 
 def _inversion_counts(v):
@@ -304,14 +295,14 @@ def _inversion_counts(v):
 
 
 def _mk_s_groups(
-    pts: DataFrame, key_col: str, group_cols: list[str],
-    method: str, threshold: int,
+    pts: DataFrame, group_cols: list[str], method: str
 ) -> DataFrame:
     """S = Σ sign(v_j − v_i) over time-ordered (i < j) pairs WITHIN each
     ``group_cols`` group → one row per group with column ``s``.
 
     Dual physical plan, selected PER GROUP by length inside one lazy
-    plan (the ``periodogram`` precedent — ``operators/spectral.py``):
+    plan by :func:`~spark_timeseries_spark.parallel.route_by_length` at
+    ``_KERNEL_THRESHOLD`` (the ``periodogram`` precedent):
 
     - **join** (short groups, and the SQL-oracle-replayable form): the
       pairwise self-join — O(n²) shuffled rows per group, fine inside
@@ -321,10 +312,6 @@ def _mk_s_groups(
       in-core with ZERO pair shuffle (at n = 440k the join form would
       shuffle ~10¹¹ pair rows per series; the kernel moves n rows).
     """
-    if method not in ("auto", "join", "kernel"):
-        raise ValueError(f"s_method must be auto|join|kernel, got {method}")
-    wn = Window.partitionBy(*group_cols)
-    ptsn = pts.withColumn("_gn", F.count(F.lit(1)).over(wn))
 
     def _join_plan(src):
         a, b = src.alias("a"), src.alias("b")
@@ -358,17 +345,12 @@ def _mk_s_groups(
                 out["s"] = [c - d]
             return pd.DataFrame(out)
 
-        from ..parallel import map_groups
-
         return map_groups(src, group_cols, kern, f"{fields}, s long")
 
-    if method == "join":
-        return _join_plan(ptsn)
-    if method == "kernel":
-        return _kernel_plan(ptsn)
-    short = _join_plan(ptsn.where(F.col("_gn") <= threshold))
-    long_ = _kernel_plan(ptsn.where(F.col("_gn") > threshold))
-    return short.unionByName(long_)
+    return route_by_length(
+        pts, group_cols, _KERNEL_THRESHOLD, _join_plan, _kernel_plan,
+        method, sides=("join", "kernel"),
+    )
 
 
 def mann_kendall(
@@ -377,7 +359,6 @@ def mann_kendall(
     loc_col: str = "loc",
     value_col: str = "value",
     s_method: str = "auto",
-    kernel_threshold: int = _MK_KERNEL_THRESHOLD,
 ) -> DataFrame:
     """Mann-Kendall nonparametric trend test per series → (key, n, s,
     var_s, z, p_value): S = Σ_{i<j} sign(v_j − v_i) over time-ordered
@@ -386,7 +367,7 @@ def mann_kendall(
     continuity-corrected normal z ((S∓1)/√Var; 0 when S=0). The
     distribution-free companion of :func:`theil_sen`. ``s_method``:
     "auto" (default) routes each series by length — pairwise self-join
-    for n ≤ ``kernel_threshold`` (the SQL-oracle-replayable form),
+    for n ≤ ``_KERNEL_THRESHOLD`` (the SQL-oracle-replayable form),
     grouped-map merge-count kernel above it (O(n log² n) in-core, zero
     pair shuffle — see :func:`_mk_s_groups`); "join"/"kernel" force one
     strategy. Two-sided p-value from the closed-form normal tail; n < 3
@@ -400,7 +381,7 @@ def mann_kendall(
         F.col(loc_col).alias("_l"),
         F.col(value_col).alias("_v"),
     )
-    s_agg = _mk_s_groups(pts, key_col, [key_col], s_method, kernel_threshold)
+    s_agg = _mk_s_groups(pts, [key_col], s_method)
     n_agg = pts.groupBy(key_col).agg(F.count(F.lit(1)).alias("n"))
     ties = (
         pts.groupBy(key_col, "_v")
@@ -454,7 +435,6 @@ def seasonal_mann_kendall(
     loc_col: str = "loc",
     value_col: str = "value",
     s_method: str = "auto",
-    kernel_threshold: int = _MK_KERNEL_THRESHOLD,
 ) -> DataFrame:
     """Seasonal Mann-Kendall trend test (Hirsch, Slack & Smith 1982) →
     (key, n, s, var_s, z, p_value): the :func:`mann_kendall` statistic
@@ -465,10 +445,10 @@ def seasonal_mann_kendall(
     form — the serial-correlation covariance correction is out of
     scope and documented as such), continuity-corrected z, closed-form
     two-sided normal p. Per-season S routes through the same dual plan
-    as :func:`mann_kendall` (``s_method``/``kernel_threshold``, length
+    as :func:`mann_kendall` (``s_method``/``_KERNEL_THRESHOLD``, length
     measured PER (series, season) group — the pairwise form is quadratic
     in series length divided by the period; the merge-count kernel
-    takes over above the threshold with zero pair shuffle)."""
+    takes over above the bound with zero pair shuffle)."""
     from ..models._numeric import norm_cdf
 
     if period < 2:
@@ -480,7 +460,7 @@ def seasonal_mann_kendall(
         F.col(value_col).alias("_v"),
     )
     s_agg = (
-        _mk_s_groups(pts, key_col, [key_col, "_g"], s_method, kernel_threshold)
+        _mk_s_groups(pts, [key_col, "_g"], s_method)
         .groupBy(key_col)
         .agg(F.sum("s").alias("s"))
     )

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..parallel import map_groups, route_by_length
+
 __all__ = [
     "ts_features",
     "detect_seasonality",
@@ -63,6 +65,10 @@ __all__ = [
     "acf_features",
     "seasonal_zscore",
 ]
+
+#: series length up to which :func:`sample_entropy` runs the SQL-exact
+#: template self-join; longer series take the in-core kernel
+_SAMPEN_KERNEL_THRESHOLD = 512
 
 
 def ts_features(
@@ -211,7 +217,6 @@ def detect_seasonality(
 def spectral_entropy(
     df: DataFrame,
     method: str = "auto",
-    fft_threshold: int | None = None,
     key_col: str = "key",
     order_col: str = "loc",
     value_col: str = "value",
@@ -225,12 +230,9 @@ def spectral_entropy(
     Σ p̂ ln p̂ = (ln S − Σ p ln p / S) with S = Σ p, so no second pass.
     Degenerate series (zero total power, i.e. constant; or a single
     frequency bin) yield NULL."""
-    from .spectral import _FFT_THRESHOLD, periodogram
+    from .spectral import periodogram
 
-    per = periodogram(
-        df, key_col, order_col, value_col, method,
-        fft_threshold if fft_threshold is not None else _FFT_THRESHOLD,
-    )
+    per = periodogram(df, key_col, order_col, value_col, method)
     p = F.col("power")
     agg = per.groupBy(key_col).agg(
         F.sum(p).alias("_S"),
@@ -635,7 +637,6 @@ def sample_entropy(
     order_col: str = "loc",
     value_col: str = "value",
     method: str = "auto",
-    kernel_threshold: int = 512,
 ) -> DataFrame:
     """Sample entropy (Richman & Moorman 2000) per series → (key, n, b,
     a, sampen): B = #template pairs (i < j) of length ``m`` within
@@ -649,15 +650,16 @@ def sample_entropy(
     A = 0 or B = 0 → NULL sampen (undefined, the standard outcome on
     short/irregular series).
 
-    Dual plan (the periodogram/MK precedent): template self-join below
-    ``kernel_threshold`` points (SQL-oracle-replayable; O(n²) shuffled
-    pair rows per series), grouped-map numpy kernel above it (blocked
-    O(n²) Chebyshev comparisons IN-CORE — the quadratic stays as BLAS-
-    style flops, zero pair shuffle)."""
+    Dual plan (the periodogram/MK precedent), routed per series by
+    :func:`~spark_timeseries_spark.parallel.route_by_length` on the
+    series' own count window: template self-join for n ≤
+    ``_SAMPEN_KERNEL_THRESHOLD`` points (SQL-oracle-replayable; O(n²)
+    shuffled pair rows per series), grouped-map numpy kernel above it
+    (blocked O(n²) Chebyshev comparisons IN-CORE — the quadratic stays
+    as BLAS-style flops, zero pair shuffle); "join"/"kernel" force
+    one."""
     if m < 1:
         raise ValueError(f"m must be >= 1, got {m}")
-    if method not in ("auto", "join", "kernel"):
-        raise ValueError(f"method must be auto|join|kernel, got {method}")
     v = F.col(value_col)
     pts = df.where(v.isNotNull()).select(
         key_col, F.col(order_col).alias("_l"), v.alias("_v")
@@ -748,20 +750,14 @@ def sample_entropy(
                  "b": [bcnt], "a": [acnt]}
             )
 
-        from ..parallel import map_groups
-
         return map_groups(
             src, key_col, kern, f"`{key_col}` {kt}, n long, b long, a long"
         )
 
-    if method == "join":
-        counts = _join_plan(base)
-    elif method == "kernel":
-        counts = _kernel_plan(base)
-    else:
-        counts = _join_plan(
-            base.where(F.col("_n") <= kernel_threshold)
-        ).unionByName(_kernel_plan(base.where(F.col("_n") > kernel_threshold)))
+    counts = route_by_length(
+        base, [key_col], _SAMPEN_KERNEL_THRESHOLD, _join_plan, _kernel_plan,
+        method, sides=("join", "kernel"), n_col="_n",
+    )
     # anchor on every series with ≥1 valid point (the theil_sen anchor
     # pattern): the join plan emits NO row when a series has <2 valid
     # m-templates while the kernel emits (n, 0, 0, NULL) — without the

@@ -14,11 +14,13 @@ has the closed prefix form
 — one row_number + one prefix-sum window, all JVM. The ``/ q^i`` term
 grows geometrically, so the closed form is only finite for series
 shorter than ``≈ 250 / −log10(q)`` points (α = 0.3 → ~1900 points;
-α = 2/27 (EMA-26) → ~7400). Above that per-series length the ``auto``
-method routes the series to a grouped-map numpy kernel running the
-plain O(n) recursion in-core — the periodogram dual-plan precedent:
-SQL-oracle-replayable closed form for short series, zero-pair-shuffle
-kernel for long ones, selected lazily per series.
+α = 2/27 (EMA-26) → ~7400). Every EMA-based indicator is therefore a
+dual plan: ``method="auto"`` sends each series through
+:func:`~spark_timeseries_spark.parallel.route_by_length` at the bound
+``_ema_safe_len(α)`` (the tightest over a chain's alphas) — the
+SQL-oracle-replayable closed form at or below it, a ``map_groups``
+kernel running the plain O(n) recursion above it; "closed"/"kernel"
+force one side.
 
 NULL cells are skipped everywhere: the EMA/indicator advances over the
 observed subsequence (output rows = input non-null rows).
@@ -32,6 +34,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..parallel import map_groups, route_by_length
 
 __all__ = [
     "ema", "macd", "rsi", "bollinger", "adx",
@@ -93,83 +97,62 @@ def _ema_kernel(df, alpha, key_col, order_col, value_col, out_col):
         pdf[out_col] = e
         return pdf
 
-    from ..parallel import map_groups
-
     return map_groups(df, key_col, kern, f"{fields}, `{out_col}` double")
 
 
-def _ema_col(
-    df: DataFrame,
-    alpha: float,
-    key_col: str,
-    order_col: str,
-    value_col: str,
-    out_col: str,
-    method: str,
-    max_len: int | None = None,
-) -> DataFrame:
-    if not 0.0 < alpha <= 1.0:
-        raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    if method not in ("auto", "closed", "kernel"):
-        raise ValueError(f"method must be auto|closed|kernel, got {method}")
+def _ema_col(df, alpha, key_col, order_col, value_col, out_col, method):
+    """One EMA pass over the non-null rows with the side ``method``
+    ("closed" or "kernel") already chosen by :func:`_ema_chain`."""
     pts = df.where(F.col(value_col).isNotNull())
     if alpha >= 1.0:
-        # q = 0: the recursion degenerates to e_t = v_t exactly (any
-        # method). The closed form would compute v/pow(0, rk) — a
+        # q = 0: the recursion degenerates to e_t = v_t exactly (either
+        # side). The closed form would compute v/pow(0, rk) — a
         # DIVIDE_BY_ZERO under ANSI — so short-circuit it here.
         return pts.withColumn(out_col, F.col(value_col).cast("double"))
-    if method == "closed":
-        return _ema_closed(pts, alpha, key_col, order_col, value_col, out_col)
-    if method == "kernel":
-        return _ema_kernel(pts, alpha, key_col, order_col, value_col, out_col)
-    cap = _ema_safe_len(alpha)
-    if max_len is not None and max_len <= cap:
-        # caller vouches every series fits the closed form's envelope:
-        # skip the routing count window entirely (it costs a full extra
-        # window pass even when every series is short)
-        return _ema_closed(pts, alpha, key_col, order_col, value_col, out_col)
-    wn = Window.partitionBy(key_col)
-    ptsn = pts.withColumn("_gn", F.count(F.lit(1)).over(wn))
-    short = _ema_closed(
-        ptsn.where(F.col("_gn") <= cap).drop("_gn"),
-        alpha, key_col, order_col, value_col, out_col,
-    )
-    long_ = _ema_kernel(
-        ptsn.where(F.col("_gn") > cap).drop("_gn"),
-        alpha, key_col, order_col, value_col, out_col,
-    )
-    return short.unionByName(long_)
+    side = _ema_closed if method == "closed" else _ema_kernel
+    return side(pts, alpha, key_col, order_col, value_col, out_col)
 
 
 def _ema_chain(df, key_col, alphas, chain, method, max_len):
     """Route a CHAIN of EMA passes with ONE per-series length decision.
 
-    ``chain(d, m)`` must apply every pass with the forced method ``m``.
-    Before r15, ``method="auto"`` routed inside each ``_ema_col`` call:
-    every pass planned a closed+kernel Union over its whole input, so
-    chained passes DOUBLED the subplan each time — adx's four chained
-    EMAs planned a 16×-duplicated tree costing ~5 s of pure driver
-    analysis/optimizer time before a task ran (the r14 entry rows dodged
-    it only by caller vouches). Splitting ONCE on the chain's tightest
-    envelope (min closed-form cap over the chain's alphas, with count(*)
-    per key as a conservative series-length bound) keeps both branches
-    LINEAR: one Union total, 2 upstream copies instead of 2^n.
+    ``chain(d, m)`` applies every pass with the side ``m``. Splitting
+    once, on the chain's tightest envelope (the min closed-form cap over
+    its alphas, with count(*) per key as a conservative series-length
+    bound), keeps both branches linear: one Union in total. Routing
+    inside each pass instead doubled the subplan per chained pass
+    (adx's four EMAs planned a 16×-duplicated tree, ~5 s of driver
+    analysis before a task ran).
 
-    A series whose length lands between a per-pass cap and the chain cap
-    now takes the kernel for every pass instead of the closed form for
-    some; both implement the identical adjust=False recursion (floats
-    may differ in the last bits between the two exact forms — the same
-    closed-vs-kernel seam auto always had, moved a few lengths down)."""
-    if method != "auto":
-        return chain(df, method)
+    The split is :func:`~spark_timeseries_spark.parallel.route_by_length`
+    at that cap. A series whose length lands between a per-pass cap and
+    the chain cap takes the kernel for every pass; both sides implement
+    the identical adjust=False recursion (floats may differ in the last
+    bits between the two exact forms). ``max_len`` is the caller's
+    guarantee that no series exceeds it: within the cap, "auto" skips
+    the count window and runs the closed form outright."""
+    for a in alphas:
+        if not 0.0 < a <= 1.0:
+            raise ValueError(f"alpha must be in (0, 1], got {a}")
     cap = min(_ema_safe_len(a) for a in alphas)
-    if max_len is not None and max_len <= cap:
+    if method == "auto" and max_len is not None and max_len <= cap:
         return chain(df, "closed")
-    wn = Window.partitionBy(key_col)
-    d = df.withColumn("_gn", F.count(F.lit(1)).over(wn))
-    short = chain(d.where(F.col("_gn") <= cap).drop("_gn"), "closed")
-    long_ = chain(d.where(F.col("_gn") > cap).drop("_gn"), "kernel")
-    return short.unionByName(long_)
+    return route_by_length(
+        df, [key_col], cap,
+        lambda d: chain(d, "closed"), lambda d: chain(d, "kernel"),
+        method, sides=("closed", "kernel"),
+    )
+
+
+def _ema(df, alpha, key_col, order_col, value_col, out_col, method, max_len):
+    """A single routed EMA pass (a chain of one, counted over the
+    non-null rows it smooths)."""
+    return _ema_chain(
+        df.where(F.col(value_col).isNotNull()), key_col, (alpha,),
+        lambda d, m: _ema_col(d, alpha, key_col, order_col, value_col,
+                              out_col, m),
+        method, max_len,
+    )
 
 
 def ema(
@@ -189,7 +172,7 @@ def ema(
     caller guarantee that no series exceeds it — when it fits the
     closed form's envelope, auto skips the per-series routing count
     window (one whole window pass saved on short-series corpora)."""
-    return _ema_col(
+    return _ema(
         df, alpha, key_col, order_col, value_col, "ema", method, max_len
     )
 
@@ -216,10 +199,10 @@ def macd(
     a_sig = 2.0 / (signal + 1)
 
     def _chain(d, m):
-        d = _ema_col(d, a_fast, key_col, order_col, value_col, "_ef", m, max_len)
-        d = _ema_col(d, a_slow, key_col, order_col, value_col, "_es", m, max_len)
+        d = _ema_col(d, a_fast, key_col, order_col, value_col, "_ef", m)
+        d = _ema_col(d, a_slow, key_col, order_col, value_col, "_es", m)
         d = d.withColumn("macd", F.col("_ef") - F.col("_es")).drop("_ef", "_es")
-        d = _ema_col(d, a_sig, key_col, order_col, "macd", "signal", m, max_len)
+        d = _ema_col(d, a_sig, key_col, order_col, "macd", "signal", m)
         return d.withColumn("histogram", F.col("macd") - F.col("signal"))
 
     return _ema_chain(
@@ -260,8 +243,8 @@ def rsi(
     alpha = 1.0 / n
 
     def _chain(dd, m):
-        dd = _ema_col(dd, alpha, key_col, order_col, "gain", "avg_gain", m, max_len)
-        dd = _ema_col(dd, alpha, key_col, order_col, "loss", "avg_loss", m, max_len)
+        dd = _ema_col(dd, alpha, key_col, order_col, "gain", "avg_gain", m)
+        dd = _ema_col(dd, alpha, key_col, order_col, "loss", "avg_loss", m)
         return dd.withColumn(
             "rsi",
             100.0
@@ -375,9 +358,9 @@ def adx(
     minus_di = 100.0 * F.try_divide(F.col("_smdm"), F.col("_str"))
 
     def _chain(dd, m):
-        dd = _ema_col(dd, alpha, key_col, order_col, "_pdm", "_spdm", m, max_len)
-        dd = _ema_col(dd, alpha, key_col, order_col, "_mdm", "_smdm", m, max_len)
-        dd = _ema_col(dd, alpha, key_col, order_col, "tr", "_str", m, max_len)
+        dd = _ema_col(dd, alpha, key_col, order_col, "_pdm", "_spdm", m)
+        dd = _ema_col(dd, alpha, key_col, order_col, "_mdm", "_smdm", m)
+        dd = _ema_col(dd, alpha, key_col, order_col, "tr", "_str", m)
         dd = (
             dd.withColumn("plus_di", plus_di)
             .withColumn("minus_di", minus_di)
@@ -391,7 +374,7 @@ def adx(
             )
             .drop("_pdm", "_mdm", "_spdm", "_smdm", "_str")
         )
-        return _ema_col(dd, alpha, key_col, order_col, "dx", "adx", m, max_len)
+        return _ema_col(dd, alpha, key_col, order_col, "dx", "adx", m)
 
     return _ema_chain(d, key_col, (alpha,), _chain, method, max_len)
 
@@ -495,8 +478,8 @@ def ewm_var(
     )
 
     def _chain(dd, m):
-        dd = _ema_col(dd, alpha, key_col, order_col, value_col, "ewm_mean", m, max_len)
-        dd = _ema_col(dd, alpha, key_col, order_col, "_x2", "_e2", m, max_len)
+        dd = _ema_col(dd, alpha, key_col, order_col, value_col, "ewm_mean", m)
+        dd = _ema_col(dd, alpha, key_col, order_col, "_x2", "_e2", m)
         return (
             dd.withColumn("ewm_var", var)
             .withColumn("ewm_std", F.sqrt(F.col("ewm_var")))
@@ -541,7 +524,7 @@ def atr(
         )
         .drop("_pc")
     )
-    return _ema_col(d, 1.0 / n, key_col, order_col, "tr", "atr", method, max_len)
+    return _ema(d, 1.0 / n, key_col, order_col, "tr", "atr", method, max_len)
 
 
 def pivot_points(
@@ -607,8 +590,8 @@ def keltner_channels(
     )
     def _chain(dd, m):
         dd = _ema_col(dd, 2.0 / (n + 1), key_col, order_col, "typical",
-                      "kc_mid", m, max_len)
-        dd = _ema_col(dd, 1.0 / n, key_col, order_col, "tr", "_atr", m, max_len)
+                      "kc_mid", m)
+        dd = _ema_col(dd, 1.0 / n, key_col, order_col, "tr", "_atr", m)
         return (
             dd.withColumn("kc_upper", F.col("kc_mid") + mult * F.col("_atr"))
             .withColumn("kc_lower", F.col("kc_mid") - mult * F.col("_atr"))
@@ -766,8 +749,8 @@ def ewma_chart(
     pts = df.where(v.isNotNull())
     wk = Window.partitionBy(key_col)
     ws = Window.partitionBy(key_col).orderBy(order_col)
-    d = _ema_col(pts, alpha, key_col, order_col, value_col, "ema",
-                 method, max_len)
+    d = _ema(pts, alpha, key_col, order_col, value_col, "ema",
+             method, max_len)
     d = (
         d.withColumn("center", F.avg(value_col).over(wk))
         .withColumn("_sd", F.stddev_samp(value_col).over(wk))
@@ -942,12 +925,9 @@ def trix(
     prev = F.lag("ema3").over(ws)
 
     def _chain(dd, m):
-        dd = _ema_col(dd, alpha, key_col, order_col, value_col, "_e1",
-                      m, max_len)
-        dd = _ema_col(dd, alpha, key_col, order_col, "_e1", "_e2",
-                      m, max_len)
-        dd = _ema_col(dd, alpha, key_col, order_col, "_e2", "ema3",
-                      m, max_len)
+        dd = _ema_col(dd, alpha, key_col, order_col, value_col, "_e1", m)
+        dd = _ema_col(dd, alpha, key_col, order_col, "_e1", "_e2", m)
+        dd = _ema_col(dd, alpha, key_col, order_col, "_e2", "ema3", m)
         return (
             dd.withColumn(
                 "trix", 100.0 * (F.try_divide(F.col("ema3"), prev) - 1.0)
@@ -1032,8 +1012,8 @@ def heikin_ashi(
     w_in = F.coalesce(F.lag("ha_close").over(ws), seed)
     # "_ha_w", not "_w": the closed-form EMA pass uses "_w" internally
     d = d.withColumn("_ha_w", w_in)
-    d = _ema_col(d, 0.5, key_col, order_col, "_ha_w", "ha_open",
-                 method, max_len)
+    d = _ema(d, 0.5, key_col, order_col, "_ha_w", "ha_open",
+             method, max_len)
     return (
         d.withColumn(
             "ha_high",

@@ -12,8 +12,9 @@ coherence/crosscorr precedent):
 - **spearman_corr** is LINEAR: average-ranks are two window expressions
   and ρ is one corr aggregate — fine at any overlap length.
 - **kendall_tau** is a PAIR statistic, dual-planned (the
-  ema/theil_sen/coherence precedent): overlaps of ≤ ``pair_threshold``
-  rows take the O(T²/2) self-join (SQL-replayable, map-side-combined
+  ema/theil_sen/coherence precedent, routed by
+  :func:`~spark_timeseries_spark.parallel.route_by_length`): overlaps of
+  ≤ ``_PAIR_THRESHOLD`` rows take the O(T²/2) self-join (SQL-replayable, map-side-combined
   down to four counters — an overlap of 10⁴ rows is 5·10⁷ join rows);
   longer overlaps route to a grouped-map merge-sort inversion-count
   kernel (Knight 1966) — O(T log T), the exact same four counters.
@@ -34,7 +35,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..parallel import route_by_length
+
 __all__ = ["spearman_corr", "kendall_tau"]
+
+#: overlap length up to which :func:`kendall_tau` runs the pair
+#: self-join (8192²/2 ≈ 3.4·10⁷ join rows); longer overlaps take the
+#: merge-sort kernel
+_PAIR_THRESHOLD = 8192
 
 
 def _overlap(df, key_a, key_b, key_col, loc_col, value_col) -> DataFrame:
@@ -259,7 +267,6 @@ def kendall_tau(
     loc_col: str = "loc",
     value_col: str = "value",
     method: str = "auto",
-    pair_threshold: int = 8192,
 ) -> DataFrame:
     """Kendall τ-b over the two series' non-null overlap → one row
     (key_a, key_b, n, n_concordant, n_discordant, tau): for every
@@ -272,12 +279,13 @@ def kendall_tau(
     (module docstring — duplicates skew every counter).
 
     Dual plan (``method``): "auto" (default) routes by overlap length
-    — the O(T²/2) pair self-join for ≤ ``pair_threshold`` rows (SQL-
+    through :func:`~spark_timeseries_spark.parallel.route_by_length` —
+    the O(T²/2) pair self-join for ≤ ``_PAIR_THRESHOLD`` rows (SQL-
     replayable, the oracle branch), the O(T log T) merge-sort
     inversion-count grouped-map kernel above it (8192² /2 ≈ 3.4·10⁷
     join rows is where the quadratic plan stops being cheap);
     "join" / "mergesort" force one strategy. Both produce the exact
-    same integer counters (parity-pinned at the threshold boundary).
+    same integer counters (parity-pinned at the bound).
 
     For τ-b between two row-level COLUMNS (not two named series) with
     bounded value cardinalities, prefer
@@ -285,35 +293,21 @@ def kendall_tau(
     is O(|X|·|Y|) independent of row count and also ships the
     tie-corrected test z; this function's pair plans are the right
     tool when the inputs are long-format series aligned by loc."""
-    if method not in ("auto", "join", "mergesort"):
-        raise ValueError(
-            f"method must be auto|join|mergesort, got {method}"
-        )
-    if pair_threshold < 1:
-        raise ValueError(
-            f"pair_threshold must be >= 1, got {pair_threshold}"
-        )
     j = _overlap(df, key_a, key_b, key_col, loc_col, value_col)
-    if method == "join":
-        return _kendall_join_plan(j, key_a, key_b)
-    if method == "mergesort":
-        return _kendall_merge_plan(j, key_a, key_b)
-    # auto: route on the overlap row count without a driver action —
-    # one unbounded count window over the bounded pair overlap (the
-    # spearman global-rank precedent), then union the two branches
-    # (exactly one is non-empty). The overlap is PERSISTED: its three
-    # lazy consumers (count window + both branches) would otherwise
-    # each recompute the upstream series scan/join — measured 1.9 →
-    # 4.4 s on the sf0.01 daily-grid row (the pipeline.clean
-    # persist_intermediate precedent; the overlap is the bounded
-    # two-named-series table, and bench/driver runs clearCache per
-    # query)
-    wall = Window.partitionBy(F.lit(1))
-    jn = j.withColumn("_n", F.count(F.lit(1)).over(wall)).persist()
-    short = _kendall_join_plan(
-        jn.where(F.col("_n") <= pair_threshold).drop("_n"), key_a, key_b
+    if method == "auto":
+        # route on the overlap row count without a driver action: one
+        # unbounded count window over the bounded pair overlap (the
+        # spearman global-rank precedent). The overlap is PERSISTED: its
+        # three lazy consumers (count window + both branches) would
+        # otherwise each recompute the upstream series scan/join —
+        # measured 1.9 → 4.4 s on the sf0.01 daily-grid row (the
+        # pipeline.clean persist_intermediate precedent; bench.py runs
+        # clearCache per query). A forced side has one consumer.
+        wall = Window.partitionBy(F.lit(1))
+        j = j.withColumn("_n", F.count(F.lit(1)).over(wall)).persist()
+    return route_by_length(
+        j, [], _PAIR_THRESHOLD,
+        lambda d: _kendall_join_plan(d.drop("_n"), key_a, key_b),
+        lambda d: _kendall_merge_plan(d.drop("_n"), key_a, key_b),
+        method, sides=("join", "mergesort"), n_col="_n",
     )
-    long_ = _kendall_merge_plan(
-        jn.where(F.col("_n") > pair_threshold).drop("_n"), key_a, key_b
-    )
-    return short.unionByName(long_)

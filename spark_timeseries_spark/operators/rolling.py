@@ -466,23 +466,25 @@ def _corr_broadcast_max_bytes(spark) -> int:
 def _est_bytes(df: DataFrame) -> int:
     """The optimizer's size estimate for ``df`` (the same statistic the
     autoBroadcastJoinThreshold decision reads) — no job is run. Returns 0
-    (i.e. 'fits') when the estimate is unavailable or is the
+    (i.e. 'fits') when the estimate is unavailable or derives from the
     ``spark.sql.defaultSizeInBytes`` Long.MaxValue sentinel (non-file
     sources like LocalRelation/ExistingRDD report that, meaning UNKNOWN,
-    not huge), preserving the documented bounded-K broadcast contract."""
+    not huge), preserving the documented bounded-K broadcast contract.
+    A Project scales the sentinel by its column-width ratio, so anything
+    at or above 2^50 bytes (1 PiB — no real broadcast candidate) counts
+    as unknown, not only values near 2^63."""
     try:
         est = int(
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         )
     except Exception:
         return 0
-    return 0 if est >= (1 << 62) else est
+    return 0 if est >= (1 << 50) else est
 
 
 def corr_matrix(
     df: DataFrame,
     min_overlap: int = 2,
-    method: str = "join",
     key_col: str = "key",
     order_col: str = "loc",
     value_col: str = "value",
@@ -503,44 +505,22 @@ def corr_matrix(
     that's the result's size, not a plan defect; at corpus scale callers
     bound K with a key filter first.
 
-    Two physical strategies — the same O(T·K²) WORK, different
-    bottlenecks (measured at sf0.1, K=1500, T=31, local[32], min-of-2:
-    join ≈ 20 s, compact ≈ 34 s — join is the DEFAULT and the right
-    pick whenever compute is the constraint):
+    Plan: one self-equi-join on the location + one (key_a, key_b)
+    moment aggregate, every flop inside whole-stage-codegen'd native
+    aggregates. The right side is BROADCAST (the K×T series table) so
+    the joined rows are never exchanged — but only while its
+    plan-estimated size stays under
+    ``spark.spark_timeseries.corrMatrix.broadcastMaxBytes`` (default
+    512 MiB; the broadcast hard cap is 8 GiB / 512M rows). Past the
+    bound it degrades to a location shuffle join + post-join aggregate
+    exchange — O(T·K²) shuffled rows, slower but unbounded. (An
+    array-compact variant — one value array per key, broadcast pair
+    fold — measured 1.5× slower than this plan; its win needs a
+    network-bound cluster, so only this plan is kept.)
 
-    - ``method="join"`` (default): one self-equi-join on the location +
-      one (key_a, key_b) moment aggregate, every flop inside
-      whole-stage-codegen'd native aggregates — on a CPU-bound box it
-      beats the array fold ~1.7×. The right side is BROADCAST (the same
-      K×T envelope the compact kernel broadcasts) so the joined rows are
-      never exchanged — but only while its plan-estimated size stays
-      under ``spark.spark_timeseries.corrMatrix.broadcastMaxBytes``
-      (default 512 MiB; the broadcast hard cap is 8 GiB / 512M rows).
-      Past the bound it degrades to a location shuffle join + post-join
-      aggregate exchange — O(T·K²) shuffled rows, slower but unbounded.
-    - ``method="compact"`` (aligned grids, shuffle-bound clusters):
-      collapse each series to ONE row carrying its loc-sorted value
-      array (grand shuffle volume: K rows vs T·K² joined rows),
-      broadcast the K-row table against itself (nested-loop a < b),
-      and fold the masked moments positionally with array expressions.
-      REQUIRES every key to carry the same location set — positions
-      are matched by sorted order, not by location value. Its win
-      condition is NETWORK, not CPU: when the T·K² shuffle dominates
-      (long series × many keys on a real cluster), trading it for a
-      K-row broadcast + interpreted fold is the right exchange; on
-      local[32] (no network) the fold's interpreted-expression cost is
-      the whole bill, and join wins. Both are kept measured per round
-      (the ``corr_matrix_join`` bench-only row).
-
-    Both compute the identical statistic (sample-moment Pearson via
-    try_divide — ANSI mode makes native ``corr`` THROW on zero-variance
-    sides where this contract is NULL)."""
-    if method not in ("join", "compact"):
-        raise ValueError("method must be 'join' or 'compact'")
-    if method == "compact":
-        return _corr_matrix_compact(
-            df, min_overlap, key_col, order_col, value_col
-        )
+    The statistic is sample-moment Pearson via try_divide — ANSI mode
+    makes native ``corr`` THROW on zero-variance sides where this
+    contract is NULL."""
     from ..parallel import spread_kernel
 
     # Left side partitioned by key_a with an explicit cores-scaled count
@@ -548,10 +528,9 @@ def corr_matrix(
     # (T·K² joined rows from T·K input rows), and AQE's byte-based
     # coalescing — seeing only the small pre-join inputs — would other-
     # wise run the entire O(T·K²) moment aggregation in ONE task. The
-    # right side is broadcast: it is the same K×T series table the
-    # compact kernel already broadcasts (K-row array form), so the memory
-    # envelope is unchanged, and with the stream side hash-partitioned by
-    # key_a the (key_a, key_b) aggregate needs NO post-join exchange —
+    # right side is the broadcast K×T series table, and with the stream
+    # side hash-partitioned by key_a the (key_a, key_b) aggregate needs
+    # NO post-join exchange —
     # the 35M-row partial-aggregate shuffle disappears from the plan
     # (HashPartitioning(key_a) satisfies the grouping's clustering).
     a = spread_kernel(
@@ -594,91 +573,6 @@ def corr_matrix(
         "key_b",
         "n_overlap",
         F.when(F.col("n_overlap") >= min_overlap, c).alias("corr"),
-    )
-
-
-def _corr_matrix_compact(
-    df: DataFrame, min_overlap: int, key_col: str, order_col: str,
-    value_col: str,
-) -> DataFrame:
-    """Array-compact corr_matrix kernel (see :func:`corr_matrix`): one
-    value array per key (loc-sorted, NULL cells kept so positions align
-    across keys), broadcast pair join, masked moment fold per pair."""
-    from pyspark.sql import functions as F  # local alias for clarity
-
-    vecs = (
-        df.groupBy(key_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col(order_col), F.col(value_col)))
-            ).alias("_s")
-        )
-        .select(
-            F.col(key_col),
-            F.transform("_s", lambda x: x[value_col]).alias("_v"),
-        )
-    )
-    # collect_list drops NULL VALUES but keeps structs with a null field,
-    # so _v retains a slot per location — positional alignment holds on a
-    # dense grid. Broadcast the (tiny) K-row side; nested-loop a < b.
-    from ..parallel import spread_kernel
-
-    # stream side spread cores-wide (explicit count, AQE-preserved): the
-    # nested-loop pair join explodes K rows into K²/2 pairs whose masked
-    # fold is CPU-bound — without this the whole fold runs in the one
-    # partition AQE coalesces the K-row aggregate down to
-    a = spread_kernel(
-        vecs.select(F.col(key_col).alias("key_a"), F.col("_v").alias("_va")),
-        "key_a",
-    )
-    b = vecs.select(F.col(key_col).alias("key_b"), F.col("_v").alias("_vb"))
-    pairs = a.join(F.broadcast(b), F.col("key_a") < F.col("key_b"))
-    zipped = F.zip_with(
-        F.col("_va"), F.col("_vb"), lambda x, y: F.struct(
-            x.alias("a"), y.alias("b")
-        )
-    )
-    zero = F.struct(
-        F.lit(0.0).alias("n"), F.lit(0.0).alias("sa"), F.lit(0.0).alias("sb"),
-        F.lit(0.0).alias("saa"), F.lit(0.0).alias("sbb"),
-        F.lit(0.0).alias("sab"),
-    )
-
-    def fold(acc, p):
-        both = p["a"].isNotNull() & p["b"].isNotNull()
-        av = F.when(both, p["a"]).otherwise(0.0)
-        bv = F.when(both, p["b"]).otherwise(0.0)
-        one = F.when(both, 1.0).otherwise(0.0)
-        return F.struct(
-            (acc["n"] + one).alias("n"),
-            (acc["sa"] + av).alias("sa"),
-            (acc["sb"] + bv).alias("sb"),
-            (acc["saa"] + av * av).alias("saa"),
-            (acc["sbb"] + bv * bv).alias("sbb"),
-            (acc["sab"] + av * bv).alias("sab"),
-        )
-
-    m = pairs.select(
-        "key_a", "key_b", F.aggregate(zipped, zero, fold).alias("_m")
-    )
-    n = F.col("_m.n")
-    num = n * F.col("_m.sab") - F.col("_m.sa") * F.col("_m.sb")
-    da = n * F.col("_m.saa") - F.col("_m.sa") * F.col("_m.sa")
-    db = n * F.col("_m.sbb") - F.col("_m.sb") * F.col("_m.sb")
-    # da/db are raw-moment variance terms: exactly 0 for a constant side
-    # (integer-exact arithmetic), possibly a last-bit negative for a
-    # pathological near-constant one — gate on > 0 so sqrt never sees a
-    # negative and zero-variance sides yield NULL (the join method's
-    # stddev_samp contract)
-    c = F.when(
-        (da > 0.0) & (db > 0.0),
-        F.try_divide(num, F.sqrt(da) * F.sqrt(db)),
-    )
-    return m.select(
-        "key_a",
-        "key_b",
-        n.cast("bigint").alias("n_overlap"),
-        F.when(n >= min_overlap, c).alias("corr"),
     )
 
 

@@ -27,11 +27,12 @@ Two physical strategies for the same math, selected per series by length:
   stays in-core as BLAS flops).
 
 ``method="auto"`` (default) branches PER SERIES inside one lazy plan:
-series with n ≤ ``fft_threshold`` take the explode subplan, longer ones
-the grouped-map subplan, unioned — no driver-side length probe, no
-action at plan-build time. The threshold default (512) keeps the explode
-side under ~128k shuffle rows per series; at 100× series length the
-kernel side takes over and shuffle volume stays linear in the corpus.
+:func:`~spark_timeseries_spark.parallel.route_by_length` sends series
+with n ≤ ``_FFT_THRESHOLD`` (512) to the explode subplan and longer ones
+to the grouped-map subplan, unioned — no driver-side length probe, no
+action at plan-build time. The bound keeps the explode side under ~128k
+shuffle rows per series; at 100× series length the kernel side takes
+over and shuffle volume stays linear in the corpus.
 
 Missing cells: the input should be FILLED first (``fill.fill_linear`` et
 al.) — a NULL cell is dropped from the sums, which is the "treat as the
@@ -46,11 +47,15 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..parallel import map_groups, route_by_length
+
 __all__ = [
     "periodogram", "dominant_period", "coherence", "lomb_scargle",
     "spectral_residual",
 ]
 
+#: series length (overlap length for :func:`coherence`) up to which the
+#: SQL-exact explode plan runs; longer series take the FFT kernel
 _FFT_THRESHOLD = 512
 
 
@@ -142,21 +147,12 @@ def _periodogram_fft(df: DataFrame, key_col, loc_col, value_col) -> DataFrame:
             }
         )
 
-    from ..parallel import map_groups
-
     return map_groups(df, key_col, kernel, schema)
 
 
 def _periodogram_with_n(
-    df: DataFrame,
-    key_col: str,
-    loc_col: str,
-    value_col: str,
-    method: str,
-    fft_threshold: int,
+    df: DataFrame, key_col: str, loc_col: str, value_col: str, method: str
 ) -> DataFrame:
-    if method not in ("auto", "explode", "fft"):
-        raise ValueError(f"method must be auto|explode|fft, got {method}")
     v = F.col(value_col)
     stats = df.groupBy(key_col).agg(
         F.count(F.lit(1)).alias("_n"), F.avg(v).alias("_mu")
@@ -164,23 +160,16 @@ def _periodogram_with_n(
     # _n >= 2 guard: sequence(1, 0) counts DOWN in Spark (default step -1),
     # so a 1-point series would emit spurious k=1,0 rows instead of none.
     joined = df.join(stats, key_col).where(F.col("_n") >= F.lit(2))
-    pts = joined.where(v.isNotNull())
-    if method == "explode":
-        return _periodogram_explode(pts, key_col, loc_col, value_col)
-    if method == "fft":
-        return _periodogram_fft(
-            joined.drop("_n", "_mu"), key_col, loc_col, value_col
-        ).where(F.col("_n") >= 2)
-    short = _periodogram_explode(
-        pts.where(F.col("_n") <= fft_threshold), key_col, loc_col, value_col
+    return route_by_length(
+        joined, [key_col], _FFT_THRESHOLD,
+        lambda d: _periodogram_explode(
+            d.where(v.isNotNull()), key_col, loc_col, value_col
+        ),
+        lambda d: _periodogram_fft(
+            d.drop("_n", "_mu"), key_col, loc_col, value_col
+        ),
+        method, sides=("explode", "fft"), n_col="_n",
     )
-    long_ = _periodogram_fft(
-        joined.where(F.col("_n") > fft_threshold).drop("_n", "_mu"),
-        key_col,
-        loc_col,
-        value_col,
-    )
-    return short.unionByName(long_.select(key_col, "k", "power", "_n"))
 
 
 def periodogram(
@@ -189,17 +178,16 @@ def periodogram(
     loc_col: str = "loc",
     value_col: str = "value",
     method: str = "auto",
-    fft_threshold: int = _FFT_THRESHOLD,
 ) -> DataFrame:
     """(key, k, power): periodogram ordinate at each Fourier frequency
     k = 1..⌊n/2⌋, where n is the series' grid length (rows per key) and
     t is the grid location — a spike at k means a cycle of period n/k
     grid steps. ``method``: "auto" (default) routes each series by length
-    — explode plan for n ≤ ``fft_threshold``, grouped-map FFT kernel
+    — explode plan for n ≤ ``_FFT_THRESHOLD``, grouped-map FFT kernel
     above it; "explode" / "fft" force one strategy (use "explode" for
     SQL-oracle replay, "fft" when every series is long)."""
     return _periodogram_with_n(
-        df, key_col, loc_col, value_col, method, fft_threshold
+        df, key_col, loc_col, value_col, method
     ).select(key_col, "k", "power")
 
 
@@ -210,7 +198,6 @@ def dominant_period(
     value_col: str = "value",
     tie_digits: int | None = None,
     method: str = "auto",
-    fft_threshold: int = _FFT_THRESHOLD,
 ) -> DataFrame:
     """(key, k, period, power): the argmax-power Fourier frequency per
     series and its period n/k in grid steps (ties to the LOWEST k — the
@@ -224,7 +211,7 @@ def dominant_period(
     engine, instead of by whichever side's fp dust is larger.
     """
     per = _periodogram_with_n(
-        df, key_col, loc_col, value_col, method, fft_threshold
+        df, key_col, loc_col, value_col, method
     )
     rank_p = (
         F.round(F.col("power"), tie_digits)
@@ -336,7 +323,6 @@ def coherence(
     loc_col: str = "loc",
     value_col: str = "value",
     method: str = "auto",
-    fft_threshold: int = _FFT_THRESHOLD,
 ) -> DataFrame:
     """Magnitude-squared coherence between two named series over their
     non-null overlap → (k, freq, sxx, syy, coh, phase): the frequency-
@@ -357,21 +343,20 @@ def coherence(
     informative; NULL coh where either smoothed spectrum is 0 (constant
     overlap).
 
-    Plan (``method="auto"``, the :func:`periodogram` dual-plan
-    precedent): short overlaps (T ≤ ``fft_threshold``) take the
-    SQL-exact T/2-way explode + one groupBy(k) — all JVM, oracle-
-    replayable; long overlaps route to a grouped-map numpy ``rfft``
-    kernel computing the SAME cross-spectrum from X_x·conj(X_y) in
-    O(T log T) — the O(T²) explode never ships at long-series scale.
-    Both branches live in one lazy plan (a per-length filter + union;
-    no driver-side probe); either way the overlap equi-join on loc,
+    Plan (``method="auto"``, the :func:`periodogram` dual plan):
+    :func:`~spark_timeseries_spark.parallel.route_by_length` over the
+    overlap as one group sends T ≤ ``_FFT_THRESHOLD`` to the SQL-exact
+    T/2-way explode + one groupBy(k) — all JVM, oracle-replayable — and
+    longer overlaps to a grouped-map numpy ``rfft`` kernel computing
+    the SAME cross-spectrum from X_x·conj(X_y) in O(T log T) — the
+    O(T²) explode never ships at long-series scale. Both branches live
+    in one lazy plan (no driver-side probe); "explode"/"fft" force one.
+    Either way the overlap equi-join on loc,
     ONE global row_number + avg window, and the k-ordered smoothing
     window are shared (bounded by construction — a two-named-series
     overlap, the ``roll_corr`` precedent)."""
     if smooth < 0:
         raise ValueError(f"smooth must be >= 0, got {smooth}")
-    if method not in ("auto", "explode", "fft"):
-        raise ValueError(f"method must be auto|explode|fft, got {method}")
     v = F.col(value_col)
     pts = df.where(v.isNotNull())
     a = pts.where(F.col(key_col) == key_a).select(
@@ -390,14 +375,10 @@ def coherence(
         .withColumn("_t", F.row_number().over(ws) - 1)
         .where(F.col("_n") >= 2)
     )
-    if method == "explode":
-        spec = _coherence_explode(base)
-    elif method == "fft":
-        spec = _coherence_fft(base)
-    else:
-        spec = _coherence_explode(
-            base.where(F.col("_n") <= fft_threshold)
-        ).unionByName(_coherence_fft(base.where(F.col("_n") > fft_threshold)))
+    spec = route_by_length(
+        base, [], _FFT_THRESHOLD, _coherence_explode, _coherence_fft,
+        method, sides=("explode", "fft"), n_col="_n",
+    )
     wd = Window.orderBy("k").rowsBetween(-smooth, smooth)
     sm = spec.select(
         "k",
@@ -610,7 +591,6 @@ def white_noise_test(
     loc_col: str = "loc",
     value_col: str = "value",
     method: str = "auto",
-    fft_threshold: int = _FFT_THRESHOLD,
 ) -> DataFrame:
     """Bartlett's cumulative-periodogram white-noise test → one row per
     key: (key, m, ks_stat, crit_05, crit_01, white_noise_05). The
@@ -627,7 +607,7 @@ def white_noise_test(
     two key-partitioned windows (total + running sum) and one final
     combinable groupBy(key) — no joins, all JVM either route."""
     per = _periodogram_with_n(
-        df, key_col, loc_col, value_col, method, fft_threshold
+        df, key_col, loc_col, value_col, method
     )
     wk = Window.partitionBy(key_col)
     wcum = (
@@ -665,7 +645,6 @@ def spectral_flatness(
     loc_col: str = "loc",
     value_col: str = "value",
     method: str = "auto",
-    fft_threshold: int = _FFT_THRESHOLD,
 ) -> DataFrame:
     """Wiener spectral flatness per key → (key, m, flatness): geometric
     mean / arithmetic mean of the periodogram ordinates — 1 for a flat
@@ -679,7 +658,7 @@ def spectral_flatness(
     Plan: rides :func:`periodogram`'s plan + one combinable
     groupBy(key). All JVM either route."""
     per = _periodogram_with_n(
-        df, key_col, loc_col, value_col, method, fft_threshold
+        df, key_col, loc_col, value_col, method
     )
     n_zero = F.sum(F.when(F.col("power") <= 0, 1).otherwise(0))
     gm = F.exp(F.avg(F.when(F.col("power") > 0, F.log("power"))))

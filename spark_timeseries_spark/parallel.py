@@ -14,6 +14,13 @@ running every estimator serially, measured 7× slower), and the constant
 keeps the planner from pruning the exchange against an upstream one
 already hash-partitioned by the key at the same (coalescible) count.
 
+:func:`route_by_length` is the one per-series length router of every
+dual-plan operator: a SQL-exact JVM plan for short series (the form the
+oracle replays) and a ``map_groups`` kernel for long ones, split by a
+count window and unioned in one lazy plan. Each caller owns its bound
+(a module constant, or the EMA's numeric envelope); none exposes it as
+an option.
+
 ``spread_kernel`` keeps the ``2·cores + 1`` key repartition for the JVM
 pair-fold stages in ``operators/rolling.py``, which pay no Python task
 cost; ``spread_rows`` is its round-robin variant for row-parallel stages
@@ -26,7 +33,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator, Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -115,3 +122,43 @@ def map_groups(
             yield out
 
     return clustered.mapInPandas(run, schema)
+
+
+def route_by_length(
+    df: DataFrame,
+    group_cols: Sequence[str],
+    bound: int,
+    short: Callable[[DataFrame], DataFrame],
+    long: Callable[[DataFrame], DataFrame],
+    method: str = "auto",
+    sides: tuple[str, str] = ("short", "long"),
+    n_col: str | None = None,
+) -> DataFrame:
+    """``short`` over the groups of ``df`` with at most ``bound`` rows,
+    ``long`` over the rest, unioned by name — one lazy plan, no driver
+    action. ``group_cols=[]`` makes the whole frame one group.
+
+    ``method`` "auto" routes; a value equal to one of ``sides`` (the
+    names of ``short`` and ``long``) runs that side over all of ``df``;
+    anything else raises ``ValueError``. ``n_col`` names a group row
+    count ``df`` already carries: it is routed on as is and stays in the
+    rows each side gets. Without it one count window over ``group_cols``
+    is added, and dropped before either side runs."""
+    if method in sides:
+        return (short if method == sides[0] else long)(df)
+    if method != "auto":
+        raise ValueError(
+            f"method must be auto|{sides[0]}|{sides[1]}, got {method}"
+        )
+    n = n_col or "_gn"
+    if n_col is None:
+        w = Window.partitionBy(*(group_cols or [F.lit(1)]))
+        df = df.withColumn(n, F.count(F.lit(1)).over(w))
+
+    def side(fn: Callable[[DataFrame], DataFrame], cond) -> DataFrame:
+        part = df.where(cond)
+        return fn(part if n_col else part.drop(n))
+
+    return side(short, F.col(n) <= bound).unionByName(
+        side(long, F.col(n) > bound)
+    )

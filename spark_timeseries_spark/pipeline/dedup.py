@@ -27,12 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from spark_timeseries_spark.functions import let
-
-#: edge-table row bound under which :func:`connected_components` collects
-#: the (symmetrized, distinct) near-dup edge list and label-propagates at
-#: the driver — a few MB of longs, the broadcast-build-side envelope.
-#: Above it, the distributed loop is the scale path.
-DRIVER_EDGE_ROWS = 1 << 17
+from spark_timeseries_spark.pipeline import graph
 
 
 def content_digest(text: Column, normalize: bool = True) -> Column:
@@ -606,6 +601,7 @@ def connected_components(
 ) -> DataFrame:
     """Duplicate-CLUSTER resolution: collapse near-dup pairs into connected
     components → (id, component), component = min id in the cluster.
+    Ids are cast to long; a pair with a NULL id after the cast is dropped.
 
     Pair output alone over-deletes nothing and under-deletes a lot: A~B and
     B~C mean {A,B,C} is ONE duplicate group even if A~C never scored. This
@@ -636,16 +632,19 @@ def connected_components(
     on it is a harmless no-op, so r3-era callers still work)."""
     if on_nonconverged not in ("raise", "warn"):
         raise ValueError(f"on_nonconverged must be raise|warn, got {on_nonconverged!r}")
+    # a pair with a NULL id (also a non-numeric string id, NULL after the
+    # cast) links nothing: drop it before the size gate so both paths
+    # see the same graph
     e = pairs.select(
         F.col(id_a).cast("long").alias("a"), F.col(id_b).cast("long").alias("b")
-    )
+    ).where(F.col("a").isNotNull() & F.col("b").isNotNull())
     edges = (
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
         .persist()
     )
     n_edges = edges.count()  # also warms the persist the loop below reuses
-    if n_edges <= DRIVER_EDGE_ROWS:
+    if n_edges <= graph.DRIVER_EDGE_ROWS:
         # The pair table is tiny (near-dup edges, not the corpus — the
         # corpus-scale join that produced it already ran). The cluster
         # loop costs two job round-trips per round (materialize + changed
@@ -710,11 +709,11 @@ def connected_components(
 def _components_local(spark, edges, max_iter, on_nonconverged):
     """Driver-local replica of the distributed min-label propagation —
     used only when the symmetrized distinct edge list fits under
-    :data:`DRIVER_EDGE_ROWS`. Identical round semantics: each round every
-    node takes the min of its own label and its neighbors' labels from the
-    PREVIOUS round, the loop stops on a fixed point, and hitting
-    ``max_iter`` with labels still moving raises/warns exactly like the
-    cluster loop."""
+    :data:`~.graph.DRIVER_EDGE_ROWS`. Identical round semantics: each
+    round every node takes the min of its own label and its neighbors'
+    labels from the PREVIOUS round, the loop stops on a fixed point, and
+    hitting ``max_iter`` with labels still moving raises/warns exactly
+    like the cluster loop."""
     labels = {a: a for a, _ in edges}
     changed = 1
     for _ in range(max_iter):

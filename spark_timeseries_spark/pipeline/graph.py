@@ -29,11 +29,12 @@ from pyspark.sql import functions as F
 
 __all__ = ["pagerank"]
 
-#: edge-table row bound under which :func:`pagerank` collects the
-#: (already symmetrized + distinct) edge list and iterates at the driver —
-#: a few MB of longs, the broadcast-build-side envelope. The fixed-point
-#: integer contract makes the local loop bit-identical by construction;
-#: above the bound the distributed loop below is the scale path.
+#: edge-table row bound under which :func:`pagerank` and
+#: :func:`~.dedup.connected_components` collect the (symmetrized, distinct)
+#: edge list and iterate at the driver — a few MB of longs, the
+#: broadcast-build-side envelope. Both local loops replay their
+#: distributed loop exactly; above the bound the distributed loop is the
+#: scale path.
 DRIVER_EDGE_ROWS = 1 << 17
 
 
@@ -51,9 +52,9 @@ def pagerank(
     (each pair contributes both directions). ``pr_int`` is the exact
     integer score in 10^-digits units (the engine-independent value);
     ``pr`` divides it out for reading. Nodes = every id appearing in
-    any pair; dangling nodes cannot exist after symmetrization
-    (directed = True keeps them: their rank mass leaks, the standard
-    simplification, stated).
+    any pair; a pair with a NULL id is dropped. Dangling nodes cannot
+    exist after symmetrization (directed = True keeps them: their rank
+    mass leaks, the standard simplification, stated).
 
     Plan: the loop-invariant degree is folded into the edge table ONCE
     before the loop (``edges ⋈ deg``, localCheckpoint-ed), so each
@@ -67,6 +68,9 @@ def pagerank(
     if not 1 <= digits <= 9:
         raise ValueError(f"digits must be in [1, 9], got {digits}")
     scale = 10 ** digits
+    # a pair with a NULL id links nothing: drop it before the size gate
+    # so both paths see the same graph
+    pairs = pairs.where(F.col(id_a).isNotNull() & F.col(id_b).isNotNull())
     e = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     )

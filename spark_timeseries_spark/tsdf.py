@@ -265,16 +265,11 @@ class TimeSeriesDataFrame:
         beyond-reference companion of :meth:`autocorr`."""
         return rolling.crosscorr(self.df, key_a, key_b, max_lag)
 
-    def corr_matrix(
-        self, min_overlap: int = 2, method: str = "join"
-    ) -> DataFrame:
+    def corr_matrix(self, min_overlap: int = 2) -> DataFrame:
         """Pairwise Pearson correlation across all series (strict upper
         triangle, pairwise-complete) — beyond-reference; see
-        :func:`operators.rolling.corr_matrix`. Defaults to the join
-        kernel (faster when compute binds); pass ``method="compact"``
-        on shuffle-bound clusters — a TimeSeriesDataFrame's dense
-        shared index satisfies its aligned-grid precondition."""
-        return rolling.corr_matrix(self.df, min_overlap, method=method)
+        :func:`operators.rolling.corr_matrix`."""
+        return rolling.corr_matrix(self.df, min_overlap)
 
     def _roll(self, agg: str, n: int, align_: str) -> "TimeSeriesDataFrame":
         out = rolling.roll_agg(self.df, n, agg, align_)

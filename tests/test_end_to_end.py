@@ -563,7 +563,7 @@ def test_periodogram_degenerate_series_emit_no_rows(spark):
     assert [(r.key, r.k) for r in dom] == [("two", 1)]
 
 
-def test_periodogram_fft_kernel_matches_explode(spark):
+def test_periodogram_fft_kernel_matches_explode(spark, monkeypatch):
     """The grouped-map FFT kernel computes the SAME ordinates as the
     SQL-exact explode plan: (a) contiguous series (rfft fast path, with a
     non-zero starting loc to pin the phase-shift invariance), (b) a series
@@ -597,9 +597,12 @@ def test_periodogram_fft_kernel_matches_explode(spark):
         fft["power"].to_numpy(), exp["power"].to_numpy(), rtol=1e-9, atol=1e-9
     )
 
-    # auto at the boundary: threshold 33 sends "a" (40 > 33) through the
+    # auto at the boundary: bound 33 sends "a" (40 > 33) through the
     # kernel and "b" (33 <= 33) through explode — same union result
-    auto = (periodogram(df, method="auto", fft_threshold=33)
+    from spark_timeseries_spark.operators import spectral
+
+    monkeypatch.setattr(spectral, "_FFT_THRESHOLD", 33)
+    auto = (periodogram(df, method="auto")
             .orderBy("key", "k").toPandas())
     np.testing.assert_allclose(
         auto["power"].to_numpy(), exp["power"].to_numpy(), rtol=1e-9, atol=1e-9
@@ -1132,51 +1135,6 @@ def test_interarrival_stats(spark):
 
     assert out["per"].std_gap == 0.0 and out["per"].burstiness == -1.0
     assert "one" not in out
-
-
-def test_corr_matrix_compact_matches_join(spark):
-    """On an aligned dense grid (every key carries the same loc set,
-    NULL holes allowed) the compact array kernel reproduces the join
-    method pair-for-pair — including NULL gates (short overlap,
-    zero-variance side)."""
-    import numpy as np
-
-    from spark_timeseries_spark.operators.rolling import corr_matrix
-
-    rng = np.random.RandomState(13)
-    locs = list(range(25))
-    series = {
-        "a": [float(v) for v in rng.randn(25)],
-        "b": [float(v) for v in rng.randn(25) * 2 + 1],
-        "c": [None if i % 3 == 0 else float(rng.randn()) for i in locs],
-        "flat": [7.0] * 25,
-        "sparse": [1.0 if i == 0 else (2.0 if i == 24 else None)
-                   for i in locs],
-    }
-    rows = [(k, i, series[k][i]) for k in series for i in locs]
-    df = spark.createDataFrame(rows, "key string, loc long, value double")
-
-    jn = {(r.key_a, r.key_b): (r.n_overlap, r.corr)
-          for r in corr_matrix(df, 3, "join").collect()}
-    cp = {(r.key_a, r.key_b): (r.n_overlap, r.corr)
-          for r in corr_matrix(df, 3, "compact").collect()}
-    # join omits never-overlapping pairs entirely; compact emits them
-    # with n_overlap 0 — compare on the union with that normalization
-    assert set(jn) <= set(cp)
-    for k, (n_c, c_c) in cp.items():
-        if k not in jn:
-            assert n_c < 3 and c_c is None
-            continue
-        n_j, c_j = jn[k]
-        assert n_j == n_c, k
-        if c_j is None:
-            assert c_c is None, k
-        else:
-            assert abs(c_j - c_c) < 1e-9, k
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        corr_matrix(df, 3, "banana")
 
 
 def test_paa_and_sax(spark):
@@ -2028,7 +1986,7 @@ def test_window_join(spark):
         window_join(lt, rt, -1.0, 1.0, aggs=["median"])
 
 
-def test_mann_kendall_kernel_join_parity(spark):
+def test_mann_kendall_kernel_join_parity(spark, monkeypatch):
     """The merge-count kernel and the pairwise-join S stage agree exactly
     (S is integer), including ties and across the auto threshold; the
     seasonal variant agrees per (key, season); degenerate series (n<3,
@@ -2057,7 +2015,10 @@ def test_mann_kendall_kernel_join_parity(spark):
 
     j = snap(mann_kendall(df, s_method="join"))
     k_ = snap(mann_kendall(df, s_method="kernel"))
-    auto = snap(mann_kendall(df, kernel_threshold=20))  # splits the keys
+    from spark_timeseries_spark.operators import cusum
+
+    monkeypatch.setattr(cusum, "_KERNEL_THRESHOLD", 20)  # splits the keys
+    auto = snap(mann_kendall(df))
     for key in j:
         assert j[key][:2] == k_[key][:2] == auto[key][:2], key
         for a, b in ((j[key], k_[key]), (j[key], auto[key])):
@@ -2070,12 +2031,13 @@ def test_mann_kendall_kernel_join_parity(spark):
 
     sj = snap(seasonal_mann_kendall(df, 4, s_method="join"))
     sk = snap(seasonal_mann_kendall(df, 4, s_method="kernel"))
-    sa = snap(seasonal_mann_kendall(df, 4, kernel_threshold=8))
+    monkeypatch.setattr(cusum, "_KERNEL_THRESHOLD", 8)
+    sa = snap(seasonal_mann_kendall(df, 4))
     for key in sj:
         assert sj[key][:2] == sk[key][:2] == sa[key][:2], key
 
 
-def test_theil_sen_kernel_join_parity(spark):
+def test_theil_sen_kernel_join_parity(spark, monkeypatch):
     """The in-core slope kernel and the pairwise-join plan agree on
     slope/intercept/n_pairs (same lerp median on both paths), including
     across the auto threshold; degenerate series stay NULL."""
@@ -2089,6 +2051,7 @@ def test_theil_sen_kernel_join_parity(spark):
     rows += [("one", 0, 4.0)]
     df = spark.createDataFrame(rows, "key string, loc long, value double")
 
+    from spark_timeseries_spark.operators import cusum
     from spark_timeseries_spark.operators.cusum import theil_sen
 
     def snap(out):
@@ -2097,7 +2060,8 @@ def test_theil_sen_kernel_join_parity(spark):
 
     j = snap(theil_sen(df, method="join"))
     k_ = snap(theil_sen(df, method="kernel"))
-    auto = snap(theil_sen(df, kernel_threshold=12))
+    monkeypatch.setattr(cusum, "_KERNEL_THRESHOLD", 12)
+    auto = snap(theil_sen(df))
     for key in j:
         for x, y, z in zip(j[key], k_[key], auto[key]):
             if x is None:
@@ -2226,7 +2190,7 @@ def test_ohlc_bars(spark):
     assert out[("b", 1)].n == 1
 
 
-def test_sample_entropy_join_kernel_parity(spark):
+def test_sample_entropy_join_kernel_parity(spark, monkeypatch):
     """SampEn join and kernel plans agree exactly on (b, a) counts and
     match a brute-force numpy replay; regular series scores lower than
     noise; degenerate series NULL."""
@@ -2260,8 +2224,10 @@ def test_sample_entropy_join_kernel_parity(spark):
 
     j = {r.key: r for r in sample_entropy(df, method="join").collect()}
     k = {r.key: r for r in sample_entropy(df, method="kernel").collect()}
-    auto = {r.key: r for r in
-            sample_entropy(df, kernel_threshold=35).collect()}
+    from spark_timeseries_spark.operators import features
+
+    monkeypatch.setattr(features, "_SAMPEN_KERNEL_THRESHOLD", 35)
+    auto = {r.key: r for r in sample_entropy(df).collect()}
     for key, vals in (("reg", regular), ("noise", noise)):
         eb, ea = brute(vals)
         for out in (j, k, auto):
@@ -2738,7 +2704,7 @@ def test_coherence(spark):
     assert all(v is None or abs(v - 1.0) < 1e-9 for v in s.values())
 
 
-def test_coherence_fft_kernel_parity(spark):
+def test_coherence_fft_kernel_parity(spark, monkeypatch):
     """The long-overlap rfft kernel and the SQL-exact explode branch
     produce the same spectra/coherence/phase at the threshold boundary
     (auto routes by overlap length; forcing either method agrees to
@@ -2769,8 +2735,11 @@ def test_coherence_fft_kernel_parity(spark):
             if a is not None:
                 assert abs(a - b) < 1e-9 * max(1.0, abs(a)), (k, col, a, b)
 
-    # auto + tiny threshold routes to the kernel branch
-    au = coherence(df, "a", "b", smooth=2, fft_threshold=8)
+    # auto + tiny bound routes to the kernel branch
+    from spark_timeseries_spark.operators import spectral
+
+    monkeypatch.setattr(spectral, "_FFT_THRESHOLD", 8)
+    au = coherence(df, "a", "b", smooth=2)
     p = au._jdf.queryExecution().executedPlan().toString()
     assert "InPandas" in p
     got = {r.k: r.coh for r in au.collect()}
@@ -3431,7 +3400,7 @@ def test_spearman_kendall(spark):
     assert kendall_tau(df3, "a", "b").collect()[0].tau is None
 
 
-def test_kendall_dual_plan_parity(spark):
+def test_kendall_dual_plan_parity(spark, monkeypatch):
     """The merge-sort inversion kernel and the pair-join plan produce
     IDENTICAL integer counters and tau at the auto-routing threshold
     boundary (n <= threshold -> join, n > threshold -> kernel), on
@@ -3468,10 +3437,14 @@ def test_kendall_dual_plan_parity(spark):
     )
     assert abs(jo.tau - me.tau) < 1e-12
 
-    # auto routing at the exact boundary: threshold = n stays on the
-    # join plan, threshold = n - 1 routes to the kernel — same row
-    at_thr = kendall_tau(df, "a", "b", pair_threshold=n).collect()[0]
-    over_thr = kendall_tau(df, "a", "b", pair_threshold=n - 1).collect()[0]
+    # auto routing at the exact boundary: bound = n stays on the
+    # join plan, bound = n - 1 routes to the kernel — same row
+    from spark_timeseries_spark.operators import rankcorr
+
+    monkeypatch.setattr(rankcorr, "_PAIR_THRESHOLD", n)
+    at_thr = kendall_tau(df, "a", "b").collect()[0]
+    monkeypatch.setattr(rankcorr, "_PAIR_THRESHOLD", n - 1)
+    over_thr = kendall_tau(df, "a", "b").collect()[0]
     for r in (at_thr, over_thr):
         assert (r.n, r.n_concordant, r.n_discordant) == (
             jo.n, jo.n_concordant, jo.n_discordant
@@ -3486,8 +3459,6 @@ def test_kendall_dual_plan_parity(spark):
 
     with pytest.raises(ValueError):
         kendall_tau(df, "a", "b", method="bogus")
-    with pytest.raises(ValueError):
-        kendall_tau(df, "a", "b", pair_threshold=0)
 
 
 def test_information_coefficient_turnover(spark):

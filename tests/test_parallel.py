@@ -1,12 +1,14 @@
 """``parallel.map_groups`` keeps the ``groupBy().applyInPandas()``
 contract: checked against Spark's own grouped map on the same function,
-with three-row Arrow batches so that groups straddle batch boundaries."""
+with three-row Arrow batches so that groups straddle batch boundaries.
+``parallel.route_by_length`` sends each group to exactly one side by its
+row count, and no operator exposes a routing bound as an option."""
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from spark_timeseries_spark.parallel import map_groups
+from spark_timeseries_spark.parallel import map_groups, route_by_length
 
 OUT = (
     "n long, k2 long, k1 string, index_ok boolean, loc_min long, "
@@ -140,3 +142,93 @@ def test_null_key_is_one_group_everywhere(spark):
     assert {r.key for r in firsts} == {None, "a"}
     assert all(r.value == 0.0 for r in firsts)
     assert out.count() == 24
+
+
+def _route(df, group_cols, bound, **kw):
+    """(k1, k2) → the set of sides its rows took; every input row comes
+    out once, and a side sees the input columns only (plus ``n_col``)."""
+    def tag(side):
+        return lambda d: d.withColumn("side", F.lit(side))
+
+    out = route_by_length(df, group_cols, bound, tag("short"), tag("long"), **kw)
+    assert out.columns == [*df.columns, "side"]
+    got = out.collect()
+    assert len(got) == df.count()
+    sides = {}
+    for r in got:
+        sides.setdefault((r.k1, r.k2), set()).add(r.side)
+    return {k: "/".join(sorted(v)) for k, v in sides.items()}
+
+
+# (k1, k2) groups of the ``rows`` fixture with their row counts
+_GROUPS = {
+    ("a", 1): 8, ("a", 2): 2, ("b", 1): 1, (None, 1): 4,
+    ("b", None): 3, (None, None): 2, ("none", 1): 3, ("c", 7): 5,
+}
+
+
+def test_route_by_length_splits_at_the_bound(spark, rows):
+    # per k1: a 10, b 4, NULL 6, none 3, c 5 rows; n == bound goes short
+    assert _route(rows, ["k1"], 5) == {
+        ("a", 1): "long", ("a", 2): "long", ("b", 1): "short",
+        ("b", None): "short", (None, 1): "long", (None, None): "long",
+        ("none", 1): "short", ("c", 7): "short",
+    }
+    # two grouping columns (the seasonal Mann-Kendall case)
+    assert _route(rows, ["k1", "k2"], 3) == {
+        g: "short" if n <= 3 else "long" for g, n in _GROUPS.items()
+    }
+
+
+def test_route_by_length_one_global_group_and_empty_side(spark, rows):
+    total = sum(_GROUPS.values())
+    assert set(_route(rows, [], total).values()) == {"short"}
+    assert set(_route(rows, [], total - 1).values()) == {"long"}
+
+
+def test_route_by_length_forced_sides_and_invalid_method(spark, rows):
+    assert set(_route(rows, ["k1"], 5, method="short").values()) == {"short"}
+    assert set(_route(rows, ["k1"], 5, method="long").values()) == {"long"}
+    kernel = _route(rows, ["k1"], 5, method="kernel", sides=("join", "kernel"))
+    assert set(kernel.values()) == {"long"}
+    with pytest.raises(ValueError, match=r"method must be auto\|short\|long"):
+        _route(rows, ["k1"], 5, method="banana")
+    with pytest.raises(ValueError, match=r"auto\|explode\|fft, got short"):
+        _route(rows, ["k1"], 5, method="short", sides=("explode", "fft"))
+
+
+def test_route_by_length_routes_on_a_passed_count(spark, rows):
+    """A passed ``n_col`` is routed on as is (no second count) and stays
+    in the rows each side sees."""
+    n = rows.withColumn("_n", F.when(F.col("k1") == "b", 100).otherwise(1))
+    got = _route(n, ["k1"], 3, n_col="_n")
+    assert got == {g: "long" if g[0] == "b" else "short" for g in _GROUPS}
+
+
+def test_no_routing_bound_options():
+    """Routing bounds are module constants, not parameters: no public
+    operator takes ``fft_threshold``/``kernel_threshold``/
+    ``pair_threshold``, and corr_matrix has one plan (no ``method``)."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    import spark_timeseries_spark.operators as ops
+    from spark_timeseries_spark.tsdf import TimeSeriesDataFrame
+
+    banned = {"fft_threshold", "kernel_threshold", "pair_threshold"}
+    hits, seen = [], 0
+    for info in pkgutil.iter_modules(ops.__path__):
+        mod = importlib.import_module(f"{ops.__name__}.{info.name}")
+        for name, fn in inspect.getmembers(mod, inspect.isfunction):
+            if name.startswith("_") or fn.__module__ != mod.__name__:
+                continue
+            seen += 1
+            forbidden = banned | ({"method"} if name == "corr_matrix" else set())
+            params = set(inspect.signature(fn).parameters) & forbidden
+            hits += [f"{info.name}.{name}({p})" for p in sorted(params)]
+    assert seen > 100
+    assert not hits, hits
+    assert "method" not in inspect.signature(
+        TimeSeriesDataFrame.corr_matrix
+    ).parameters

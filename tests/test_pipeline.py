@@ -399,6 +399,7 @@ def test_connected_components_local_matches_distributed(spark, monkeypatch):
     import pytest
 
     import spark_timeseries_spark.pipeline.dedup as dd
+    import spark_timeseries_spark.pipeline.graph as graph
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20), (30, 30)],
@@ -406,7 +407,7 @@ def test_connected_components_local_matches_distributed(spark, monkeypatch):
     )
     local = {r.id: r.component
              for r in dd.connected_components(pairs).collect()}
-    monkeypatch.setattr(dd, "DRIVER_EDGE_ROWS", 0)
+    monkeypatch.setattr(graph, "DRIVER_EDGE_ROWS", 0)
     dist_df = dd.connected_components(pairs)
     dist = {r.id: r.component for r in dist_df.collect()}
     dist_df.unpersist()
@@ -422,6 +423,34 @@ def test_connected_components_local_matches_distributed(spark, monkeypatch):
     monkeypatch.undo()
     with pytest.raises(RuntimeError, match="did not converge"):
         dd.connected_components(chain, max_iter=2)
+
+
+def test_graph_paths_drop_null_id_pairs(spark, monkeypatch):
+    """A pair with a NULL id is dropped before the driver-local size gate,
+    so connected_components and pagerank return the same NULL-free output
+    on the driver-local path and on the distributed loop."""
+    import spark_timeseries_spark.pipeline.dedup as dd
+    import spark_timeseries_spark.pipeline.graph as graph
+
+    pairs = spark.createDataFrame(
+        [(1, None), (1, 2), (3, 4)], "id_a long, id_b long"
+    )
+
+    def run():
+        comp = dd.connected_components(pairs)
+        got = (
+            sorted((r.id, r.component) for r in comp.collect()),
+            sorted((r.id, r.pr_int) for r in graph.pagerank(pairs).collect()),
+        )
+        comp.unpersist()
+        return got
+
+    local = run()
+    monkeypatch.setattr(graph, "DRIVER_EDGE_ROWS", 0)
+    assert run() == local
+    comps, ranks = local
+    assert comps == [(1, 1), (2, 1), (3, 3), (4, 3)]
+    assert [i for i, _ in ranks] == [1, 2, 3, 4]
 
 
 def test_connected_components_and_representatives(spark):

@@ -737,39 +737,43 @@ def test_ts_features_no_python_bounded_exchanges(spark, grid):
     assert shuffles <= 3, p
 
 
-def test_corr_matrix_compact_broadcasts_pairs_no_sortmerge(spark, grid):
-    """The compact kernel's contract at scale: the per-key collapsed
-    vector table is tiny (K rows), so the pair join must be a broadcast
-    nested-loop on key_a < key_b — never a sort-merge/shuffled join —
-    and the whole thing adds one exchange (the per-key collapse) plus
-    the final single-partition agg, with zero Python."""
-    out = rolling.corr_matrix(grid, 3, method="compact")
-    shuffles, _, p = _counts(out)
-    assert "BroadcastNestedLoopJoin" in p
-    assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p
-    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-    # per-key collapse + AQE-coalesced agg + the r14 cores-scaled spread
-    # of the pair-join stream side (the CPU-bound masked fold must not
-    # ride a byte-coalesced single partition)
-    assert shuffles <= 3
-
-
 def test_corr_matrix_join_no_postjoin_exchange(spark, grid):
     """r14 optimization pin for the default join kernel: the location
-    equi-join must BROADCAST the right series table (same K×T envelope
-    the compact kernel broadcasts) and the (key_a, key_b) moment
+    equi-join must BROADCAST the right K×T series table and the
+    (key_a, key_b) moment
     aggregate must reuse the stream side's explicit key_a partitioning —
     NO exchange between the join and the aggregate, so the exploded
     O(T·K²) joined rows are never shuffled. The only hash exchanges
     allowed are inside the grid build + the one cores-scaled spread of
     the stream side."""
-    out = rolling.corr_matrix(grid, 3, method="join")
+    out = rolling.corr_matrix(grid, 3)
     p = _plan(out)
     assert "BroadcastHashJoin" in p, p
     assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p, p
     # the aggregate must sit directly on the join output: no
     # "Exchange hashpartitioning(key_a..., key_b...)" anywhere
     assert not re.search(r"Exchange hashpartitioning\(key_a[^)]*key_b", p), p
+
+
+def test_est_bytes_scaled_unknown_estimate_is_unknown(spark):
+    """A Project over an RDD source scales the Long.MaxValue "unknown"
+    size by its column-width ratio, landing below 2^62; _est_bytes must
+    still read it as unknown (0, keep the broadcast), not as a real
+    size past the corr_matrix broadcast budget."""
+    from spark_timeseries_spark.operators.rolling import _est_bytes
+
+    rdd = spark.sparkContext.parallelize(
+        [(i, f"k{i % 5}", float(i), i * 0.5, "x", "y", "z")
+         for i in range(100)]
+    )
+    df = spark.createDataFrame(
+        rdd,
+        "a long, key string, loc double, value double, "
+        "s1 string, s2 string, s3 string",
+    ).select("key", "loc", "value")
+    est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    assert 1 << 50 <= est < 1 << 62, est
+    assert _est_bytes(df) == 0
 
 
 def test_corr_matrix_join_broadcast_guard_fallback(spark, grid, tmp_path):
@@ -788,14 +792,14 @@ def test_corr_matrix_join_broadcast_guard_fallback(spark, grid, tmp_path):
     fgrid = spark.read.parquet(path)
     fast = {
         (r.key_a, r.key_b): (r.n_overlap, r.corr)
-        for r in rolling.corr_matrix(fgrid, 3, method="join").collect()
+        for r in rolling.corr_matrix(fgrid, 3).collect()
     }
     spark.conf.set(_CORR_BCAST_CONF, "1")
     # a table past the guard is also past the planner's own 10 MB
     # auto-broadcast threshold; emulate that for the KB-sized fixture
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        out = rolling.corr_matrix(fgrid, 3, method="join")
+        out = rolling.corr_matrix(fgrid, 3)
         p = _plan(out)
         assert "BroadcastHashJoin" not in p, p
         slow = {
