@@ -1123,10 +1123,7 @@ def _q_rebase_uniform(spark, sf_dir):
     from spark_timeseries_spark.operators import align as align_ops
 
     shifted = sts.uniform("2024-01-05", 31, sts.DayFrequency(1))
-    # keys from the raw source scan — rebuilding them from the daily-grid
-    # pipeline would re-execute the whole resample plan a second time
-    keys = events_observations(spark, sf_dir).select("key")
-    return align_ops.with_index(_daily_grid(spark, sf_dir), shifted, keys_df=keys)
+    return align_ops.with_index(_daily_grid(spark, sf_dir), shifted)
 
 
 def _q_rebase_irregular(spark, sf_dir):
@@ -1135,8 +1132,7 @@ def _q_rebase_irregular(spark, sf_dir):
     from spark_timeseries_spark.operators import align as align_ops
 
     idx = sts.irregular(_IRREG_INSTANTS)
-    keys = events_observations(spark, sf_dir).select("key")
-    return align_ops.with_index(_daily_grid(spark, sf_dir), idx, keys_df=keys)
+    return align_ops.with_index(_daily_grid(spark, sf_dir), idx)
 
 
 def _q_diff_by_frequency(spark, sf_dir):
@@ -2462,7 +2458,7 @@ def _q_rebase_hybrid(spark, sf_dir):
     ``RebaseSuite.scala:31-200``'s hybrid cases): uniform[Jan 3..7] ⊕
     irregular[10,12,15] ⊕ uniform[Jan 20..23] with prefix-sum loc
     offsets. Exercises ``HybridDateTimeIndex.to_df`` (sub-index union
-    with offsets) through the same single join plan as the
+    with offsets) through the same single conform plan as the
     uniform/irregular rebases — the reference's per-pair rebaser
     specializations collapse into one declarative path."""
     from spark_timeseries_spark.operators import align as align_ops
@@ -2474,8 +2470,7 @@ def _q_rebase_hybrid(spark, sf_dir):
             sts.uniform("2024-01-20", 4, sts.DayFrequency(1)),
         ]
     )
-    keys = events_observations(spark, sf_dir).select("key")
-    return align_ops.with_index(_daily_grid(spark, sf_dir), idx, keys_df=keys)
+    return align_ops.with_index(_daily_grid(spark, sf_dir), idx)
 
 
 def _q_union_series(spark, sf_dir):

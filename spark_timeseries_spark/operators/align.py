@@ -13,9 +13,13 @@ Spark-first design: alignment is a **join against the index**, not a
 per-element lookup loop. For uniform indices the join disappears entirely —
 ``loc`` is O(1) epoch arithmetic inside codegen. For irregular/hybrid indices
 we join the (small) index DataFrame; Catalyst broadcasts it automatically.
-Densification (materializing missing cells as NULL) is a key×index grid left
-join — the grid is exactly the size of the reference's dense vectors, and it
-shuffles once on (key, loc). The reference's four hand-specialized rebaser
+Densification (materializing missing cells as NULL) is ``resample._conform``,
+the one conform step this module shares with ``resample``: one
+``groupBy(key, loc)`` over the unfiltered observations (one scan), then a
+per-key ``loc → value`` map crossed with the broadcast index — or, above
+``MAP_GRID_MAX_INSTANTS`` instants, a key×index left join keyed from that
+same aggregate. The grid is exactly the size of the reference's dense
+vectors. The reference's four hand-specialized rebaser
 code paths (``TimeSeriesUtils.scala:78-102``) all collapse into this single
 declarative plan; Catalyst picks the physical strategy.
 """
@@ -25,20 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..frequencies import DayFrequency, DurationFrequency, WeekFrequency
 from ..index import DateTimeIndex, UniformDateTimeIndex
-from .resample import MAP_GRID_MAX_INSTANTS
-
-
-def _uniform_step_us(index: UniformDateTimeIndex) -> int | None:
-    f = index.freq
-    if isinstance(f, DurationFrequency):
-        return f.nanos // 1000
-    if isinstance(f, DayFrequency):
-        return f.days * 86_400_000_000
-    if isinstance(f, WeekFrequency):
-        return f.weeks * 7 * 86_400_000_000
-    return None
+from .resample import _conform, _uniform_step_us
 
 
 def loc_expr(ts: Column, index: DateTimeIndex) -> Column | None:
@@ -84,7 +76,6 @@ def from_observations(
     key_col: str = "key",
     value_col: str = "value",
     dense: bool = True,
-    keys_df: DataFrame | None = None,
     duplicates: str = "max",
 ) -> DataFrame:
     """Conform a long observations table to ``index``: returns the canonical
@@ -101,17 +92,17 @@ def from_observations(
     order, which has no distributed analogue — rows in a shuffled group
     carry the same timestamp, so any "last one wins" (F.last over a
     groupBy) is partition-order roulette; the extremum is the
-    deterministic tiebreak.
+    deterministic tiebreak. Duplicates outside the index never raise.
 
-    ``keys_df``: optional one-column key universe for the dense grid. By
-    default keys are derived from ``df`` itself — which re-executes ``df``'s
-    whole plan a second time when ``df`` is an expensive pipeline. Callers
-    that know a cheap key source (the raw source table, a dimension table)
-    should pass it; this is the same driver-side-keys problem the reference
-    has at ``TimeSeriesRDD.scala:56``, solved distributively."""
+    Key universe and NULL-key contract (``dense=True``): every key of
+    ``df`` gets the full grid, including a key whose observations all
+    fall outside the index (an all-NULL series). The keys come from the
+    same single pass that aggregates the cells — ``df`` is scanned once.
+    A NULL key is one series with its own cells, whatever the index
+    length."""
     if duplicates == "fail":
         agg_value = F.when(
-            F.count(F.lit(1)) > 1,
+            (F.count(F.lit(1)) > 1) & F.col("loc").isNotNull(),
             F.raise_error(
                 F.concat(
                     F.lit("duplicate observations for (key, instant): ("),
@@ -136,56 +127,7 @@ def from_observations(
         ),
         index,
     )
-    if not dense:
-        obs = (
-            located.where(F.col("loc").isNotNull())
-            .groupBy("key", "loc")
-            .agg(agg_value.alias("value"))
-        )
-        idx = index.to_df(df.sparkSession)
-        return obs.join(F.broadcast(idx), "loc").select("key", "loc", "ts", "value")
-    if (
-        keys_df is None
-        and duplicates != "fail"
-        and len(index) <= MAP_GRID_MAX_INSTANTS
-    ):
-        # One-pass dense grid (see resample.resample): aggregate WITHOUT
-        # the loc filter so all-out-of-index keys keep their all-NULL
-        # series, fold each key's cells into a loc→value map, emit
-        # per_key × broadcast(index) with a map lookup. One data pass, no
-        # second keys scan, no (key, loc) grid join. duplicates="fail" is
-        # routed to the classic path below: its raise_error aggregate
-        # must never see the unfiltered loc-NULL group (out-of-index
-        # duplicates do not raise, by contract).
-        binned_all = located.groupBy("key", "loc").agg(
-            agg_value.alias("value")
-        )
-        per_key = binned_all.groupBy("key").agg(
-            F.map_from_entries(
-                F.collect_list(
-                    F.when(
-                        F.col("loc").isNotNull(),
-                        F.struct("loc", "value"),
-                    )
-                )
-            ).alias("_cells")
-        )
-        grid = per_key.crossJoin(F.broadcast(index.to_df(df.sparkSession)))
-        return grid.select(
-            "key", "loc", "ts", F.col("_cells")[F.col("loc")].alias("value")
-        )
-    obs = (
-        located.where(F.col("loc").isNotNull())
-        .groupBy("key", "loc")
-        .agg(agg_value.alias("value"))
-    )
-    keys = (
-        keys_df.select(F.col(keys_df.columns[0]).cast("string").alias("key"))
-        if keys_df is not None
-        else df.select(F.col(key_col).cast("string").alias("key"))
-    ).distinct()
-    grid = keys.crossJoin(F.broadcast(index.to_df(df.sparkSession)))
-    return grid.join(obs, ["key", "loc"], "left").select("key", "loc", "ts", "value")
+    return _conform(located, index, agg_value, "key", "value", dense)
 
 
 def with_index(
@@ -195,28 +137,25 @@ def with_index(
     ts_col: str = "ts",
     value_col: str = "value",
     dense: bool = True,
-    keys_df: DataFrame | None = None,
 ) -> DataFrame:
     """Rebase a conformed frame onto a new index (``TimeSeriesRDD.scala:554-563``):
     values at instants present in both indices survive; instants only in the
     new index become NULL. Replaces all four specialized rebaser paths of
-    ``TimeSeriesUtils.scala:78-221`` with one join plan. See
-    :func:`from_observations` for ``keys_df``.
+    ``TimeSeriesUtils.scala:78-221`` with one plan: this is
+    :func:`from_observations` over the conformed rows.
 
-    The default key universe is derived from ``df`` BEFORE the null filter:
-    a series whose values are entirely NULL over the old index (offline
-    sensor) must survive the rebase as an all-NULL row set — the reference
-    rebasers keep every series — not silently vanish from the grid."""
-    if keys_df is None:
-        keys_df = df.select(F.col(key_col))
+    Every series survives — the reference rebasers keep every series. One
+    whose values are all NULL over the old index (offline sensor) comes
+    back all-NULL, because ``max`` over NULLs is NULL; a NULL key is one
+    series, as in :func:`from_observations`. With ``dense=False`` a NULL
+    cell of ``df`` at a shared instant stays a NULL row."""
     return from_observations(
-        df.where(F.col(value_col).isNotNull()),
+        df,
         new_index,
         ts_col=ts_col,
         key_col=key_col,
         value_col=value_col,
         dense=dense,
-        keys_df=keys_df,
     )
 
 

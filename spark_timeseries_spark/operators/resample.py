@@ -28,9 +28,15 @@ broadcast as a literal and counted with ``F.filter``+``F.size`` — O(m) JVM
 work per row, zero Python, still shuffle-free (use only when the target index
 is modest; resampling targets almost always are).
 
-The aggregation itself is one ``groupBy(key, loc)`` — a single shuffle —
-followed by an optional left join from the key×stamp grid to materialize
-empty windows as NULL (matching the reference's NaN).
+The aggregation and the dense grid are built by :func:`_conform`, the one
+conform step shared with ``align.from_observations``/``with_index``
+(``TimeSeriesRDD.scala:694-745`` and ``:554-563`` conform every series to
+one index the same way). One ``groupBy(key, loc)`` over the unfiltered
+input — a single scan — then, up to :data:`MAP_GRID_MAX_INSTANTS`
+instants, a second aggregate folds each key's cells into a
+``loc → value`` map that is crossed with the broadcast index; above the
+bound the grid is a key×index left join whose keys come from that same
+aggregate. Empty windows come out NULL (the reference's NaN).
 """
 
 from __future__ import annotations
@@ -41,10 +47,9 @@ from pyspark.sql import functions as F
 from ..frequencies import DayFrequency, DurationFrequency, WeekFrequency
 from ..index import DateTimeIndex, UniformDateTimeIndex
 
-#: index-length bound for the one-pass map-based dense grid in
-#: :func:`resample` / ``align.from_observations`` — one key's cell map must
-#: stay row-sized; longer indices fall back to the classic key×instant
-#: grid join, which scales to billions of instants.
+#: index-length bound for the map-based dense grid of :func:`_conform` —
+#: one key's cell map must stay row-sized; longer indices take the
+#: key×instant grid join, which scales to billions of instants.
 MAP_GRID_MAX_INSTANTS = 65536
 
 
@@ -56,16 +61,23 @@ def _clamp(c: Column, lo: int, hi: int) -> Column:
     return F.greatest(F.lit(lo), F.least(F.lit(hi), c))
 
 
-def _counts_uniform(ts: Column, index: UniformDateTimeIndex):
-    """(n_lt, n_le) via O(1) epoch-micros arithmetic."""
+def _uniform_step_us(index: UniformDateTimeIndex) -> int | None:
+    """Fixed step of a uniform index in microseconds; None for calendar
+    frequencies (months, years, business days) that have no fixed step."""
     f = index.freq
     if isinstance(f, DurationFrequency):
-        step = f.nanos // 1000
-    elif isinstance(f, DayFrequency):
-        step = f.days * 86_400_000_000
-    elif isinstance(f, WeekFrequency):
-        step = f.weeks * 7 * 86_400_000_000
-    else:
+        return f.nanos // 1000
+    if isinstance(f, DayFrequency):
+        return f.days * 86_400_000_000
+    if isinstance(f, WeekFrequency):
+        return f.weeks * 7 * 86_400_000_000
+    return None
+
+
+def _counts_uniform(ts: Column, index: UniformDateTimeIndex):
+    """(n_lt, n_le) via O(1) epoch-micros arithmetic."""
+    step = _uniform_step_us(index)
+    if step is None:
         return None
     m = index.size
     start_us = index.start.value // 1000
@@ -107,6 +119,56 @@ def bucket_loc(
     return F.when(loc < m, loc)
 
 
+def _conform(
+    located: DataFrame,
+    index: DateTimeIndex,
+    agg: Column,
+    key_col: str,
+    value_col: str,
+    dense: bool,
+) -> DataFrame:
+    """Aggregate ``located`` (observations carrying an index ``loc``, NULL
+    off the index) into ``(key, loc, ts, value)`` cells on ``index``.
+
+    ``dense=False`` keeps only the aggregated in-index cells. ``dense=True``
+    emits one row per key × instant, NULL where a key has no cell, in one
+    ``groupBy(key, loc)`` over the UNFILTERED input: a key whose
+    observations all fall outside the index still owns a (loc NULL) group
+    and survives as an all-NULL series without a second scan for the key
+    universe. ``agg`` is evaluated on that group too and its result is
+    dropped, so an aggregate with a side effect (``raise_error``) must not
+    trip on it: gate the raise on ``F.col("loc").isNotNull()``
+    (``duplicates="fail"`` does) or mask the out-of-index rows first
+    (:func:`resample` does).
+
+    A NULL key is one series, like any other key: the map grid groups it,
+    and the join grid matches it with null-safe equality.
+    """
+    idx_df = F.broadcast(index.to_df(located.sparkSession))
+    in_index = F.col("loc").isNotNull()
+    if not dense:
+        cells = located.where(in_index).groupBy(key_col, "loc").agg(
+            agg.alias(value_col)
+        )
+        return cells.join(idx_df, "loc").select(key_col, "loc", "ts", value_col)
+    binned = located.groupBy(key_col, "loc").agg(agg.alias(value_col))
+    if len(index) <= MAP_GRID_MAX_INSTANTS:
+        per_key = binned.groupBy(key_col).agg(
+            F.map_from_entries(
+                F.collect_list(F.when(in_index, F.struct("loc", value_col)))
+            ).alias("_cells")
+        )
+        return per_key.crossJoin(idx_df).select(
+            key_col, "loc", "ts", F.col("_cells")[F.col("loc")].alias(value_col)
+        )
+    cells = binned.where(in_index).select(
+        F.col(key_col).alias("_key"), F.col("loc").alias("_loc"), value_col
+    )
+    grid = binned.select(key_col).distinct().crossJoin(idx_df)
+    on = F.col(key_col).eqNullSafe(F.col("_key")) & (F.col("loc") == F.col("_loc"))
+    return grid.join(cells, on, "left").select(key_col, "loc", "ts", value_col)
+
+
 def resample(
     df: DataFrame,
     target_index: DateTimeIndex,
@@ -117,90 +179,39 @@ def resample(
     ts_col: str = "ts",
     value_col: str = "value",
     dense: bool = True,
-    keys_df: DataFrame | None = None,
 ) -> DataFrame:
     """Downsample observations onto ``target_index``.
 
     ``aggr``: name of a builtin aggregate ("avg","sum","min","max","count",
     "first","last", ...) or a full Column aggregate expression over
-    ``value_col``. ``dense=True`` reinserts empty windows as NULL values via a
-    key×stamp grid join (reference: NaN, ``Resample.scala:113-115``).
+    ``value_col``. ``dense=True`` reinserts empty windows as NULL values
+    (reference: NaN, ``Resample.scala:113-115``); every key of ``df`` gets
+    the full grid, including a key none of whose observations falls in a
+    window.
 
-    ``keys_df``: optional cheap key universe for the dense grid — same
-    escape hatch as ``align.from_observations``: the default derives keys
-    from ``df`` itself, which re-executes ``df``'s whole plan a second
-    time when it is an expensive pipeline.
+    NULL-key contract: observations with a NULL key form one series, with
+    its own aggregated cells, whatever the index length. A Column
+    aggregate sees each observation outside every window as a row whose
+    columns are all NULL except ``key_col``, so a ``raise_error`` validator
+    in it never trips on a value the grid drops.
 
     Returns ``(key, loc, ts, value)``.
     """
-    loc = bucket_loc(F.col(ts_col), target_index, closed_right, stamp_right)
-    agg_expr = (
-        getattr(F, aggr)(value_col) if isinstance(aggr, str) else aggr
-    ).alias(value_col)
-    if not dense:
-        binned = (
-            df.withColumn("loc", loc)
-            .where(F.col("loc").isNotNull())
-            .groupBy(key_col, "loc")
-            .agg(agg_expr)
-        )
-        idx_df = F.broadcast(target_index.to_df(df.sparkSession))
-        return binned.join(idx_df, "loc").select(key_col, "loc", "ts", value_col)
-    if (
-        keys_df is None
-        and isinstance(aggr, str)
-        and len(target_index) <= MAP_GRID_MAX_INSTANTS
-    ):
-        # (caller-supplied Column aggregates are routed to the classic
-        # path: they may embed side-effecting expressions — raise_error
-        # validators — that must not see the unfiltered loc-NULL group)
-        # One-pass dense grid: aggregate WITHOUT the loc filter (so a key
-        # whose observations all fall outside the index still owns a
-        # group and survives as an all-NULL series — the documented key
-        # universe), fold each key's cells into a loc→value map, and
-        # emit the grid as per_key × broadcast(index) with a map lookup.
-        # Removes the second full-data scan (the old keys-from-df
-        # distinct) and the (key, loc) grid join + its exchanges; value
-        # per cell is the identical aggregate or NULL, exactly the old
-        # left join. Bounded by index length — a map of the whole index
-        # per key must stay row-sized; past the bound the classic
-        # grid-join path below handles billion-instant indices.
-        binned_all = df.withColumn("loc", loc).groupBy(key_col, "loc").agg(
-            agg_expr
-        )
-        per_key = binned_all.groupBy(key_col).agg(
-            F.map_from_entries(
-                F.collect_list(
-                    F.when(
-                        F.col("loc").isNotNull(),
-                        F.struct("loc", value_col),
-                    )
-                )
-            ).alias("_cells")
-        )
-        idx_df = F.broadcast(target_index.to_df(df.sparkSession))
-        return per_key.crossJoin(idx_df).select(
-            key_col,
-            "loc",
-            "ts",
-            F.col("_cells")[F.col("loc")].alias(value_col),
-        )
-    binned = (
-        df.withColumn("loc", loc)
-        .where(F.col("loc").isNotNull())
-        .groupBy(key_col, "loc")
-        .agg(agg_expr)
+    agg_expr = getattr(F, aggr)(value_col) if isinstance(aggr, str) else aggr
+    located = df.withColumn(
+        "loc", bucket_loc(F.col(ts_col), target_index, closed_right, stamp_right)
     )
-    keys = (
-        keys_df.select(F.col(keys_df.columns[0]).alias(key_col))
-        if keys_df is not None
-        else df.select(key_col)
-    ).distinct()
-    idx_df = F.broadcast(target_index.to_df(df.sparkSession))
-    grid = keys.crossJoin(idx_df)
-    return grid.join(binned, [key_col, "loc"], "left").select(
-        key_col, "loc", "ts", value_col
+    # a caller's aggregate is also evaluated on each key's out-of-window
+    # group: masking those rows keeps a validator in it from tripping on
+    # a value the grid drops
+    in_window = F.col("loc").isNotNull()
+    located = located.select(
+        *[
+            F.col(c) if c in (key_col, "loc") else F.when(in_window, F.col(c)).alias(c)
+            for c in located.columns
+        ]
     )
+    return _conform(located, target_index, agg_expr, key_col, value_col, dense)
 
 
 def downsample(

@@ -61,12 +61,20 @@ def pq_train(
     Each subspace trains independently on the sliced vectors."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     from spark_timeseries_spark.pipeline.clustering import kmeans_fit
 
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     sub = dim // m
 
+    # inheritable_thread_target copies the caller's local properties (job
+    # group, description, scheduler pool) and job tags into each pool
+    # thread: under pinned-thread mode every Python thread owns a fresh JVM
+    # thread that would otherwise run the fits' jobs outside the caller's
+    # job group
+    @inheritable_thread_target(df.sparkSession)
     def fit_subspace(s: int) -> list[list[float]]:
         sliced = df.select(
             F.col(id_col).alias("vec_id"),

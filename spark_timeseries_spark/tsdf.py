@@ -48,7 +48,9 @@ class TimeSeriesDataFrame:
     ) -> "TimeSeriesDataFrame":
         """``timeSeriesRDDFromObservations`` (``TimeSeriesRDD.scala:694-745``).
         ``duplicates``: "max" (default) / "min" / "fail" — see
-        :func:`operators.align.from_observations`."""
+        :func:`operators.align.from_observations`. Every key of ``df`` gets
+        the full grid, including one with no observation on ``index``
+        (all NULL); a NULL key is one series with its own cells."""
         return cls(
             align.from_observations(
                 df, index, ts_col, key_col, value_col, duplicates=duplicates

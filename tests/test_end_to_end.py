@@ -420,6 +420,90 @@ def test_with_index_keeps_all_null_series(spark):
     assert out.where("key = 'offline' AND value IS NOT NULL").count() == 0
 
 
+def _day(i):
+    return (pd.Timestamp("2024-01-01") + pd.Timedelta(days=i)).to_pydatetime()
+
+
+@pytest.mark.parametrize("kind", ["uniform", "irregular"])
+@pytest.mark.parametrize("entry", ["resample", "from_observations", "with_index"])
+def test_dense_grid_contract_both_sides_of_the_gate(spark, monkeypatch, entry, kind):
+    """Every dense entry point gives the same rows on the map grid (default
+    bound) and on the key×index join (bound patched to 0). A NULL key is
+    one series with its own cells; a key observed only off the index is an
+    all-NULL series; nothing off the index trips a validator — neither an
+    off-index duplicate under duplicates="fail" nor a raise_error inside a
+    Column aggregate — while an in-index duplicate still raises."""
+    from pyspark.errors import SparkRuntimeException
+
+    from spark_timeseries_spark import irregular
+    from spark_timeseries_spark.operators import align, resample as resample_ops
+
+    idx = (
+        uniform("2024-01-01", 5, DayFrequency(1))
+        if kind == "uniform"
+        else irregular(["2024-01-01", "2024-01-02", "2024-01-03", "2024-01-08"])
+    )
+    # day -5 and day -3 lie before both indices: off the index for the
+    # conform entry points and before the first window for resample
+    cells = {("a", 0): 1.0, ("a", 2): 2.0, (None, 1): 5.0}
+    off_index = [("a", -5, 1000.0), ("out", -3, 7.0), ("out", -3, 8.0)]
+    if entry == "with_index":
+        # a conformed frame over days -5..2, NULL where nothing was observed
+        vals = {**cells, **{(k, d): v for k, d, v in off_index[:2]}}
+        df = spark.createDataFrame(
+            [
+                (k, d + 5, _day(d), vals.get((k, d)))
+                for k in ("a", None, "out")
+                for d in range(-5, 3)
+            ],
+            "key string, loc long, ts timestamp, value double",
+        )
+    else:
+        df = spark.createDataFrame(
+            [(_day(d), k, v) for (k, d), v in cells.items()]
+            + [(_day(d), k, v) for k, d, v in off_index],
+            "ts timestamp, key string, value double",
+        )
+    validator = F.max(
+        F.when(
+            F.col("value") >= 1000.0,
+            F.raise_error(F.lit("validator tripped")).cast("double"),
+        ).otherwise(F.col("value"))
+    )
+
+    def run(frame):
+        if entry == "resample":
+            out = resample_ops.resample(frame, idx, validator)
+        elif entry == "from_observations":
+            out = align.from_observations(frame, idx, duplicates="fail")
+        else:
+            out = align.with_index(frame, idx)
+        return sorted(map(tuple, out.collect()), key=repr)
+
+    instants = list(idx.to_pandas())
+    want = sorted(
+        (
+            (k, loc, cells.get((k, (ts - pd.Timestamp("2024-01-01")).days)))
+            for k in ("a", None, "out")
+            for loc, ts in enumerate(instants)
+        ),
+        key=repr,
+    )
+    sides = {}
+    for bound in (resample_ops.MAP_GRID_MAX_INSTANTS, 0):
+        monkeypatch.setattr(resample_ops, "MAP_GRID_MAX_INSTANTS", bound)
+        rows = run(df)
+        assert sorted(((k, loc, v) for k, loc, _, v in rows), key=repr) == want
+        sides[bound] = rows
+        if entry == "from_observations":
+            dup = df.unionByName(
+                spark.createDataFrame([(_day(0), "a", 3.0)], df.schema)
+            )
+            with pytest.raises(SparkRuntimeException, match="duplicate obs"):
+                run(dup)
+    assert sides[0] == sides[resample_ops.MAP_GRID_MAX_INSTANTS]
+
+
 def test_to_instants_width_guard(spark, obs, index):
     """Pivot-width guard: under the bound the pivot layout is produced
     (one double column per key); above it the map-column layout comes

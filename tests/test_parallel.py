@@ -208,7 +208,8 @@ def test_route_by_length_routes_on_a_passed_count(spark, rows):
 def test_no_routing_bound_options():
     """Routing bounds are module constants, not parameters: no public
     operator takes ``fft_threshold``/``kernel_threshold``/
-    ``pair_threshold``, and corr_matrix has one plan (no ``method``)."""
+    ``pair_threshold``, corr_matrix has one plan (no ``method``), and the
+    dense grid takes its keys from its own input (no ``keys_df``)."""
     import importlib
     import inspect
     import pkgutil
@@ -216,7 +217,7 @@ def test_no_routing_bound_options():
     import spark_timeseries_spark.operators as ops
     from spark_timeseries_spark.tsdf import TimeSeriesDataFrame
 
-    banned = {"fft_threshold", "kernel_threshold", "pair_threshold"}
+    banned = {"fft_threshold", "kernel_threshold", "pair_threshold", "keys_df"}
     hits, seen = [], 0
     for info in pkgutil.iter_modules(ops.__path__):
         mod = importlib.import_module(f"{ops.__name__}.{info.name}")

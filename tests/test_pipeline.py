@@ -1329,6 +1329,24 @@ def test_pq_encode_matches_numpy(spark, vectors):
         pq_train(vectors, dim=8, m=3)
 
 
+def test_pq_train_jobs_keep_the_callers_job_group(spark, vectors):
+    """pq_train's subspace fits run on pool threads; under pinned-thread
+    mode each owns a fresh JVM thread, so the caller's job group reaches
+    their jobs only through ``inheritable_thread_target``."""
+    from spark_timeseries_spark.pipeline.pq import pq_train
+
+    sc = spark.sparkContext
+    group = "pq-train-job-group"
+    sc.setJobGroup(group, "pq_train under a caller job group")
+    try:
+        pq_train(vectors, dim=8, m=2, k=4, max_iter=2)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert sc.statusTracker().getJobIdsForGroup(group)
+
+
 def test_pq_train_parallel_matches_sequential(spark, vectors):
     """pq_train fits its subspaces from concurrent threads; the codebooks
     must equal exactly what per-subspace kmeans_fit calls produce

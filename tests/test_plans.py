@@ -247,10 +247,29 @@ def test_resample_is_one_shuffle_plus_broadcasts(spark):
     idx = sts.uniform("2024-01-01", 31, sts.DayFrequency(1))
     out = resample_ops.resample(obs, idx, "avg")
     shuffles, sorts, p = _counts(out)
-    # one shuffle for the (key, loc) aggregate + one for distinct keys
-    # (each may appear as partial+final pair pre-AQE); join sides broadcast
-    assert shuffles <= 4, p
+    # one shuffle for the (key, loc) aggregate + one to fold each key's
+    # cells into its loc→value map; the index side broadcasts
+    assert shuffles == 2, p
     assert "BroadcastExchange" in p
+
+
+def test_rebase_of_resample_grid_scans_source_once(spark):
+    """with_index over a parquet-backed resample grid takes its key
+    universe from its own aggregate: the source is scanned once and no
+    key×instant grid join is shuffled (uniform and irregular index)."""
+    from spark_timeseries_spark.operators import align
+
+    obs = events_observations(spark, SF)
+    grid = resample_ops.resample(
+        obs, sts.uniform("2024-01-01", 31, sts.DayFrequency(1)), "avg"
+    )
+    for idx in (
+        sts.uniform("2024-01-05", 31, sts.DayFrequency(1)),
+        sts.irregular(["2024-01-02", "2024-01-09", "2024-01-20"]),
+    ):
+        p = _plan(align.with_index(grid, idx))
+        assert p.count("FileScan") == 1, p
+        assert "SortMergeJoin" not in p, p
 
 
 def test_uniform_bucket_loc_is_pure_arithmetic(spark):
