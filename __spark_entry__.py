@@ -656,7 +656,7 @@ def _q_ngram_jaccard_pairs(spark, sf_dir):
     sigs = docs.select(
         "doc_id",
         F.transform(
-            dd.shingles(F.col("text"), 3), lambda s: F.xxhash64(s)
+            dd.shingles("text", 3), lambda s: F.xxhash64(s)
         ).alias("hs"),
     ).persist()
     sh = sigs.select("doc_id", F.explode("hs").alias("sh"))
@@ -716,7 +716,7 @@ def _q_lang_id(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
-        "doc_id", text_ops.language_id(F.col("text")).alias("pred_lang")
+        "doc_id", text_ops.language_id("text").alias("pred_lang")
     )
 
 
@@ -806,7 +806,7 @@ def _q_dedup_components(spark, sf_dir):
     sigs = docs.select(
         "doc_id",
         F.transform(
-            dd.shingles(F.col("text"), 3), lambda s: F.xxhash64(s)
+            dd.shingles("text", 3), lambda s: F.xxhash64(s)
         ).alias("hs"),
     ).persist()
     sh = sigs.select("doc_id", F.explode("hs").alias("sh"))
@@ -4625,7 +4625,7 @@ def _q_dup_cluster_stats(spark, sf_dir):
     sigs = docs.select(
         "doc_id",
         F.transform(
-            dd.shingles(F.col("text"), 3), lambda s: F.xxhash64(s)
+            dd.shingles("text", 3), lambda s: F.xxhash64(s)
         ).alias("hs"),
     ).persist()
     sh = sigs.select("doc_id", F.explode("hs").alias("sh"))
@@ -4881,7 +4881,7 @@ def _q_reliability(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
-        quality_score_col(F.col("text")).alias("score"),
+        quality_score_col("text").alias("score"),
         (F.col("lang") == "en").alias("is_en"),
     )
     out = reliability_bins(scored, "score", "is_en", bins=10)
@@ -5016,7 +5016,7 @@ def _q_source_rank_gap(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
-        "source", quality_score_col(F.col("text")).alias("q")
+        "source", quality_score_col("text").alias("q")
     )
     out = group_rank_gap(scored, "q")
     return out.select(
@@ -5264,7 +5264,7 @@ def _q_dedup_canonical(spark, sf_dir):
     sigs = docs.select(
         "doc_id",
         F.transform(
-            dd.shingles(F.col("text"), 3), lambda s: F.xxhash64(s)
+            dd.shingles("text", 3), lambda s: F.xxhash64(s)
         ).alias("hs"),
     ).persist()
     sh = sigs.select("doc_id", F.explode("hs").alias("sh"))

@@ -10,8 +10,11 @@ from .hashing import (  # noqa: F401
     hash60_seeded_sql,
     hash60_sql,
     hashed,
+    hashed_sql,
     hashed_with_seed,
+    hashed_with_seed_sql,
 )
+from .sqltext import expr_over, ident, literal  # noqa: F401
 from .datetime import (  # noqa: F401
     business_day_difference,
     iso_dow,

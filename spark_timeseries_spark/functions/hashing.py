@@ -13,12 +13,20 @@ purposes (p ≈ n²/2⁶¹).
 Operators that hash take ``hash_fn ∈ {"xxhash64", "md5_60"}``; the default is
 the fast path, the md5 mode is what ``__spark_entry__`` queries use so the
 DuckDB oracles can replay the exact same pipeline.
+
+Each hash has three forms: the Column builder (:func:`hashed`,
+:func:`hashed_with_seed`), its Spark SQL text twin for builders that parse
+one wide expression (:func:`hashed_sql`, :func:`hashed_with_seed_sql`; see
+:mod:`.sqltext`), and the DuckDB twin the oracles use (:func:`hash60_sql`,
+:func:`hash60_seeded_sql`).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from .sqltext import literal
 
 #: 2**60 as a double — the divisor for hash-to-uniform-[0,1) conversion.
 HASH60_SCALE = float(1 << 60)
@@ -47,6 +55,26 @@ def hashed_with_seed(col: Column, seed: int, hash_fn: str = "xxhash64") -> Colum
         return F.xxhash64(col, F.lit(seed))
     if hash_fn == "md5_60":
         return hash60(F.concat(col, F.lit("\x01"), F.lit(str(seed))))
+    raise ValueError(f"unknown hash_fn {hash_fn!r}")
+
+
+def hashed_sql(expr: str, hash_fn: str = "xxhash64") -> str:
+    """Spark SQL text of :func:`hashed` over the SQL expression ``expr``."""
+    if hash_fn in ("xxhash64", "oph"):
+        return f"xxhash64({expr})"
+    if hash_fn == "md5_60":
+        return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
+    raise ValueError(f"unknown hash_fn {hash_fn!r}")
+
+
+def hashed_with_seed_sql(expr: str, seed: int, hash_fn: str = "xxhash64") -> str:
+    """Spark SQL text of :func:`hashed_with_seed` over ``expr``."""
+    if hash_fn == "xxhash64":
+        return f"xxhash64({expr}, {int(seed)})"
+    if hash_fn == "md5_60":
+        return hashed_sql(
+            f"concat({expr}, {literal(chr(1))}, {literal(str(seed))})", hash_fn
+        )
     raise ValueError(f"unknown hash_fn {hash_fn!r}")
 
 

@@ -28,6 +28,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import literal
 from .dedup import dedup_exact
 from .text import gopher_repetition_filter, language_id, quality_score_col
 
@@ -114,16 +115,15 @@ def pretrain_clean(
     from .dedup import dedup_paragraphs, remove_dup_spans
     from .text import domain_blocklist, phrase_blocklist
 
-    t = F.col(text_col)
     gated = df
     if blocklist:
         gated = phrase_blocklist(gated, blocklist, text_col, id_col)
     if blocked_domains:
         gated = domain_blocklist(gated, blocked_domains, text_col, id_col)
     scored = (
-        gated.where(language_id(t) == lang)
-        .withColumn("quality", quality_score_col(t))
-        .where(F.col("quality") >= min_quality)
+        gated.where(language_id(text_col) == lang)
+        .withColumn("quality", quality_score_col(text_col))
+        .where(f"quality >= {literal(min_quality)}")
     )
     if min_compression_ratio is not None:
         from .text import compression_ratio

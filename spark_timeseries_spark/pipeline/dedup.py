@@ -22,12 +22,23 @@ SimHash, n-gram Jaccard, and embedding-cosine near-dup — all designed for the
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from spark_timeseries_spark.functions import let
+from spark_timeseries_spark.functions import (
+    expr_over,
+    hashed_sql,
+    hashed_with_seed_sql,
+    ident,
+    literal,
+)
+from spark_timeseries_spark.functions.sqltext import ColumnOrName
 from spark_timeseries_spark.pipeline import graph
+
+_WS = literal(r"\s+")  # the whitespace-run regex as a SQL literal
 
 
 def content_digest(text: Column, normalize: bool = True) -> Column:
@@ -52,44 +63,36 @@ def dedup_exact(
 
 
 def shingles(
-    text: Column, n: int = 3, as_words: bool = True
+    text: ColumnOrName, n: int = 3, as_words: bool = True
 ) -> Column:
     """Word (default) or character n-gram shingle array. Documents shorter
     than ``n`` units yield an EMPTY array (no partial shingles — empty or
     near-empty documents must not collide into spurious Jaccard-1.0 pairs).
+    ``text`` is a Column or a column name (see :func:`~..functions.expr_over`).
 
     The tokenization/normalization is ``let``-bound so the lambda sees a
     plain variable — capturing the split/replace expression directly would
     re-run it per array element (interpreted HOF), turning shingling
     quadratic in document length.
     """
-    empty = F.array().cast("array<string>")
+    return expr_over(text, lambda t: _shingles_sql(t, int(n), as_words))
+
+
+def _shingles_sql(t: str, n: int, as_words: bool) -> str:
+    """SQL text of :func:`shingles` over the SQL expression ``t``."""
+    empty = "CAST(array() AS ARRAY<STRING>)"
     if as_words:
-        return let(
-            F.split(F.trim(text), r"\s+"),
-            lambda words: F.when(
-                F.size(words) >= n,
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(0), F.size(words) - n),
-                        lambda i: F.concat_ws(
-                            " ", *[words[i + j] for j in range(n)]
-                        ),
-                    )
-                ),
-            ).otherwise(empty),
+        grams = ", ".join(f"words[i + {j}]" for j in range(n))
+        return (
+            f"transform(array(split(trim({t}), {_WS})), words -> "
+            f"CASE WHEN size(words) >= {n} THEN array_distinct(transform("
+            f"sequence(0, size(words) - {n}), i -> concat_ws(' ', {grams}))) "
+            f"ELSE {empty} END)[0]"
         )
-    return let(
-        text,
-        lambda t: F.when(
-            F.length(t) >= n,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), F.length(t) - n),
-                    lambda i: t.substr(i + 1, F.lit(n)),
-                )
-            ),
-        ).otherwise(empty),
+    return (
+        f"transform(array({t}), t -> CASE WHEN length(t) >= {n} THEN "
+        f"array_distinct(transform(sequence(0, length(t) - {n}), "
+        f"i -> substr(t, i + 1, {n}))) ELSE {empty} END)[0]"
     )
 
 
@@ -103,8 +106,9 @@ def shingle_sets(
     the expensive stage of every text-dedup pipeline, so callers that need it
     more than once (signatures + exact verify) should ``.persist()`` the
     result — it is ~2 orders of magnitude smaller than the corpus."""
-    return df.select(
-        F.col(id_col).alias("id"), shingles(F.col(text_col), shingle_n).alias("sh")
+    return df.selectExpr(
+        f"{ident(id_col)} AS id",
+        f"{_shingles_sql(ident(text_col), int(shingle_n), True)} AS sh",
     )
 
 
@@ -139,19 +143,19 @@ def minhash_signatures_from_sets(
     ``hash_fn="oph"`` routes to :func:`minhash_signatures_oph` — ONE hash
     per shingle with rotation densification, the extreme-scale signature
     path."""
-    from spark_timeseries_spark.functions import hashed_with_seed
-
     if hash_fn == "oph":
         return minhash_signatures_oph(sets, id_col, num_hashes, shingle_col)
-    sh = sets.select(id_col, F.explode(shingle_col).alias("_s"))
-    aggs = [
-        F.min(hashed_with_seed(F.col("_s"), i, hash_fn)).alias(f"_m{i}")
-        for i in range(num_hashes)
-    ]
-    sig = sh.groupBy(id_col).agg(*aggs)
-    return sig.select(
-        id_col, F.array(*[f"_m{i}" for i in range(num_hashes)]).alias("sig")
+    mins = ", ".join(
+        f"min({hashed_with_seed_sql('_s', i, hash_fn)})" for i in range(num_hashes)
     )
+    return _exploded(sets, id_col, shingle_col).groupBy(id_col).agg(
+        F.expr(f"array({mins}) AS sig")
+    )
+
+
+def _exploded(sets: DataFrame, id_col: str, shingle_col: str) -> DataFrame:
+    """(id_col, _s): one row per shingle, the signature stages' input."""
+    return sets.selectExpr(ident(id_col), f"explode({ident(shingle_col)}) AS _s")
 
 
 def minhash_signatures_oph(
@@ -181,33 +185,20 @@ def minhash_signatures_oph(
     :func:`minhash_lsh_candidates` (select with ``hash_fn="oph"`` in
     :func:`minhash_signatures_from_sets`); NOT DuckDB-replayable (the
     oracle path stays md5_60)."""
-    sh = sets.select(id_col, F.explode(shingle_col).alias("_s"))
-    h = F.xxhash64("_s")
-    k = num_hashes
-    aggs = [
-        F.min(F.when(F.pmod(h, F.lit(k)) == i, h)).alias(f"_m{i}")
+    k = int(num_hashes)
+    arr = ", ".join(
+        f"min(CASE WHEN pmod(xxhash64(_s), {k}) = {i} THEN xxhash64(_s) END)"
         for i in range(k)
-    ]
-    sig = sh.groupBy(id_col).agg(*aggs)
-    arr = F.array(*[f"_m{i}" for i in range(k)])
-
-    def densify(a):
-        doubled = F.concat(a, a)
-        return F.array(
-            *[
-                F.coalesce(
-                    F.element_at(a, i + 1),
-                    F.element_at(
-                        F.array_compact(F.slice(doubled, i + 2, k - 1)), 1
-                    ),
-                )
-                for i in range(k)
-            ]
-        )
-
-    from ..functions import let
-
-    return sig.select(id_col, let(arr, densify).alias("sig"))
+    )
+    # densify: an empty bin borrows the first filled bin to its cyclic right
+    dense = ", ".join(
+        f"coalesce(element_at(a, {i + 1}), "
+        f"element_at(array_compact(slice(concat(a, a), {i + 2}, {k - 1})), 1))"
+        for i in range(k)
+    )
+    return _exploded(sets, id_col, shingle_col).groupBy(id_col).agg(
+        F.expr(f"transform(array(array({arr})), a -> array({dense}))[0] AS sig")
+    )
 
 
 def cap_bucket_size(
@@ -257,33 +248,21 @@ def _banded(
     band-hash construction both the self-join and cross-corpus candidate
     paths key on (a separator/index fix must hit both or the two paths
     silently produce incompatible band keys)."""
-    from spark_timeseries_spark.functions import hashed
-
-    return sig_df.select(
-        F.col(id_col).alias(out_id),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        hashed(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col("sig")[
-                                        b * rows_per_band + r
-                                    ].cast("string")
-                                    for r in range(rows_per_band)
-                                ],
-                            ),
-                            hash_fn,
-                        ).alias("bh"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(out_id, "bb.band", "bb.bh")
+    r = int(rows_per_band)
+    bands_sql = ", ".join(
+        f"named_struct('band', {b}, 'bh', "
+        + hashed_sql(
+            "concat_ws(',', "
+            + ", ".join(f"CAST(sig[{b * r + k}] AS STRING)" for k in range(r))
+            + ")",
+            hash_fn,
+        )
+        + ")"
+        for b in range(int(bands))
+    )
+    return sig_df.selectExpr(
+        f"{ident(id_col)} AS {ident(out_id)}", f"explode(array({bands_sql})) AS bb"
+    ).selectExpr(ident(out_id), "bb.band", "bb.bh")
 
 
 def minhash_lsh_candidates(
@@ -312,8 +291,8 @@ def minhash_lsh_candidates(
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(b, ["band", "bh"])
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .where("a.id < b.id")
+        .selectExpr("a.id AS id_a", "b.id AS id_b")
         .distinct()
     )
 
@@ -340,8 +319,9 @@ def _jaccard_join(
         .join(sb, b_col)
         .withColumn(
             "jaccard",
-            F.size(F.array_intersect("_sh_a", "_sh_b"))
-            / F.size(F.array_union("_sh_a", "_sh_b")),
+            F.expr(
+                "size(array_intersect(_sh_a, _sh_b)) / size(array_union(_sh_a, _sh_b))"
+            ),
         )
         .where(F.col("jaccard") >= threshold)
         .select(a_col, b_col, "jaccard")
@@ -693,17 +673,24 @@ def connected_components(
             break
     edges.unpersist()
     if changed != 0:
-        msg = (
-            f"connected_components did not converge in {max_iter} rounds: "
-            "a duplicate chain's diameter exceeds max_iter; labels are "
-            "partial (under-merged)"
-        )
-        if on_nonconverged == "raise":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
+        _nonconverged(max_iter, on_nonconverged, stacklevel=2)
     return labels
+
+
+def _nonconverged(max_iter: int, on_nonconverged: str, stacklevel: int) -> None:
+    """Raise, or warn and return, when label propagation hit ``max_iter``
+    with labels still moving — the one failure report of both
+    :func:`connected_components` paths. ``stacklevel`` is the caller's
+    own (counted from the caller), so the warning points at the user's
+    call of :func:`connected_components`."""
+    msg = (
+        f"connected_components did not converge in {max_iter} rounds: "
+        "a duplicate chain's diameter exceeds max_iter; labels are "
+        "partial (under-merged)"
+    )
+    if on_nonconverged == "raise":
+        raise RuntimeError(msg)
+    warnings.warn(msg, RuntimeWarning, stacklevel=stacklevel + 1)
 
 
 def _components_local(spark, edges, max_iter, on_nonconverged):
@@ -727,16 +714,7 @@ def _components_local(spark, edges, max_iter, on_nonconverged):
         if changed == 0:
             break
     if changed != 0:
-        msg = (
-            f"connected_components did not converge in {max_iter} rounds: "
-            "a duplicate chain's diameter exceeds max_iter; labels are "
-            "partial (under-merged)"
-        )
-        if on_nonconverged == "raise":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=3)
+        _nonconverged(max_iter, on_nonconverged, stacklevel=3)
     out = [(k, labels[k]) for k in sorted(labels)]
     return spark.createDataFrame(out, "id long, component long")
 

@@ -8,7 +8,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from spark_timeseries_spark.functions import let
+from spark_timeseries_spark.functions import expr_over, ident, let, literal
+from spark_timeseries_spark.functions.sqltext import ColumnOrName
 
 # Small high-frequency word lexicons for the n-gram/stopword language
 # heuristic. (Deterministic, self-contained; real deployments would swap in
@@ -21,6 +22,11 @@ LANG_LEXICONS: dict[str, list[str]] = {
 }
 
 STOPWORDS_EN = set(LANG_LEXICONS["en"]) | {"a", "an", "on", "at", "by", "with"}
+
+# regexes as SQL literals (see functions.sqltext)
+_WS = literal(r"\s+")
+_PUNCT = literal(r"[^\w\s]")
+_NL = literal(r"\n")
 
 
 def tokens(text: Column) -> Column:
@@ -46,26 +52,37 @@ def token_count(text: Column, bpe: bool = False) -> Column:
     )
 
 
-def language_scores(text: Column) -> list[tuple[str, Column]]:
-    toks = tokens(F.lower(text))
-    out = []
-    for lang, lex in LANG_LEXICONS.items():
-        lex_arr = F.array(*[F.lit(w) for w in lex])
-        hits = F.size(F.filter(toks, lambda t: F.array_contains(lex_arr, t)))
-        out.append((lang, hits))
-    return out
+def language_scores(text: ColumnOrName) -> list[tuple[str, Column]]:
+    """(lang, stopword hit count) per lexicon; ``text`` is a Column or a
+    column name (see :func:`~..functions.expr_over`)."""
+    return [
+        (lang, expr_over(text, lambda t, lex=lex: _hits_sql(t, lex)))
+        for lang, lex in LANG_LEXICONS.items()
+    ]
 
 
-def language_id(text: Column) -> Column:
-    """Most-probable language by stopword hit count; ties break to the
-    lexicographically larger code (deterministic)."""
-    scored = F.array(
-        *[
-            F.struct(score.alias("score"), F.lit(lang).alias("lang"))
-            for lang, score in language_scores(text)
-        ]
+def _hits_sql(t: str, lex: list[str]) -> str:
+    """SQL text: how many tokens of the text expression ``t`` are in ``lex``."""
+    words = ", ".join(literal(w) for w in lex)
+    return (
+        f"size(filter(split(trim(lower({t})), {_WS}), "
+        f"t -> array_contains(array({words}), t)))"
     )
-    return F.array_max(scored)["lang"]
+
+
+def language_id(text: ColumnOrName) -> Column:
+    """Most-probable language by stopword hit count; ties break to the
+    lexicographically larger code (deterministic). ``text`` is a Column
+    or a column name."""
+
+    def body(t):
+        scored = ", ".join(
+            f"named_struct('score', {_hits_sql(t, lex)}, 'lang', {literal(lang)})"
+            for lang, lex in LANG_LEXICONS.items()
+        )
+        return f"array_max(array({scored}))['lang']"
+
+    return expr_over(text, body)
 
 
 def quality_features(
@@ -93,31 +110,44 @@ def quality_features(
     )
 
 
-def quality_score_col(text: Column) -> Column:
+def quality_score_col(text: ColumnOrName) -> Column:
     """Scalar [0,1] quality heuristic as a row-local COLUMN — composable
     into an existing lineage without a second corpus scan (used by
-    :func:`~spark_timeseries_spark.pipeline.clean.pretrain_clean`)."""
-    n_tok = token_count(text)  # blank-guarded: "" is 0 tokens, not [""]→1
-    length = F.length(text)
-    stop_arr = F.array(*[F.lit(w) for w in sorted(STOPWORDS_EN)])
-    n_stop = F.size(
-        F.filter(tokens(F.lower(text)), lambda x: F.array_contains(stop_arr, x))
-    )
-    n_punct = length - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
-    len_score = F.least(n_tok / 50.0, F.lit(1.0)) * F.when(
-        n_tok > 5000, 0.5
-    ).otherwise(1.0)
-    stop_score = F.least(F.try_divide(n_stop, n_tok) * 4.0, F.lit(1.0))
-    punct_score = F.when(F.try_divide(n_punct, length) > 0.2, 0.5).otherwise(1.0)
-    return F.round(len_score * (0.5 + 0.5 * stop_score) * punct_score, 6)
+    :func:`~spark_timeseries_spark.pipeline.clean.pretrain_clean`).
+    ``text`` is a Column or a column name."""
+    stop = ", ".join(literal(w) for w in sorted(STOPWORDS_EN))
+
+    def body(t):
+        # token_count's blank guard: "" is 0 tokens, not [""]→1
+        n_tok = (
+            f"CASE WHEN length(trim({t})) = 0 THEN 0 "
+            f"ELSE size(split(trim({t}), {_WS})) END"
+        )
+        n_stop = (
+            f"size(filter(split(trim(lower({t})), {_WS}), "
+            f"x -> array_contains(array({stop}), x)))"
+        )
+        n_punct = f"length({t}) - length(regexp_replace({t}, {_PUNCT}, ''))"
+        len_score = (
+            f"least({n_tok} / 50.0D, 1.0D) * "
+            f"CASE WHEN {n_tok} > 5000 THEN 0.5D ELSE 1.0D END"
+        )
+        stop_score = f"least(try_divide({n_stop}, {n_tok}) * 4.0D, 1.0D)"
+        punct_score = (
+            f"CASE WHEN try_divide({n_punct}, length({t})) > 0.2D "
+            "THEN 0.5D ELSE 1.0D END"
+        )
+        return (
+            f"round({len_score} * ({stop_score} * 0.5D + 0.5D) * {punct_score}, 6)"
+        )
+
+    return expr_over(text, body)
 
 
 def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Scalar [0,1] quality heuristic: length sweet-spot × stopword presence ×
     punctuation sanity (monotone, deterministic)."""
-    return df.select(
-        id_col, quality_score_col(F.col(text_col)).alias("quality")
-    )
+    return df.select(id_col, quality_score_col(text_col).alias("quality"))
 
 
 def fingerprint_md5(text: Column) -> Column:
@@ -466,93 +496,82 @@ def repetition_features(
     lengths, lines, and ONE tagged explode carrying every n-gram size —
     instead of 2+|ns| scans of the corpus.
     """
-    t = F.col(text_col)
-
-    lines = df.select(
-        id_col,
-        F.explode(
-            F.filter(
-                F.transform(F.split(t, r"\n"), lambda l: F.trim(l)),
-                lambda l: l != "",
-            )
-        ).alias("line"),
+    t, key = ident(text_col), ident(id_col)
+    top_ngram_ns = [int(n) for n in top_ngram_ns]
+    lines = df.selectExpr(
+        key,
+        f"explode(filter(transform(split({t}, {_NL}), "
+        "l -> trim(l)), l -> l != '')) AS line",
     )
     line_stats = (
         lines.groupBy(id_col, "line")
-        .agg(F.count("*").alias("cnt"), F.length("line").alias("len"))
+        .agg(F.expr("count(*) AS cnt"), F.expr("length(line) AS len"))
         .groupBy(id_col)
         .agg(
-            F.sum("cnt").alias("n_lines"),
-            (1 - F.try_divide(F.count("*"), F.sum("cnt"))).alias(
-                "dup_line_ratio"
+            F.expr("sum(cnt) AS n_lines"),
+            F.expr("1 - try_divide(count(*), sum(cnt)) AS dup_line_ratio"),
+            F.expr(
+                "try_divide(sum((cnt - 1) * len), sum(cnt * len)) "
+                "AS dup_line_char_ratio"
             ),
-            F.try_divide(
-                F.sum((F.col("cnt") - 1) * F.col("len")),
-                F.sum(F.col("cnt") * F.col("len")),
-            ).alias("dup_line_char_ratio"),
         )
     )
 
-    def _grams_for(toks, n: int):
+    def _grams_for(n: int) -> str:
         # guard: sequence(1, stop) with stop < 1 yields a DESCENDING [1, 0],
         # not an empty array — short docs must produce zero n-grams instead
-        starts = F.when(
-            F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
-        ).otherwise(F.array().cast("array<int>"))
-        return F.transform(
-            starts,
-            lambda i: F.struct(
-                F.lit(n).alias("n"),
-                F.concat_ws(" ", F.slice(toks, i, n)).alias("gram"),
-            ),
+        return (
+            f"transform(CASE WHEN size(toks) >= {n} THEN "
+            f"sequence(1, size(toks) - {n - 1}) "
+            "ELSE CAST(array() AS ARRAY<INT>) END, "
+            f"i -> named_struct('n', {n}, 'gram', concat_ws(' ', slice(toks, i, {n}))))"
         )
 
     # let-bind the token array: referencing the split expression inside the
     # transform lambdas would re-tokenize once PER TOKEN per n (interpreted
     # HOF, the same O(len²) trap the winnowing note documents — measured
     # ~4× on this operator even at 54-token docs)
-    all_grams = let(
-        tokens(F.lower(t)),
-        lambda toks: F.concat(*[_grams_for(toks, n) for n in top_ngram_ns]),
+    all_grams = (
+        f"transform(array(split(trim(lower({t})), {_WS})), toks -> "
+        f"concat({', '.join(_grams_for(n) for n in top_ngram_ns)}))[0]"
     )
-    grams = df.select(id_col, F.explode(all_grams).alias("g")).select(
-        id_col, F.col("g.n").alias("n"), F.col("g.gram").alias("gram")
+    grams = df.selectExpr(key, f"explode({all_grams}) AS g").selectExpr(
+        key, "g.n AS n", "g.gram AS gram"
     )
     tops = (
         grams.groupBy(id_col, "n", "gram")
-        .agg(F.count("*").alias("cnt"))
+        .agg(F.expr("count(*) AS cnt"))
         .groupBy(id_col, "n")
-        .agg(F.max(F.struct(F.col("cnt"), F.col("gram"))).alias("_m"))
+        .agg(F.expr("max(struct(cnt, gram)) AS _m"))
         .groupBy(id_col)
         # pivot over the statically-known n values → one row per doc
         .agg(
             *[
-                F.max(
-                    F.when(
-                        F.col("n") == n,
-                        F.col("_m.cnt") * F.length("_m.gram"),
-                    )
-                ).alias(f"_top{n}_chars")
+                F.expr(
+                    f"max(CASE WHEN n = {n} THEN _m.cnt * length(_m.gram) END) "
+                    f"AS _top{n}_chars"
+                )
                 for n in top_ngram_ns
             ]
         )
     )
 
-    out = (
-        df.select(id_col, F.length(t).alias("_len"))
+    return (
+        df.selectExpr(key, f"length({t}) AS _len")
         .join(line_stats, id_col, "left")
         .join(tops, id_col, "left")
-    )
-    for n in top_ngram_ns:
-        out = out.withColumn(
-            f"top{n}gram_char_ratio",
-            F.coalesce(
-                F.try_divide(F.col(f"_top{n}_chars"), F.col("_len")),
-                F.lit(0.0),
-            ),
-        ).drop(f"_top{n}_chars")
-    return out.drop("_len").na.fill(
-        {"n_lines": 0, "dup_line_ratio": 0.0, "dup_line_char_ratio": 0.0}
+        .selectExpr(
+            key,
+            "n_lines",
+            "dup_line_ratio",
+            "dup_line_char_ratio",
+            *[
+                f"coalesce(try_divide(_top{n}_chars, _len), 0.0D) "
+                f"AS top{n}gram_char_ratio"
+                for n in top_ngram_ns
+            ],
+        )
+        .na.fill({"n_lines": 0, "dup_line_ratio": 0.0, "dup_line_char_ratio": 0.0})
     )
 
 
@@ -577,10 +596,11 @@ def gopher_repetition_filter(
     Filter-style counterpart of :func:`repetition_features`."""
     th = dict(GOPHER_REPETITION_THRESHOLDS if thresholds is None else thresholds)
     feats = repetition_features(df, text_col, id_col)
-    cond = F.lit(True)
+    # parenthesized left-deep: the parser balances a flat chain of ANDs
+    cond = "true"
     for name, bound in th.items():
-        cond = cond & (F.coalesce(F.col(name), F.lit(0.0)) <= bound)
-    return feats.select(id_col, cond.alias("keep"))
+        cond = f"({cond} AND coalesce({ident(name)}, 0.0D) <= {literal(bound)})"
+    return feats.selectExpr(ident(id_col), f"{cond} AS keep")
 
 
 def winnowing_fingerprints(
@@ -754,15 +774,13 @@ def compression_ratio(
 
     _sizes = pandas_udf(_sizes_fn, "struct<raw_bytes: long, zlib_bytes: long>")
 
-    sized = df.select(F.col(id_col), _sizes(F.col(text_col)).alias("_s"))
-    return sized.select(
-        id_col,
-        F.col("_s.raw_bytes").alias("raw_bytes"),
-        F.col("_s.zlib_bytes").alias("zlib_bytes"),
-        F.when(
-            F.col("_s.raw_bytes") > 0,
-            F.col("_s.zlib_bytes") / F.col("_s.raw_bytes"),
-        ).alias("compression_ratio"),
+    sized = df.select(id_col, _sizes(text_col).alias("_s"))
+    return sized.selectExpr(
+        ident(id_col),
+        "_s.raw_bytes AS raw_bytes",
+        "_s.zlib_bytes AS zlib_bytes",
+        "CASE WHEN _s.raw_bytes > 0 THEN _s.zlib_bytes / _s.raw_bytes END "
+        "AS compression_ratio",
     )
 
 
@@ -1006,7 +1024,7 @@ def quality_token_curve(
         raise ValueError(f"deciles must be >= 2, got {deciles}")
     scored = df.select(
         F.col(id_col).alias("_id"),
-        quality_score_col(F.col(text_col)).alias("_q"),
+        quality_score_col(text_col).alias("_q"),
         token_count(F.col(text_col)).alias("_t"),
     ).where(F.col("_q").isNotNull())
     wo = Window.partitionBy(F.lit(1)).orderBy(

@@ -425,6 +425,30 @@ def test_connected_components_local_matches_distributed(spark, monkeypatch):
         dd.connected_components(chain, max_iter=2)
 
 
+@pytest.mark.parametrize("edge_rows", [None, 0], ids=["driver_local", "distributed"])
+def test_nonconvergence_warning_points_at_the_callers_line(spark, monkeypatch, edge_rows):
+    """Both connected_components paths report nonconvergence through one
+    helper; in warn mode the RuntimeWarning names the line that called
+    connected_components, not a line inside the library."""
+    import warnings
+
+    import spark_timeseries_spark.pipeline.dedup as dd
+    import spark_timeseries_spark.pipeline.graph as graph
+
+    if edge_rows is not None:
+        monkeypatch.setattr(graph, "DRIVER_EDGE_ROWS", edge_rows)
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "id_a long, id_b long"
+    )
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        labels = dd.connected_components(chain, max_iter=2, on_nonconverged="warn")
+        labels.unpersist()
+    loud = [x for x in w if "did not converge" in str(x.message)]
+    assert [x.category for x in loud] == [RuntimeWarning]
+    assert loud[0].filename == __file__
+
+
 def test_graph_paths_drop_null_id_pairs(spark, monkeypatch):
     """A pair with a NULL id is dropped before the driver-local size gate,
     so connected_components and pagerank return the same NULL-free output

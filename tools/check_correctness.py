@@ -158,6 +158,9 @@ def main():
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # the console progress bar would prefix result lines in a
+        # redirected log, hiding them from a line-anchored grep
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", "8g")
         .getOrCreate()
     )
