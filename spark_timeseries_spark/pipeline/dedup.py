@@ -33,12 +33,10 @@ from spark_timeseries_spark.functions import (
     hashed_sql,
     hashed_with_seed_sql,
     ident,
-    literal,
 )
 from spark_timeseries_spark.functions.sqltext import ColumnOrName
 from spark_timeseries_spark.pipeline import graph
-
-_WS = literal(r"\s+")  # the whitespace-run regex as a SQL literal
+from spark_timeseries_spark.pipeline.text import tokens_sql
 
 
 def content_digest(text: Column, normalize: bool = True) -> Column:
@@ -84,7 +82,7 @@ def _shingles_sql(t: str, n: int, as_words: bool) -> str:
     if as_words:
         grams = ", ".join(f"words[i + {j}]" for j in range(n))
         return (
-            f"transform(array(split(trim({t}), {_WS})), words -> "
+            f"transform(array({tokens_sql(t)}), words -> "
             f"CASE WHEN size(words) >= {n} THEN array_distinct(transform("
             f"sequence(0, size(words) - {n}), i -> concat_ws(' ', {grams}))) "
             f"ELSE {empty} END)[0]"

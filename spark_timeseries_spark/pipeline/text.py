@@ -23,15 +23,21 @@ LANG_LEXICONS: dict[str, list[str]] = {
 
 STOPWORDS_EN = set(LANG_LEXICONS["en"]) | {"a", "an", "on", "at", "by", "with"}
 
+# the whitespace tokenizer's separator: a run of whitespace
+_WS_RE = r"\s+"
 # regexes as SQL literals (see functions.sqltext)
-_WS = literal(r"\s+")
 _PUNCT = literal(r"[^\w\s]")
 _NL = literal(r"\n")
 
 
 def tokens(text: Column) -> Column:
     """Whitespace tokenization."""
-    return F.split(F.trim(text), r"\s+")
+    return F.split(F.trim(text), _WS_RE)
+
+
+def tokens_sql(t: str) -> str:
+    """Spark SQL text of :func:`tokens` over the SQL expression ``t``."""
+    return f"split(trim({t}), {literal(_WS_RE)})"
 
 
 def bpe_like_tokens(text: Column) -> Column:
@@ -52,6 +58,11 @@ def token_count(text: Column, bpe: bool = False) -> Column:
     )
 
 
+def token_count_sql(t: str) -> str:
+    """Spark SQL text of whitespace-mode :func:`token_count` over ``t``."""
+    return f"CASE WHEN length(trim({t})) = 0 THEN 0 ELSE size({tokens_sql(t)}) END"
+
+
 def language_scores(text: ColumnOrName) -> list[tuple[str, Column]]:
     """(lang, stopword hit count) per lexicon; ``text`` is a Column or a
     column name (see :func:`~..functions.expr_over`)."""
@@ -65,7 +76,7 @@ def _hits_sql(t: str, lex: list[str]) -> str:
     """SQL text: how many tokens of the text expression ``t`` are in ``lex``."""
     words = ", ".join(literal(w) for w in lex)
     return (
-        f"size(filter(split(trim(lower({t})), {_WS}), "
+        f"size(filter({tokens_sql(f'lower({t})')}, "
         f"t -> array_contains(array({words}), t)))"
     )
 
@@ -118,13 +129,9 @@ def quality_score_col(text: ColumnOrName) -> Column:
     stop = ", ".join(literal(w) for w in sorted(STOPWORDS_EN))
 
     def body(t):
-        # token_count's blank guard: "" is 0 tokens, not [""]→1
-        n_tok = (
-            f"CASE WHEN length(trim({t})) = 0 THEN 0 "
-            f"ELSE size(split(trim({t}), {_WS})) END"
-        )
+        n_tok = token_count_sql(t)  # blank-guarded: "" is 0 tokens
         n_stop = (
-            f"size(filter(split(trim(lower({t})), {_WS}), "
+            f"size(filter({tokens_sql(f'lower({t})')}, "
             f"x -> array_contains(array({stop}), x)))"
         )
         n_punct = f"length({t}) - length(regexp_replace({t}, {_PUNCT}, ''))"
@@ -532,7 +539,7 @@ def repetition_features(
     # HOF, the same O(len²) trap the winnowing note documents — measured
     # ~4× on this operator even at 54-token docs)
     all_grams = (
-        f"transform(array(split(trim(lower({t})), {_WS})), toks -> "
+        f"transform(array({tokens_sql(f'lower({t})')}), toks -> "
         f"concat({', '.join(_grams_for(n) for n in top_ngram_ns)}))[0]"
     )
     grams = df.selectExpr(key, f"explode({all_grams}) AS g").selectExpr(

@@ -13,9 +13,10 @@ and then the 20 costliest rows by command count.
 
 Usage::
 
-    python -m tools.build_cost [--sf DIR] [--cpus N] [query ...]
+    python -m tools.build_cost [--sf DIR] [query ...]
 
 ``--sf`` defaults to ``$SPARK_GRAFT_SF_DIR``, the tests' data directory.
+The session is local[4] with 4 shuffle partitions, like the tests'.
 """
 
 from __future__ import annotations
@@ -61,7 +62,6 @@ def main():
     ap.add_argument("queries", nargs="*")
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR"),
                     help="scale-factor data dir (default $SPARK_GRAFT_SF_DIR)")
-    ap.add_argument("--cpus", type=int, default=4)
     args = ap.parse_args()
     if not args.sf:
         ap.error("pass --sf or set SPARK_GRAFT_SF_DIR")
@@ -69,9 +69,9 @@ def main():
     from pyspark.sql import SparkSession
 
     spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
+        SparkSession.builder.master("local[4]")
         .appName("build-cost")
-        .config("spark.sql.shuffle.partitions", str(args.cpus))
+        .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
