@@ -830,11 +830,7 @@ def _q_dedup_components(spark, sf_dir):
     )
     sigs.unpersist()
     comp = dd.connected_components(pairs)
-    out = comp.select(F.col("id").alias("doc_id"), "component").localCheckpoint(
-        eager=True
-    )
-    comp.unpersist()
-    return out
+    return comp.select(F.col("id").alias("doc_id"), "component")
 
 
 def _q_scrub_pii(spark, sf_dir):

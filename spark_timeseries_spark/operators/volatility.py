@@ -111,15 +111,11 @@ def var_es(
     of the return distribution (a LOSS threshold, reported as the
     return value: negative in a loss tail), ES = mean of returns at or
     below VaR (the coherent tail measure Basel moved to; ES ≤ VaR by
-    construction). NULL where fewer than 2 returns. One lag window +
-    one percentile aggregate + one conditional re-aggregate (the
-    percentile must land before the tail mean can filter — two passes
-    over the per-key returns, both map-side combinable).
-
-    Eager: the call runs the lag-window returns pass at once and pins it
-    with ``localCheckpoint(eager=True)``; the returned DataFrame reads
-    those executor blocks, which live until it is garbage-collected and
-    are not recomputed if an executor is lost."""
+    construction). NULL where fewer than 2 returns. One lag window, one
+    percentile window and one conditional aggregate, all partitioned by
+    the key: the percentile lands on every return row before the tail
+    mean filters on it, so the plan has one exchange and runs no job
+    until the caller's action."""
     if not 0.5 <= alpha < 1.0:
         raise ValueError(f"alpha must be in [0.5, 1), got {alpha}")
     v = F.col(value_col)
@@ -129,24 +125,19 @@ def var_es(
         pts.withColumn("_prev", F.lag(value_col).over(ws))
         .where(F.col("_prev").isNotNull())
         .select(key_col, F.log(v / F.col("_prev")).alias("_r"))
-        # the returns table feeds BOTH the percentile pass and the tail
-        # re-aggregate; without materialization each pass re-runs the
-        # whole upstream (grid + fills + lag window — measured 12 parquet
-        # scans in one entry plan). One eager checkpoint of the narrow
-        # (key, return) table = one upstream pass.
-        .localCheckpoint(eager=True)
+        .withColumn(
+            "_var",
+            F.percentile("_r", F.lit(1.0 - alpha)).over(
+                Window.partitionBy(key_col)
+            ),
+        )
     )
     q = r.groupBy(key_col).agg(
         F.count("_r").alias("n_ret"),
-        F.percentile("_r", F.lit(1.0 - alpha)).alias("var"),
+        F.max("_var").alias("var"),
+        F.avg(F.when(F.col("_r") <= F.col("_var"), F.col("_r"))).alias("es"),
     )
-    tail = (
-        r.join(q.select(key_col, "var"), key_col)
-        .where(F.col("_r") <= F.col("var"))
-        .groupBy(key_col)
-        .agg(F.avg("_r").alias("es"))
-    )
-    return q.join(tail, key_col, "left").select(
+    return q.select(
         key_col,
         "n_ret",
         F.when(F.col("n_ret") >= 2, F.col("var")).alias("var"),

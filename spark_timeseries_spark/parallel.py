@@ -21,6 +21,9 @@ count window and unioned in one lazy plan. Each caller owns its bound
 (a module constant, or the EMA's numeric envelope); none exposes it as
 an option.
 
+:func:`collect_at_most` is the one size gate of every driver-local loop
+(``pagerank``, ``connected_components``, ``bpe_train``).
+
 ``spread_kernel`` keeps the ``2·cores + 1`` key repartition for the JVM
 pair-fold stages in ``operators/rolling.py``, which pay no Python task
 cost; ``spread_rows`` is its round-robin variant for row-parallel stages
@@ -33,7 +36,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator, Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -162,3 +165,19 @@ def route_by_length(
     return side(short, F.col(n) <= bound).unionByName(
         side(long, F.col(n) > bound)
     )
+
+
+def collect_at_most(
+    df: DataFrame, bound: int
+) -> tuple[DataFrame, list[Row] | None]:
+    """``(cut, rows)``: ``df`` local-checkpointed, and its rows when it has
+    at most ``bound`` of them, else ``None``.
+
+    One ``limit(bound + 1).collect()`` decides and brings a small frame
+    back. Spark fills the rest of a lazy local checkpoint after the first
+    job on it, so a distributed loop over ``cut`` does not re-run ``df``.
+    No count and no cache handle: the blocks are reclaimed once ``cut``
+    is garbage-collected, and are not recomputed if an executor is lost."""
+    cut = df.localCheckpoint(eager=False)
+    rows = cut.limit(bound + 1).collect()
+    return cut, (rows if len(rows) <= bound else None)

@@ -34,6 +34,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spark_timeseries_spark.parallel import collect_at_most
+
 __all__ = ["BPEModel", "bpe_train", "bpe_segment", "word_type_table"]
 
 #: end-of-word marker appended to every word's symbol sequence
@@ -43,6 +45,8 @@ EOW = "</w>"
 #: envelope as a broadcast join build side) instead of paying one cluster
 #: job round-trip per merge
 DRIVER_VOCAB_ROWS = 65536
+#: merges between the scale path's lineage cuts of the word-type table
+CHECKPOINT_EVERY = 8
 #: fold sentinel — ASCII unit separator, filtered from the input alphabet
 SEP = "\x1f"
 
@@ -164,7 +168,6 @@ def bpe_train(
     n_merges: int = 50,
     text_col: str = "text",
     lowercase: bool = True,
-    checkpoint_every: int = 8,
 ) -> BPEModel:
     """Learn ``n_merges`` BPE merges from the corpus. The corpus is
     scanned once to build the word-type table; when that table fits under
@@ -172,31 +175,29 @@ def bpe_train(
     vocabulary (one collect total). Above the bound, the loop iterates on
     the cluster: driver traffic is one (left, right, count) row per merge,
     and the word-type table is localCheckpoint'ed every
-    ``checkpoint_every`` merges so the fold expressions never stack past a
-    bounded depth (each merge adds one fold+split layer; unbounded
+    :data:`CHECKPOINT_EVERY` merges so the fold expressions never stack
+    past a bounded depth (each merge adds one fold+split layer; unbounded
     stacking is a codegen/analysis blow-up, the same lineage-truncation
     pattern as ``connected_components``). Both paths produce identical
     models. Stops early when no adjacent pair is left."""
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
-    types_df = word_type_table(df, text_col, lowercase).localCheckpoint(
-        eager=True
+    types_df, rows = collect_at_most(
+        word_type_table(df, text_col, lowercase).select("cnt", "syms"),
+        DRIVER_VOCAB_ROWS,
     )
-    n_types = types_df.count()
-    if n_types <= DRIVER_VOCAB_ROWS:
+    if rows is not None:
         # The type table fits at the driver (same envelope as a broadcast
         # join's build side: 64k rows of short strings is a few MB). The
         # distributed loop below ships ONE useful row per merge but pays a
-        # full job round-trip n_merges times; collecting the vocabulary
-        # once and merging locally is the bounded-small-side move, not a
-        # driver data job. The local loop mirrors the cluster semantics
-        # token for token: pair counts weighted by word count, argmax
-        # tie-broken (count DESC, left ASC, right ASC — Python str
-        # comparison is code-point order, which equals Spark's UTF-8
-        # binary order), merges applied leftmost-first exactly like the
-        # fold in :func:`merge_fold_expr`. Same merges, same counts,
-        # bit-for-bit.
-        rows = types_df.select("cnt", "syms").collect()
+        # full job round-trip n_merges times; merging the probe's rows
+        # locally is the bounded-small-side move, not a driver data job.
+        # The local loop mirrors the cluster semantics token for token:
+        # pair counts weighted by word count, argmax tie-broken (count
+        # DESC, left ASC, right ASC — Python str comparison is code-point
+        # order, which equals Spark's UTF-8 binary order), merges applied
+        # leftmost-first exactly like the fold in :func:`merge_fold_expr`.
+        # Same merges, same counts, bit-for-bit.
         return _merge_loop_local(
             [(list(r["syms"]), int(r["cnt"])) for r in rows], int(n_merges)
         )
@@ -208,6 +209,7 @@ def bpe_train(
     # times over. Derive the width from the ACTUAL row count (never a
     # constant); coalesce is narrow, so the checkpointed blocks are
     # reused with no extra materialization.
+    n_types = types_df.count()
     width = types_df.rdd.getNumPartitions()
     fit = max(1, min(width, int(n_types // max(1, DRIVER_VOCAB_ROWS)) + 1))
     if fit < width:
@@ -241,7 +243,7 @@ def bpe_train(
             "syms", merge_fold_expr(F.col("syms"), a, b)
         )
         since_ckpt += 1
-        if since_ckpt >= checkpoint_every and merges_left > 0:
+        if since_ckpt >= CHECKPOINT_EVERY and merges_left > 0:
             # (skip the re-checkpoint when no merge will read it)
             types_df = types_df.localCheckpoint(eager=True)
             since_ckpt = 0

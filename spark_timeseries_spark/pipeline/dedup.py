@@ -35,6 +35,7 @@ from spark_timeseries_spark.functions import (
     ident,
 )
 from spark_timeseries_spark.functions.sqltext import ColumnOrName
+from spark_timeseries_spark.parallel import collect_at_most
 from spark_timeseries_spark.pipeline import graph
 from spark_timeseries_spark.pipeline.text import tokens_sql
 
@@ -616,23 +617,20 @@ def connected_components(
     e = pairs.select(
         F.col(id_a).cast("long").alias("a"), F.col(id_b).cast("long").alias("b")
     ).where(F.col("a").isNotNull() & F.col("b").isNotNull())
-    edges = (
+    edges, rows = collect_at_most(
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .persist()
+        .distinct(),
+        graph.DRIVER_EDGE_ROWS,
     )
-    n_edges = edges.count()  # also warms the persist the loop below reuses
-    if n_edges <= graph.DRIVER_EDGE_ROWS:
+    if rows is not None:
         # The pair table is tiny (near-dup edges, not the corpus — the
         # corpus-scale join that produced it already ran). The cluster
         # loop costs two job round-trips per round (materialize + changed
         # count) on near-empty tasks; min-label propagation over longs is
         # exact on any engine, so a driver-local replay of the SAME
         # round-by-round algorithm (same max_iter bound, same
-        # nonconvergence contract) returns identical labels. Collect
-        # once, propagate locally.
-        rows = edges.collect()
-        edges.unpersist()
+        # nonconvergence contract) returns identical labels. Propagate
+        # locally on the probe's rows.
         return _components_local(
             pairs.sparkSession,
             [(r["a"], r["b"]) for r in rows],
@@ -669,7 +667,6 @@ def connected_components(
         labels = new
         if changed == 0:
             break
-    edges.unpersist()
     if changed != 0:
         _nonconverged(max_iter, on_nonconverged, stacklevel=2)
     return labels
@@ -728,21 +725,14 @@ def keep_cluster_representatives(
     the corpus-side consumer of :func:`connected_components`. One anti-join
     against the non-representative set; AQE broadcasts it when it is
     actually small (no pinned hint — at dup-heavy corpora the drop set is
-    a large fraction of the ids and must stay a shuffled join).
-
-    The component cache is internal here (r3 ADVICE): the drop set is
-    eagerly ``localCheckpoint``-ed — a distributed materialization that
-    CUTS the lineage back to the iterative computation — so the iteration
-    cache can be released before returning instead of leaking for the
-    session. The checkpoint blocks themselves are reclaimed by the context
-    cleaner once the returned frame is garbage-collected."""
+    a large fraction of the ids and must stay a shuffled join). The
+    component labels come back materialized (a local relation, or the
+    distributed loop's last checkpoint), so the drop set reads them
+    directly."""
     comp = connected_components(pairs, id_a, id_b)
-    drop = (
-        comp.where(F.col("id") != F.col("component"))
-        .select(F.col("id").alias(id_col))
-        .localCheckpoint(eager=True)
+    drop = comp.where(F.col("id") != F.col("component")).select(
+        F.col("id").alias(id_col)
     )
-    comp.unpersist()
     return df.join(drop, id_col, "left_anti")
 
 
@@ -1613,10 +1603,7 @@ def select_canonical(
     per-component rank window — the window partitions by component,
     whose cardinality is the document count at worst."""
     comp = connected_components(pairs, id_a, id_b)
-    labels = comp.select(
-        F.col("id").alias(id_col), "component"
-    ).localCheckpoint(eager=True)
-    comp.unpersist()
+    labels = comp.select(F.col("id").alias(id_col), "component")
     d = (
         df.select(F.col(id_col), quality.alias("quality"))
         .join(labels, id_col, "left")

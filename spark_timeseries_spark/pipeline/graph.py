@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_timeseries_spark.parallel import collect_at_most
+
 __all__ = ["pagerank"]
 
 #: edge-table row bound under which :func:`pagerank` and
@@ -80,18 +82,16 @@ def pagerank(
                 F.col(id_b).alias("src"), F.col(id_a).alias("dst")
             )
         )
-    edges = e.distinct().localCheckpoint(eager=True)
-    n_edges = edges.count()
-    if n_edges <= DRIVER_EDGE_ROWS:
+    edges, rows = collect_at_most(e.distinct(), DRIVER_EDGE_ROWS)
+    if rows is not None:
         # The decision table (edges) is tiny — the corpus-scale work that
-        # PRODUCED it already ran inside the checkpoint above. Iterating
-        # on the cluster from here costs one job round-trip per checkpoint
-        # (init, degree fold, one per power iteration) with near-empty
-        # tasks; the integer fixed-point contract means a driver-local
-        # replay is bit-identical (floor divisions and integer sums are
-        # exact in any order and any engine). Collect once, iterate
-        # locally, return the small result as a local relation.
-        rows = edges.collect()
+        # PRODUCED it already ran inside the probe above. Iterating on the
+        # cluster from here costs one job round-trip per checkpoint (init,
+        # degree fold, one per power iteration) with near-empty tasks; the
+        # integer fixed-point contract means a driver-local replay is
+        # bit-identical (floor divisions and integer sums are exact in any
+        # order and any engine). Iterate locally on the probe's rows and
+        # return the small result as a local relation.
         return _pagerank_local(
             pairs.sparkSession, [(r["src"], r["dst"]) for r in rows],
             iters, scale, edges.schema["src"].dataType,
@@ -100,9 +100,9 @@ def pagerank(
         edges.select(F.col("src").alias("id"))
         .unionByName(edges.select(F.col("dst").alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
-    n_nodes = nodes.count()  # driver scalar — one small job
+    n_nodes = nodes.count()  # fills the checkpoint: one job
     deg = edges.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("deg")
     )

@@ -2130,6 +2130,76 @@ def test_bpe_train_local_loop_matches_distributed(spark, monkeypatch):
     assert local_t.pair_counts == dist_t.pair_counts
 
 
+def test_driver_local_gates_build_in_two_jobs(spark, monkeypatch):
+    """Every driver-local size gate decides with one bounded probe
+    (``parallel.collect_at_most``): building connected_components,
+    keep_cluster_representatives, pagerank or bpe_train on a small input
+    issues at most 2 jobs, the bound patched to 0 still returns the local
+    path's output, and no call leaves a persisted RDD that is not a local
+    checkpoint behind (the rule perfbench applies after every run)."""
+    import gc
+
+    import spark_timeseries_spark.pipeline.bpe as bpe
+    import spark_timeseries_spark.pipeline.graph as graph
+
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)],
+        "id_a long, id_b long",
+    )
+    docs = spark.createDataFrame(
+        [(i, f"doc {i}") for i in range(25)], "doc_id long, text string"
+    )
+    corpus = spark.createDataFrame(
+        [(0, "low lower newest widest " * 3), (1, "ba aaa low")],
+        "doc_id long, text string",
+    )
+
+    builders = {
+        "connected_components": lambda: dedup.connected_components(pairs),
+        "keep_cluster_representatives": lambda: (
+            dedup.keep_cluster_representatives(docs, pairs)
+        ),
+        "pagerank": lambda: graph.pagerank(pairs),
+        "bpe_train": lambda: bpe.bpe_train(corpus, n_merges=8),
+    }
+
+    def output(built):
+        if isinstance(built, bpe.BPEModel):
+            return built
+        return sorted(tuple(r) for r in built.collect())
+
+    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+    jobs, local = {}, {}
+    for name, build in builders.items():
+        group = f"driver-local-gate-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            built = build()
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description",
+                         "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(prop, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        local[name] = output(built)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert all(n <= 2 for n in jobs.values()), jobs
+
+    monkeypatch.setattr(graph, "DRIVER_EDGE_ROWS", 0)
+    monkeypatch.setattr(bpe, "DRIVER_VOCAB_ROWS", 0)
+    for name, build in builders.items():
+        assert output(build()) == local[name], name
+
+    gc.collect()
+    persisted = sc._jsc.getPersistentRDDs()
+    cached = [
+        rid for rid in persisted.keySet().toArray()
+        if rid not in before
+        and not persisted.get(rid).rdd().isLocallyCheckpointed()
+    ]
+    assert not cached, cached
+
+
 def test_bpe_merge_fold_leftmost_first(spark):
     """The fold applies a merge leftmost-first over overlaps (aaa with
     merge (a,a) -> [aa, a]) and single-symbol arrays pass through —
