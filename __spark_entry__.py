@@ -755,9 +755,9 @@ def _q_session_stats(spark, sf_dir):
 
 def _q_pretrain_clean(spark, sf_dir):
     """End-to-end cleaning composition (language → quality → Gopher
-    repetition → exact dedup) as one plan — ``pipeline/clean.py``. Row-local
-    gates run first; the aggregation gate sees only survivors; the content
-    digest shuffle runs last on the smallest set."""
+    repetition → exact dedup) as one plan — ``pipeline/clean.py``. Every
+    gate is a row-local filter on one lineage; the content digest shuffle
+    runs last on the survivors."""
     from spark_timeseries_spark.pipeline.clean import pretrain_clean
 
     docs = _docs_spread(spark, sf_dir)
@@ -906,13 +906,13 @@ def _q_stratified_sample(spark, sf_dir):
 def _q_repetition_features(spark, sf_dir):
     """Gopher-style within-document repetition signals (Rae et al. 2021):
     duplicate-line ratios + most-frequent word n-gram coverage — the
-    standard pre-training repetition gate, as relational explode→groupBy
-    aggregation (``pipeline/text.py::repetition_features``)."""
+    standard pre-training repetition gate, as one row-local projection
+    (``pipeline/text.py::repetition_features``)."""
     from spark_timeseries_spark.pipeline import text as text_ops
 
     docs = _docs_spread(spark, sf_dir)
     # only the 2-/3-gram ratios are output — don't pay for the 4-gram
-    # explode+aggregate (the gopher_repetition query covers n=4)
+    # sort (the gopher_repetition query covers n=4)
     out = text_ops.repetition_features(docs, top_ngram_ns=(2, 3))
     return out.select(
         "doc_id",
@@ -7185,9 +7185,11 @@ def _hurst_sql(sizes=(8, 16, 32)) -> str:
 def _rep_features_sql(ns=(2, 3, 4)) -> str:
     """CTE block replaying ``pipeline.text.repetition_features`` exactly:
     relation ``rep`` with doc_id, n_lines, dup_line_ratio,
-    dup_line_char_ratio, top{n}gram_char_ratio. Tie-break parity: Spark's
-    max(struct(cnt, gram)) picks the lexicographically LARGEST gram among
-    max-count n-grams → ORDER BY cnt DESC, gram DESC here."""
+    dup_line_char_ratio, top{n}gram_char_ratio. Tie-break parity: Spark
+    sorts each document's n-grams and keeps the greatest (count, gram)
+    run, so the lexicographically LARGEST gram wins among max-count
+    n-grams, whatever their lengths → ORDER BY cnt DESC, gram DESC here
+    (``tests/test_entry_contract.py`` checks the two value for value)."""
     parts = [r"""
     WITH lines AS (
         SELECT doc_id, trim(l) AS line

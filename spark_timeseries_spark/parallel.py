@@ -173,11 +173,13 @@ def collect_at_most(
     """``(cut, rows)``: ``df`` local-checkpointed, and its rows when it has
     at most ``bound`` of them, else ``None``.
 
-    One ``limit(bound + 1).collect()`` decides and brings a small frame
-    back. Spark fills the rest of a lazy local checkpoint after the first
-    job on it, so a distributed loop over ``cut`` does not re-run ``df``.
-    No count and no cache handle: the blocks are reclaimed once ``cut``
-    is garbage-collected, and are not recomputed if an executor is lost."""
+    One ``coalesce(1).limit(bound + 1).collect()`` decides in one job: its
+    one task reads the partitions in turn, so at or below the bound it
+    fills the whole checkpoint. Above it Spark fills the partitions the
+    probe did not reach in one more, parallel job, so a distributed loop
+    over ``cut`` does not re-run ``df``. No count and no cache handle: the
+    blocks are reclaimed once ``cut`` is garbage-collected, and are not
+    recomputed if an executor is lost."""
     cut = df.localCheckpoint(eager=False)
-    rows = cut.limit(bound + 1).collect()
+    rows = cut.coalesce(1).limit(bound + 1).collect()
     return cut, (rows if len(rows) <= bound else None)

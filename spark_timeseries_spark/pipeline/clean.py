@@ -1,24 +1,30 @@
 """End-to-end pre-training corpus cleaning: the composition a real
 training-data pipeline runs, as ONE lazy Catalyst plan.
 
-Gate order is the scale-aware one — cheapest, most-selective, row-local
-predicates first so later (aggregation-bearing) stages see only survivors:
+Every per-document gate is a ``where`` on the one document lineage, in
+this order:
 
-1. language gate — pure row-local expression, evaluated in the scan's
-   project (no shuffle);
-2. quality gate — row-local column on the SAME lineage (no second scan,
-   :func:`..text.quality_score_col`);
-3. Gopher repetition gate — the only aggregation-based signal
-   (explode → groupBy, see :func:`..text.repetition_features`), computed
-   ONLY over docs that survived the row-local gates;
-4. exact dedup last — one shuffle on the content digest over the smallest
-   surviving set.
+1. the optional blocked-phrase and blocked-domain gates (regex filters);
+2. language gate (stopword scores, :func:`..text.language_id`);
+3. quality gate (:func:`..text.quality_score_col`);
+4. the optional zlib compression gate (:func:`..text.compression_sizes`,
+   an Arrow-batched pandas UDF; a NULL ratio — empty text — passes);
+5. Gopher repetition gate (:func:`..text.repetition_keep`): each
+   document sorts its own n-grams, no shuffle.
 
-The repetition gate and the final join are separate consumers of the
-row-local survivors, so without materialization Spark re-scans the corpus
-once per consumer (re-applying the cheap gates each time — correct, just
-redundant I/O). At real scale pass ``persist_intermediate=True`` to cache
-the filtered survivors once — corpus parquet is then read exactly once.
+Catalyst may evaluate the JVM conjuncts below the pandas UDF's Python
+crossing; every gate reads one row, so the order does not change the
+answer. Each row is judged alone, so NULL and shared ids are ordinary
+documents. After the gates come the optional CCNet perplexity gate (a
+left-anti join on the id), the optional rewrite stages (paragraph dedup,
+span removal) and the exact dedup, whose window is the one exchange the
+default chain plans.
+
+``persist_intermediate=True`` caches a frame only where a later stage
+reads it twice: the gated documents ahead of the perplexity join, or
+the survivors the rewrite stages scan several times (the later of the
+two when both are on). With neither on, nothing is cached: one scan of
+the corpus feeds every gate.
 """
 
 from __future__ import annotations
@@ -30,35 +36,29 @@ from pyspark.sql import functions as F
 
 from ..functions import literal
 from .dedup import dedup_exact
-from .text import gopher_repetition_filter, language_id, quality_score_col
+from .text import compression_sizes, language_id, quality_score_col, repetition_keep
 
 
 @dataclass
 class CleanResult:
-    """Handle pair from :func:`pretrain_clean` with caching enabled.
+    """Handle pair from :func:`pretrain_clean` with
+    ``persist_intermediate=True``.
 
-    ``df`` is the cleaned corpus; ``cached`` is the persisted row-local
-    survivor frame both downstream consumers share (r3 VERDICT #6 — a
-    dynamic attribute on the result DataFrame evaporated on the next
-    transformation, leaking the cache). The caller owns the cache:
-    call :meth:`release` (or ``cached.unpersist()``) once ``df`` has been
-    materialized. Usable as a context manager::
+    ``df`` is the cleaned corpus; ``cached`` is the persisted frame a
+    later stage reads twice, or ``None`` when no stage does. The caller
+    owns the cache: call :meth:`release` (or ``cached.unpersist()``) once
+    ``df`` has been materialized. Usable as a context manager::
 
         with pretrain_clean(docs, persist_intermediate=True) as clean:
             clean.write.parquet(out_path)
     """
 
     df: DataFrame
-    cached: DataFrame
-    #: also-persisted survivor frame when a rewrite gate multiplied its
-    #: consumers (paragraph dedup / span removal scan their input several
-    #: times); released together with ``cached``
-    cached_survivors: DataFrame | None = None
+    cached: DataFrame | None = None
 
     def release(self) -> None:
-        self.cached.unpersist()
-        if self.cached_survivors is not None:
-            self.cached_survivors.unpersist()
+        if self.cached is not None:
+            self.cached.unpersist()
 
     def __enter__(self) -> DataFrame:
         return self.df
@@ -88,17 +88,15 @@ def pretrain_clean(
     """Language → quality → Gopher-repetition → [paragraph dedup] →
     [span removal] → exact-dedup chain; returns the surviving documents
     with their original columns plus ``quality``.
-    With ``persist_intermediate=True`` the row-local survivors are cached
-    and the return value is a :class:`CleanResult` — ``result.df`` plus the
-    ``result.cached`` frame to ``.unpersist()`` when done (unpersisting
-    the result frame itself would not release it).
+    With ``persist_intermediate=True`` the return value is a
+    :class:`CleanResult` — ``result.df`` plus the ``result.cached`` frame
+    (see the module docstring) to release when done.
 
-    Optional gates (all off by default, all joining the ROW-LOCAL stage
-    so they ride the same scan): ``blocklist`` (C4 phrase gate),
-    ``blocked_domains`` (link hygiene), and ``min_compression_ratio``
-    — a MINIMUM compressibility gate in the Gopher spirit: ratios BELOW
-    the threshold mean near-pure repetition (the pandas-UDF crossing is
-    still one projection, no shuffle).
+    Optional gates (all off by default, all row-local filters on the same
+    lineage): ``blocklist`` (C4 phrase gate), ``blocked_domains`` (link
+    hygiene), and ``min_compression_ratio`` — a MINIMUM compressibility
+    gate in the Gopher spirit: ratios BELOW the threshold mean near-pure
+    repetition.
 
     Optional REWRITE stages (off by default) cover the package's two
     remaining dedup modalities — applied between the repetition gate and
@@ -120,20 +118,23 @@ def pretrain_clean(
         gated = phrase_blocklist(gated, blocklist, text_col, id_col)
     if blocked_domains:
         gated = domain_blocklist(gated, blocked_domains, text_col, id_col)
-    scored = (
+    gated = (
         gated.where(language_id(text_col) == lang)
         .withColumn("quality", quality_score_col(text_col))
         .where(f"quality >= {literal(min_quality)}")
     )
     if min_compression_ratio is not None:
-        from .text import compression_ratio
-
-        too_templated = (
-            compression_ratio(scored, text_col, id_col)
-            .where(F.col("compression_ratio") < min_compression_ratio)
-            .select(id_col)
+        gated = (
+            gated.withColumn("_z", compression_sizes(text_col))
+            .where(
+                "coalesce(_z.compression_ratio >= "
+                f"{literal(min_compression_ratio)}, true)"
+            )
+            .drop("_z")
         )
-        scored = scored.join(too_templated, id_col, "left_anti")
+    survivors = gated.where(repetition_keep(text_col, rep_thresholds))
+    rewriting = dedup_paragraph or remove_span_grams is not None
+    cached = None
     if max_perplexity is not None:
         # CCNet-style LM gate: drop documents a reference-corpus bigram LM
         # finds too surprising (boilerplate/garbled text scores high).
@@ -144,28 +145,20 @@ def pretrain_clean(
             raise ValueError("max_perplexity needs a fitted lm (NgramLM)")
         from .lm import score_perplexity
 
+        if persist_intermediate and not rewriting:
+            survivors = cached = survivors.persist()
         too_surprising = (
-            score_perplexity(scored, lm, text_col, id_col)
+            score_perplexity(survivors, lm, text_col, id_col)
             .where(F.col("perplexity") > float(max_perplexity))
             .select(id_col)
         )
-        scored = scored.join(too_surprising, id_col, "left_anti")
-    if persist_intermediate:
-        scored = scored.persist()
-    rep = gopher_repetition_filter(
-        scored, text_col, id_col, thresholds=rep_thresholds
-    ).where(F.col("keep"))
-    survivors = scored.join(rep.select(id_col), id_col)
-    rewriting = dedup_paragraph or remove_span_grams is not None
-    cached_survivors = None
+        survivors = survivors.join(too_surprising, id_col, "left_anti")
     if rewriting and persist_intermediate:
         # the rewrite stages each scan their input several times
         # (paragraph dedup: canon/join/counts; span removal: grams +
         # rebuild) — without this cache every internal consumer re-runs
-        # the gate joins, multiplying the plan (measured: >100 exchanges
-        # in the fully-composed lazy plan vs ~20 cached)
-        survivors = survivors.persist()
-        cached_survivors = survivors
+        # the gates and joins ahead of it
+        survivors = cached = survivors.persist()
     if dedup_paragraph:
         para = dedup_paragraphs(survivors, text_col, id_col, hash_fn=hash_fn)
         survivors = survivors.drop(text_col).join(
@@ -184,9 +177,7 @@ def pretrain_clean(
         )
     out = dedup_exact(survivors, text_col, id_col, normalize=normalize_digest)
     if persist_intermediate:
-        return CleanResult(
-            df=out, cached=scored, cached_survivors=cached_survivors
-        )
+        return CleanResult(df=out, cached=cached)
     return out
 
 

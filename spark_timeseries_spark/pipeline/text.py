@@ -495,90 +495,76 @@ def repetition_features(
       frequent word n-gram (occurrences × n-gram length, over text length);
       ties break to the lexicographically largest n-gram (deterministic).
 
-    Shape: explode → (id, unit) groupBy → per-doc aggregate. Every stage is
-    map-side-combinable relational aggregation keyed by ``id_col`` (no
-    per-doc Python, no O(len²) HOF over arrays — see the winnowing note),
-    so it scales exactly like a word-count at 100 TB. The TEXT column is
-    scanned exactly THREE times regardless of ``len(top_ngram_ns)`` — base
-    lengths, lines, and ONE tagged explode carrying every n-gram size —
-    instead of 2+|ns| scans of the corpus.
+    NULL, empty and whitespace-only text read 0 on every signal. Each row
+    is one document: two rows sharing an id keep their own values.
+
+    Shape: one row-local projection. Each document sorts its own n-grams
+    in place, O(L log L) in its token count L, and nothing is shuffled: a
+    relational form (explode every line and n-gram, group by id, join
+    back) moves ~3× the corpus's token count through exchanges to compute
+    the same per-document values.
     """
-    t, key = ident(text_col), ident(id_col)
-    top_ngram_ns = [int(n) for n in top_ngram_ns]
-    lines = df.selectExpr(
-        key,
-        f"explode(filter(transform(split({t}, {_NL}), "
-        "l -> trim(l)), l -> l != '')) AS line",
-    )
-    line_stats = (
-        lines.groupBy(id_col, "line")
-        .agg(F.expr("count(*) AS cnt"), F.expr("length(line) AS len"))
-        .groupBy(id_col)
-        .agg(
-            F.expr("sum(cnt) AS n_lines"),
-            F.expr("1 - try_divide(count(*), sum(cnt)) AS dup_line_ratio"),
-            F.expr(
-                "try_divide(sum((cnt - 1) * len), sum(cnt * len)) "
-                "AS dup_line_char_ratio"
-            ),
-        )
+    rep = expr_over(text_col, lambda t: _repetition_sql(t, top_ngram_ns))
+    return df.select(F.col(ident(id_col)), rep.alias("_rep")).select(
+        ident(id_col), "_rep.*"
     )
 
-    def _grams_for(n: int) -> str:
+
+def _repetition_sql(t: str, top_ngram_ns) -> str:
+    """SQL text of the :func:`repetition_features` struct over the text
+    expression ``t``.
+
+    Lines and lower-cased tokens are let-bound once per document (a lambda
+    that referenced the split itself would re-run it per element). Each
+    n-gram array is sorted, and one run-length ``aggregate`` keeps the
+    greatest ``(count, gram)``, as ``max(struct(cnt, gram))`` over a
+    group-by would: the top count, ties to the larger gram."""
+    strs = "CAST(array() AS ARRAY<STRING>)"
+    lines = (
+        f"coalesce(filter(transform(split({t}, {_NL}), l -> trim(l)), "
+        f"l -> l != ''), {strs})"
+    )
+    toks = f"coalesce({tokens_sql(f'lower({t})')}, {strs})"
+
+    def chars(a: str) -> str:
+        return f"aggregate({a}, 0L, (s, l) -> s + length(l))"
+
+    def top_chars(n: int) -> str:
         # guard: sequence(1, stop) with stop < 1 yields a DESCENDING [1, 0],
         # not an empty array — short docs must produce zero n-grams instead
+        grams = (
+            f"CASE WHEN size(d.toks) >= {n} THEN transform("
+            f"sequence(1, size(d.toks) - {n - 1}), "
+            f"i -> concat_ws(' ', slice(d.toks, i, {n}))) ELSE {strs} END"
+        )
+        run = "named_struct('c', s.c, 'g', s.g)"
         return (
-            f"transform(CASE WHEN size(toks) >= {n} THEN "
-            f"sequence(1, size(toks) - {n - 1}) "
-            "ELSE CAST(array() AS ARRAY<INT>) END, "
-            f"i -> named_struct('n', {n}, 'gram', concat_ws(' ', slice(toks, i, {n}))))"
+            f"aggregate(sort_array({grams}), "
+            "named_struct('g', '', 'c', 0L, 'top', named_struct('c', 0L, 'g', '')), "
+            "(s, x) -> IF(x = s.g, named_struct('g', x, 'c', s.c + 1, 'top', s.top), "
+            f"named_struct('g', x, 'c', 1L, 'top', greatest(s.top, {run}))), "
+            f"s -> transform(array(greatest(s.top, {run})), m -> m.c * length(m.g))[0])"
         )
 
-    # let-bind the token array: referencing the split expression inside the
-    # transform lambdas would re-tokenize once PER TOKEN per n (interpreted
-    # HOF, the same O(len²) trap the winnowing note documents — measured
-    # ~4× on this operator even at 54-token docs)
-    all_grams = (
-        f"transform(array({tokens_sql(f'lower({t})')}), toks -> "
-        f"concat({', '.join(_grams_for(n) for n in top_ngram_ns)}))[0]"
+    fields = [
+        "'n_lines', CAST(size(d.lines) AS BIGINT)",
+        "'dup_line_ratio', "
+        "coalesce(1 - try_divide(size(u.lines), size(d.lines)), 0.0D)",
+        "'dup_line_char_ratio', "
+        f"coalesce(try_divide(u.chars - {chars('u.lines')}, u.chars), 0.0D)",
+        *[
+            f"'top{n}gram_char_ratio', "
+            f"coalesce(try_divide({top_chars(n)}, d.len), 0.0D)"
+            for n in (int(n) for n in top_ngram_ns)
+        ],
+    ]
+    distinct = (
+        f"named_struct('lines', array_distinct(d.lines), 'chars', {chars('d.lines')})"
     )
-    grams = df.selectExpr(key, f"explode({all_grams}) AS g").selectExpr(
-        key, "g.n AS n", "g.gram AS gram"
-    )
-    tops = (
-        grams.groupBy(id_col, "n", "gram")
-        .agg(F.expr("count(*) AS cnt"))
-        .groupBy(id_col, "n")
-        .agg(F.expr("max(struct(cnt, gram)) AS _m"))
-        .groupBy(id_col)
-        # pivot over the statically-known n values → one row per doc
-        .agg(
-            *[
-                F.expr(
-                    f"max(CASE WHEN n = {n} THEN _m.cnt * length(_m.gram) END) "
-                    f"AS _top{n}_chars"
-                )
-                for n in top_ngram_ns
-            ]
-        )
-    )
-
     return (
-        df.selectExpr(key, f"length({t}) AS _len")
-        .join(line_stats, id_col, "left")
-        .join(tops, id_col, "left")
-        .selectExpr(
-            key,
-            "n_lines",
-            "dup_line_ratio",
-            "dup_line_char_ratio",
-            *[
-                f"coalesce(try_divide(_top{n}_chars, _len), 0.0D) "
-                f"AS top{n}gram_char_ratio"
-                for n in top_ngram_ns
-            ],
-        )
-        .na.fill({"n_lines": 0, "dup_line_ratio": 0.0, "dup_line_char_ratio": 0.0})
+        f"transform(array(named_struct('lines', {lines}, 'toks', {toks}, "
+        f"'len', length({t}))), d -> transform(array({distinct}), "
+        f"u -> named_struct({', '.join(fields)}))[0])[0]"
     )
 
 
@@ -600,14 +586,26 @@ def gopher_repetition_filter(
     thresholds: dict[str, float] | None = None,
 ) -> DataFrame:
     """(id, keep) per document: keep = no repetition signal over threshold.
-    Filter-style counterpart of :func:`repetition_features`."""
+    Filter-style counterpart of :func:`repetition_features`; one
+    projection of :func:`repetition_keep`."""
+    keep = repetition_keep(text_col, thresholds)
+    return df.select(F.col(ident(id_col)), keep.alias("keep"))
+
+
+def repetition_keep(
+    text: ColumnOrName, thresholds: dict[str, float] | None = None
+) -> Column:
+    """BOOLEAN column: no :func:`repetition_features` signal of ``text``
+    is over its bound (default :data:`GOPHER_REPETITION_THRESHOLDS`)."""
     th = dict(GOPHER_REPETITION_THRESHOLDS if thresholds is None else thresholds)
-    feats = repetition_features(df, text_col, id_col)
     # parenthesized left-deep: the parser balances a flat chain of ANDs
     cond = "true"
     for name, bound in th.items():
-        cond = f"({cond} AND coalesce({ident(name)}, 0.0D) <= {literal(bound)})"
-    return feats.selectExpr(ident(id_col), f"{cond} AS keep")
+        cond = f"({cond} AND r.{ident(name)} <= {literal(bound)})"
+    return expr_over(
+        text,
+        lambda t: f"transform(array({_repetition_sql(t, (2, 3, 4))}), r -> {cond})[0]",
+    )
 
 
 def winnowing_fingerprints(
@@ -758,14 +756,22 @@ def compression_ratio(
     """(id, raw_bytes, zlib_bytes, compression_ratio) — the zlib
     compressibility quality signal (highly compressible ⇒ repetitive/
     templated text; used by Gopher-era and RedPajama-era filters alongside
-    the explicit repetition rules).
+    the explicit repetition rules); one projection of
+    :func:`compression_sizes`."""
+    sized = df.select(id_col, compression_sizes(text_col, level).alias("_s"))
+    return sized.select(ident(id_col), "_s.*")
+
+
+def compression_sizes(text: ColumnOrName, level: int = 6) -> Column:
+    """struct<raw_bytes, zlib_bytes, compression_ratio> of ``text`` (a
+    Column or a column name). Ratio is zlib_bytes/raw_bytes over UTF-8;
+    empty or NULL text reports NULL ratio.
 
     This is one of the few deliberately-Python operators in the pipeline:
     Spark has no JVM compression EXPRESSION (codecs exist only at the
     storage layer), so the rule drops to an Arrow-batched pandas UDF —
     row-local, no shuffle, and the batch boundary is the only Python
-    crossing. Ratio is zlib_bytes/raw_bytes over UTF-8; empty text
-    reports NULL ratio."""
+    crossing."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -777,18 +783,16 @@ def compression_ratio(
             b = (t or "").encode("utf-8")
             raw.append(len(b))
             comp.append(len(zlib.compress(b, level)))
-        return pd.DataFrame({"raw_bytes": raw, "zlib_bytes": comp})
+        out = pd.DataFrame({"raw_bytes": raw, "zlib_bytes": comp})
+        # empty text: NaN, which Arrow sends as a NULL ratio
+        nonempty = out.raw_bytes.where(out.raw_bytes > 0)
+        out["compression_ratio"] = out.zlib_bytes / nonempty
+        return out
 
-    _sizes = pandas_udf(_sizes_fn, "struct<raw_bytes: long, zlib_bytes: long>")
-
-    sized = df.select(id_col, _sizes(text_col).alias("_s"))
-    return sized.selectExpr(
-        ident(id_col),
-        "_s.raw_bytes AS raw_bytes",
-        "_s.zlib_bytes AS zlib_bytes",
-        "CASE WHEN _s.raw_bytes > 0 THEN _s.zlib_bytes / _s.raw_bytes END "
-        "AS compression_ratio",
-    )
+    return pandas_udf(
+        _sizes_fn,
+        "struct<raw_bytes: long, zlib_bytes: long, compression_ratio: double>",
+    )(text)
 
 
 def readability(

@@ -51,3 +51,47 @@ def test_every_query_has_oracle_or_documented_gap(spark):
 def test_entry_returns_dataframe(spark):
     df = entry.entry(spark)
     assert df.columns  # stable, non-empty schema
+
+
+def test_repetition_features_match_the_duckdb_replay(spark):
+    """``repetition_features`` equals the oracle's DuckDB replay
+    (``_rep_features_sql``) value for value on the edges the two write
+    differently: max-count n-gram ties between grams of unequal length,
+    space-padded repeated lines, empty, whitespace-only and NULL text,
+    documents shorter than n, and single-line documents."""
+    import duckdb
+    import pandas as pd
+
+    from spark_timeseries_spark.pipeline.text import repetition_features
+
+    docs = [
+        (0, "a b a b zzz yyy zzz yyy"),            # 2-gram tie: "zzz yyy" wins
+        (1, "ccc ddd x ccc ddd y ee ff ee ff"),     # tie at 2, longer gram wins
+        (2, "q r s q r s"),                         # 3-gram tie with itself
+        (3, "  same line  \nsame line\n same line \nother text"),
+        (4, ""),
+        (5, "   "),
+        (6, None),
+        (7, "hi"),
+        (8, "hi there"),                            # shorter than 3 and 4
+        (9, "one single line with the the words"),
+        (10, "The the THE tHe\n\n\nthe THE"),         # case folds, blank lines
+        (11, "b a\nb a\na b"),
+    ]
+    ns = (2, 3, 4)
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    feats = repetition_features(df, top_ngram_ns=ns)
+    got = {r.doc_id: tuple(r) for r in feats.collect()}
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(docs, columns=["doc_id", "text"]))
+    cols = ["doc_id", "n_lines", "dup_line_ratio", "dup_line_char_ratio",
+            *[f"top{n}gram_char_ratio" for n in ns]]
+    want = {
+        int(r[0]): (int(r[0]), int(r[1]), *map(float, r[2:]))
+        for r in con.execute(
+            entry._rep_features_sql(ns) + f" SELECT {', '.join(cols)} FROM rep"
+        ).fetchall()
+    }
+    con.close()
+    assert got == want

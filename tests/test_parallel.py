@@ -233,3 +233,45 @@ def test_no_routing_bound_options():
     assert "method" not in inspect.signature(
         TimeSeriesDataFrame.corr_matrix
     ).parameters
+
+
+def _jobs(spark, group, action):
+    """Jobs ``action()`` runs under a fresh job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("bound", [3, 5, 100])
+def test_collect_at_most_takes_one_job_at_or_below_the_bound(spark, bound):
+    """A 4-partition frame whose first partition holds fewer than
+    ``bound + 1`` rows is probed, and its checkpoint filled, in one job."""
+    from spark_timeseries_spark.parallel import collect_at_most
+
+    df = spark.range(0, 3, numPartitions=4).where(F.col("id") >= 0)
+    assert df.rdd.getNumPartitions() == 4
+    (cut, rows), n = _jobs(
+        spark, f"probe-{bound}", lambda: collect_at_most(df, bound)
+    )
+    assert n == 1
+    assert sorted(r.id for r in rows) == [0, 1, 2]
+    assert cut._jdf.queryExecution().analyzed().rdd().isCheckpointed()
+
+
+def test_collect_at_most_above_the_bound(spark):
+    """Above the bound the rows are ``None`` and the checkpoint is still
+    filled: a second read returns every row."""
+    from spark_timeseries_spark.parallel import collect_at_most
+
+    df = spark.range(0, 40, numPartitions=4)
+    cut, rows = collect_at_most(df, 5)
+    assert rows is None
+    assert cut._jdf.queryExecution().analyzed().rdd().isCheckpointed()
+    assert sorted(r.id for r in cut.collect()) == list(range(40))
