@@ -22,7 +22,13 @@ count window and unioned in one lazy plan. Each caller owns its bound
 an option.
 
 :func:`collect_at_most` is the one size gate of every driver-local loop
-(``pagerank``, ``connected_components``, ``bpe_train``).
+(``pagerank``, ``connected_components``, ``bpe_train``), and
+:func:`local_relation` hands a driver-local result back to Spark: built
+from a ``pyarrow.Table`` it plans a ``LocalRelation`` with its real size
+(72 bytes for 3 rows of two longs), where ``createDataFrame(list)``
+plans an RDD scan of unknown size filled by Python-worker tasks, so a
+join against it is planned as a shuffle join until adaptive execution
+has run the shuffles.
 
 ``spread_kernel`` keeps the ``2·cores + 1`` key repartition for the JVM
 pair-fold stages in ``operators/rolling.py``, which pay no Python task
@@ -36,9 +42,11 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator, Sequence
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 #: Arrow → pandas widens a nullable column when THIS frame holds a NULL
 #: (integers to float64, booleans to object). applyInPandas converts per
@@ -183,3 +191,17 @@ def collect_at_most(
     cut = df.localCheckpoint(eager=False)
     rows = cut.coalesce(1).limit(bound + 1).collect()
     return cut, (rows if len(rows) <= bound else None)
+
+
+def local_relation(
+    spark, schema: T.StructType, columns: Sequence[Sequence]
+) -> DataFrame:
+    """A frame of ``schema`` whose i-th column holds ``columns[i]``, built
+    through Arrow: a ``LocalRelation`` whose size the optimizer knows, so
+    a join against it broadcasts from the start. No job runs."""
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)

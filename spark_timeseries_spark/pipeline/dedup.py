@@ -22,11 +22,13 @@ SimHash, n-gram Jaccard, and embedding-cosine near-dup — all designed for the
 
 from __future__ import annotations
 
+import logging
 import warnings
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from spark_timeseries_spark.functions import (
     expr_over,
@@ -35,9 +37,11 @@ from spark_timeseries_spark.functions import (
     ident,
 )
 from spark_timeseries_spark.functions.sqltext import ColumnOrName
-from spark_timeseries_spark.parallel import collect_at_most
+from spark_timeseries_spark.parallel import collect_at_most, local_relation
 from spark_timeseries_spark.pipeline import graph
 from spark_timeseries_spark.pipeline.text import tokens_sql
+
+log = logging.getLogger(__name__)
 
 
 def content_digest(text: Column, normalize: bool = True) -> Column:
@@ -102,9 +106,11 @@ def shingle_sets(
     shingle_n: int = 3,
 ) -> DataFrame:
     """(id, sh ARRAY<STRING>) distinct-shingle signature table. Shingling is
-    the expensive stage of every text-dedup pipeline, so callers that need it
-    more than once (signatures + exact verify) should ``.persist()`` the
-    result — it is ~2 orders of magnitude smaller than the corpus."""
+    the expensive stage of every text-dedup pipeline, so a caller that reads
+    it more than once (signatures + exact verify) should cut it with
+    ``localCheckpoint(eager=False)``, as :func:`dedup_minhash_lsh` does: it
+    is then computed once, by the first job that reads it, and holds no
+    cache handle. It is ~2 orders of magnitude smaller than the corpus."""
     return df.selectExpr(
         f"{ident(id_col)} AS id",
         f"{_shingles_sql(ident(text_col), int(shingle_n), True)} AS sh",
@@ -337,8 +343,8 @@ def jaccard_verify(
     sets: DataFrame | None = None,
 ) -> DataFrame:
     """Exact Jaccard on candidate pairs only → (id_a, id_b, jaccard).
-    Pass a precomputed/persisted ``sets`` (from :func:`shingle_sets`) to
-    avoid re-shingling the corpus."""
+    Pass a precomputed ``sets`` (from :func:`shingle_sets`, cut with a lazy
+    ``localCheckpoint``) to avoid re-shingling the corpus."""
     if sets is None:
         sets = shingle_sets(df, text_col, id_col, shingle_n)
     return _jaccard_join(candidates, sets, sets, "id_a", "id_b", threshold)
@@ -356,31 +362,30 @@ def dedup_minhash_lsh(
     cache_registry: list | None = None,
 ) -> DataFrame:
     """End-to-end near-dup pair detection: signatures → LSH candidates →
-    exact verification. The shingle-set table is computed once and persisted;
-    it feeds both the signature stage and the exact-verify join.
+    exact verification. The shingle-set table feeds both the signature
+    stage and the exact-verify join, and the signature table both sides of
+    the banded self-join; each is cut with ``localCheckpoint(eager=False)``,
+    so each is computed once, by the first job that reads it, and later
+    readers (in that job or a later one) read its blocks.
 
-    Persist lifetime: the shingle-set cache lives until the session drops it
-    — the CALLER owns it. Long-lived sessions issuing many dedup calls should
-    ``spark.catalog.clearCache()`` between pipelines (bench.py does exactly
-    that), or materialize the result and unpersist explicitly. Looping
-    callers (micro-batch gates, ingest loops) pass ``cache_registry`` — a
-    list this function APPENDS every internally-persisted frame to, so the
-    loop can ``unpersist()`` them once the batch result is materialized
-    (without it, each call leaks one cached sets + sig table for the
-    session's lifetime — unbounded executor storage on a stream)."""
-    sets = shingle_sets(df, text_col, id_col, shingle_n).persist()
-    # the signature table feeds BOTH sides of the banded self-join in
-    # minhash_lsh_candidates — without a persist Spark evaluates the whole
-    # shingle→minhash subtree twice (measured: the sig stage alone doubled
-    # the pipeline's wall time). It is tiny (one row × num_hashes longs per
-    # doc), so caching is essentially free at any scale.
-    sig = minhash_signatures_from_sets(
-        sets.withColumnRenamed("id", id_col), id_col, num_hashes, hash_fn=hash_fn
-    ).persist()
-    if cache_registry is not None:
-        cache_registry += [sets, sig]
+    Lifetime: a lazy local checkpoint holds no cache handle; its blocks are
+    reclaimed when the returned frame is garbage-collected, so a loop over
+    many calls leaks no executor storage. ``cache_registry`` is kept for
+    callers that pass one (micro-batch gates, ingest loops) and receives
+    nothing: there is no cached frame to release."""
     if bands < 1 or num_hashes < bands:
         raise ValueError(f"need 1 <= bands ({bands}) <= num_hashes ({num_hashes})")
+    sets = shingle_sets(df, text_col, id_col, shingle_n).localCheckpoint(eager=False)
+    # the signature table feeds BOTH sides of the banded self-join in
+    # minhash_lsh_candidates: without a cut Spark may evaluate the whole
+    # shingle→minhash subtree twice (measured: the sig stage alone doubled
+    # the pipeline's wall time). With broadcast joins off, a copy without
+    # either cut ran the shingle projection twice per call; with them, once
+    # (PERFORMANCE.md "Dedup in one lineage"). It is tiny (one row ×
+    # num_hashes longs per doc).
+    sig = minhash_signatures_from_sets(
+        sets.withColumnRenamed("id", id_col), id_col, num_hashes, hash_fn=hash_fn
+    ).localCheckpoint(eager=False)
     cand = minhash_lsh_candidates(
         sig, id_col, bands, num_hashes // bands, hash_fn=hash_fn,
         num_hashes=num_hashes,
@@ -597,18 +602,26 @@ def connected_components(
     whose diameter exceeds the bound — returning those labels silently
     would under-dedup with no signal (r3 VERDICT #2). ``on_nonconverged``
     controls the failure mode: ``"raise"`` (default) raises RuntimeError;
-    ``"warn"`` logs a warning and returns the partial labels (each partial
+    ``"warn"`` emits a ``RuntimeWarning``, logs a WARNING record on this
+    module's logger, and returns the partial labels (each partial
     component is still a valid subset of a true component, so downstream
     dedup is conservative — it keeps too much, never drops a unique doc).
 
-    Each round's labels are eagerly ``localCheckpoint``-ed, not persisted:
-    persist caches DATA but keeps the full logical plan, so an iterative
-    loop's plan doubles per round — by round ~15 the driver OOMs just
-    stringifying it (observed r4, long-chain property test). The
-    checkpoint truncates lineage, keeping every round's plan O(1). The
-    returned frame is therefore already materialized distributed storage;
-    its blocks free when the frame is garbage-collected (``.unpersist()``
-    on it is a harmless no-op, so r3-era callers still work)."""
+    The pairs are symmetrized in one pass (:func:`~.graph.symmetrized`)
+    and sized by one bounded probe. At most
+    :data:`~.graph.DRIVER_EDGE_ROWS` distinct edges propagate at the
+    driver, and the labels come back as a
+    :func:`~spark_timeseries_spark.parallel.local_relation` whose size the
+    optimizer knows; above the bound the loop below runs on the cluster.
+
+    On the cluster, each round's labels are eagerly ``localCheckpoint``-ed,
+    not persisted: persist caches DATA but keeps the full logical plan, so
+    an iterative loop's plan doubles per round — by round ~15 the driver
+    OOMs just stringifying it (observed r4, long-chain property test). The
+    checkpoint truncates lineage, keeping every round's plan O(1). Either
+    way the returned frame is already materialized; a checkpoint's blocks
+    free when the frame is garbage-collected (``.unpersist()`` on it is a
+    harmless no-op, so r3-era callers still work)."""
     if on_nonconverged not in ("raise", "warn"):
         raise ValueError(f"on_nonconverged must be raise|warn, got {on_nonconverged!r}")
     # a pair with a NULL id (also a non-numeric string id, NULL after the
@@ -618,9 +631,7 @@ def connected_components(
         F.col(id_a).cast("long").alias("a"), F.col(id_b).cast("long").alias("b")
     ).where(F.col("a").isNotNull() & F.col("b").isNotNull())
     edges, rows = collect_at_most(
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct(),
-        graph.DRIVER_EDGE_ROWS,
+        graph.symmetrized(e, "a", "b"), graph.DRIVER_EDGE_ROWS
     )
     if rows is not None:
         # The pair table is tiny (near-dup edges, not the corpus — the
@@ -673,11 +684,12 @@ def connected_components(
 
 
 def _nonconverged(max_iter: int, on_nonconverged: str, stacklevel: int) -> None:
-    """Raise, or warn and return, when label propagation hit ``max_iter``
-    with labels still moving — the one failure report of both
+    """Raise, or warn, log and return, when label propagation hit
+    ``max_iter`` with labels still moving — the one failure report of both
     :func:`connected_components` paths. ``stacklevel`` is the caller's
     own (counted from the caller), so the warning points at the user's
-    call of :func:`connected_components`."""
+    call of :func:`connected_components`; the WARNING record goes to this
+    module's logger."""
     msg = (
         f"connected_components did not converge in {max_iter} rounds: "
         "a duplicate chain's diameter exceeds max_iter; labels are "
@@ -685,6 +697,7 @@ def _nonconverged(max_iter: int, on_nonconverged: str, stacklevel: int) -> None:
     )
     if on_nonconverged == "raise":
         raise RuntimeError(msg)
+    log.warning(msg)
     warnings.warn(msg, RuntimeWarning, stacklevel=stacklevel + 1)
 
 
@@ -710,8 +723,9 @@ def _components_local(spark, edges, max_iter, on_nonconverged):
             break
     if changed != 0:
         _nonconverged(max_iter, on_nonconverged, stacklevel=3)
-    out = [(k, labels[k]) for k in sorted(labels)]
-    return spark.createDataFrame(out, "id long, component long")
+    ids = sorted(labels)
+    schema = T.StructType([T.StructField(c, T.LongType()) for c in ("id", "component")])
+    return local_relation(spark, schema, [ids, [labels[k] for k in ids]])
 
 
 def keep_cluster_representatives(
@@ -723,12 +737,13 @@ def keep_cluster_representatives(
 ) -> DataFrame:
     """Drop every clustered duplicate except its min-id representative —
     the corpus-side consumer of :func:`connected_components`. One anti-join
-    against the non-representative set; AQE broadcasts it when it is
-    actually small (no pinned hint — at dup-heavy corpora the drop set is
-    a large fraction of the ids and must stay a shuffled join). The
-    component labels come back materialized (a local relation, or the
-    distributed loop's last checkpoint), so the drop set reads them
-    directly."""
+    against the non-representative set, planned from the labels' size (no
+    pinned hint — at dup-heavy corpora the drop set is a large fraction of
+    the ids and must stay a shuffled join). The component labels come back
+    materialized: under the driver-edge bound an Arrow-built local
+    relation of known size, so the anti-join is a broadcast hash join from
+    the start and the corpus is not shuffled; above it the distributed
+    loop's last checkpoint, which carries its plan's size estimate."""
     comp = connected_components(pairs, id_a, id_b)
     drop = comp.where(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)

@@ -26,8 +26,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from spark_timeseries_spark.parallel import collect_at_most
+from spark_timeseries_spark.parallel import collect_at_most, local_relation
 
 __all__ = ["pagerank"]
 
@@ -38,6 +39,17 @@ __all__ = ["pagerank"]
 #: distributed loop exactly; above the bound the distributed loop is the
 #: scale path.
 DRIVER_EDGE_ROWS = 1 << 17
+
+
+def symmetrized(edges: DataFrame, a: str, b: str) -> DataFrame:
+    """The distinct ``(a, b)`` rows of ``edges`` in both directions. One
+    row-local generator emits each row and its swap, so the plan that
+    produced ``edges`` runs once; a union with the swapped projection
+    plans and runs it twice (Spark reuses no exchange across the
+    union's children)."""
+    return edges.selectExpr(
+        f"inline(array(struct({a}, {b}), struct({b} AS {a}, {a} AS {b})))"
+    ).distinct()
 
 
 def pagerank(
@@ -64,7 +76,14 @@ def pagerank(
     one groupBy(dst) — the canonical distributed PageRank step; the
     rank table is localCheckpoint-ed per iteration to cut the
     iterative lineage (the ``connected_components`` discipline). Edge
-    table size, not corpus size, drives the cost."""
+    table size, not corpus size, drives the cost.
+
+    Undirected pairs are symmetrized by :func:`symmetrized`, one pass
+    over ``pairs``. When the distinct edges number at most
+    :data:`DRIVER_EDGE_ROWS` the same iteration runs at the driver on
+    the size probe's rows, and the result comes back as a
+    :func:`~spark_timeseries_spark.parallel.local_relation`: no job
+    after the probe, and a size the optimizer knows."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     if not 1 <= digits <= 9:
@@ -76,13 +95,8 @@ def pagerank(
     e = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     )
-    if not directed:
-        e = e.unionByName(
-            pairs.select(
-                F.col(id_b).alias("src"), F.col(id_a).alias("dst")
-            )
-        )
-    edges, rows = collect_at_most(e.distinct(), DRIVER_EDGE_ROWS)
+    e = e.distinct() if directed else symmetrized(e, "src", "dst")
+    edges, rows = collect_at_most(e, DRIVER_EDGE_ROWS)
     if rows is not None:
         # The decision table (edges) is tiny — the corpus-scale work that
         # PRODUCED it already ran inside the probe above. Iterating on the
@@ -169,19 +183,12 @@ def _pagerank_local(spark, edges, iters, scale, id_type):
         for src, dst in edges:
             inflow[dst] = inflow.get(dst, 0) + pr[src] // deg[src]
         pr = {nid: base + (17 * inflow.get(nid, 0)) // 20 for nid in nodes}
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-        DoubleType,
-    )
-
-    out = [(nid, pr[nid], float(pr[nid]) / float(scale)) for nid in sorted(nodes)]
-    schema = StructType(
-        [
-            StructField("id", id_type, True),
-            StructField("pr_int", LongType(), True),
-            StructField("pr", DoubleType(), True),
-        ]
-    )
-    return spark.createDataFrame(out, schema)
+    ids = sorted(nodes)
+    schema = T.StructType([
+        T.StructField("id", id_type, True),
+        T.StructField("pr_int", T.LongType(), True),
+        T.StructField("pr", T.DoubleType(), True),
+    ])
+    return local_relation(spark, schema, [
+        ids, [pr[n] for n in ids], [float(pr[n]) / float(scale) for n in ids]
+    ])

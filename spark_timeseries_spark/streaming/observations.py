@@ -366,13 +366,15 @@ def near_dedup_gate(
     verified pair (greedy keep-lowest; a chain a~b~c with a<b<c keeps
     only ``a`` — both b and c pair with a lower id).
 
-    Cache lifecycle (the r7 leak): each batch's own shingle-set/signature
-    caches are tracked in a closure registry and unpersisted at the START
-    of the NEXT gate call — deferred one batch because the returned frame
-    is lazy (the sink materializes it after ``gate`` returns), so
-    executor storage is bounded at ONE batch's caches plus the permanent
-    corpus artifact, instead of growing by two tables per micro-batch for
-    the stream's lifetime."""
+    Cache lifecycle (the r7 leak): each batch's own shingle-set cache is
+    tracked in a closure registry and unpersisted at the START of the
+    NEXT gate call — deferred one batch because the returned frame is
+    lazy (the sink materializes it after ``gate`` returns), so executor
+    storage is bounded at ONE batch's cache plus the permanent corpus
+    artifact, instead of growing by a table per micro-batch for the
+    stream's lifetime. The within-batch ``dedup_minhash_lsh`` holds no
+    cache: its lazy local checkpoints free when the frame is
+    garbage-collected."""
     from spark_timeseries_spark.pipeline.dedup import (
         dedup_minhash_cross,
         dedup_minhash_lsh,
@@ -418,7 +420,6 @@ def near_dedup_gate(
                 bands=bands,
                 shingle_n=shingle_n,
                 hash_fn=hash_fn,
-                cache_registry=batch_caches,
             )
             drop = self_pairs.select(
                 F.greatest("id_a", "id_b").alias(id_col)

@@ -528,10 +528,15 @@ def test_connected_components_local_matches_distributed(spark, monkeypatch):
 
 
 @pytest.mark.parametrize("edge_rows", [None, 0], ids=["driver_local", "distributed"])
-def test_nonconvergence_warning_points_at_the_callers_line(spark, monkeypatch, edge_rows):
+def test_nonconvergence_warning_points_at_the_callers_line(
+    spark, monkeypatch, caplog, edge_rows
+):
     """Both connected_components paths report nonconvergence through one
     helper; in warn mode the RuntimeWarning names the line that called
-    connected_components, not a line inside the library."""
+    connected_components, not a line inside the library, and the same
+    message is logged once as a WARNING record on the dedup module's
+    logger."""
+    import logging
     import warnings
 
     import spark_timeseries_spark.pipeline.dedup as dd
@@ -542,13 +547,18 @@ def test_nonconvergence_warning_points_at_the_callers_line(spark, monkeypatch, e
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], "id_a long, id_b long"
     )
-    with warnings.catch_warnings(record=True) as w:
+    with warnings.catch_warnings(record=True) as w, caplog.at_level(
+        logging.WARNING, logger=dd.__name__
+    ):
         warnings.simplefilter("always")
         labels = dd.connected_components(chain, max_iter=2, on_nonconverged="warn")
         labels.unpersist()
     loud = [x for x in w if "did not converge" in str(x.message)]
     assert [x.category for x in loud] == [RuntimeWarning]
     assert loud[0].filename == __file__
+    records = [r for r in caplog.records if r.name == dd.__name__]
+    assert [r.levelno for r in records] == [logging.WARNING]
+    assert records[0].getMessage() == str(loud[0].message)
 
 
 def test_graph_paths_drop_null_id_pairs(spark, monkeypatch):
@@ -2300,6 +2310,103 @@ def test_driver_local_gates_build_in_two_jobs(spark, monkeypatch):
         and not persisted.get(rid).rdd().isLocallyCheckpointed()
     ]
     assert not cached, cached
+
+
+def test_dedup_to_representatives_runs_in_one_lineage(spark, tmp_path):
+    """dedup_minhash_lsh -> keep_cluster_representatives on a small
+    two-file parquet corpus, built and collected under a job group, runs
+    at most 8 jobs (18 when the shingle and signature tables were
+    persisted and the pairs symmetrized by a union), appends nothing to
+    ``cache_registry``, leaves no persisted RDD that is not a local
+    checkpoint, and plans the anti-join as a broadcast of the labels'
+    local relation with no shuffle exchange."""
+    import gc
+    import random
+    import re
+
+    words = (
+        "spark window merge table column vector stream value data small "
+        "join filter big group hash"
+    ).split()
+    rows = []
+    for i in range(40):
+        r = random.Random(i)
+        rows.append((i, " ".join(r.choice(words) for _ in range(30))))
+    rows += [(100 + i, rows[i][1] + " dup") for i in range(0, 40, 5)]
+    spark.createDataFrame(rows, "doc_id long, text string").repartition(
+        2
+    ).write.parquet(str(tmp_path / "docs"))
+    corpus = spark.read.parquet(str(tmp_path / "docs"))
+
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+    group = "dedup-to-representatives"
+    registry: list = []
+    sc.setJobGroup(group, group)
+    try:
+        pairs = dedup.dedup_minhash_lsh(
+            corpus, threshold=0.8, cache_registry=registry
+        )
+        kept = dedup.keep_cluster_representatives(corpus, pairs)
+        ids = sorted(r.doc_id for r in kept.collect())
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert ids == list(range(40)), ids  # every near-copy dropped
+    assert jobs <= 8, jobs
+    assert registry == []
+
+    plan = kept._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "LocalTableScan" in plan, plan
+    assert not re.search(r"\bExchange\b", plan), plan
+
+    gc.collect()
+    persisted = sc._jsc.getPersistentRDDs()
+    cached = [
+        rid for rid in persisted.keySet().toArray()
+        if rid not in before
+        and not persisted.get(rid).rdd().isLocallyCheckpointed()
+    ]
+    assert not cached, cached
+
+
+def test_graph_local_paths_probe_one_pass_and_return_local_relations(
+    spark, monkeypatch
+):
+    """connected_components and pagerank symmetrize their pairs with one
+    row-local generator, so the frame each hands its size probe plans no
+    Union (which ran the pair table's plan twice); under the bound each
+    returns a LocalRelation whose size the optimizer knows."""
+    import spark_timeseries_spark.pipeline.graph as graph
+    from spark_timeseries_spark.parallel import collect_at_most
+
+    probed = []
+
+    def recording(df, bound):
+        probed.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return collect_at_most(df, bound)
+
+    monkeypatch.setattr(dedup, "collect_at_most", recording)
+    monkeypatch.setattr(graph, "collect_at_most", recording)
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)],
+        "id_a long, id_b long",
+    )
+    comp = dedup.connected_components(pairs)
+    ranks = graph.pagerank(pairs)
+    assert len(probed) == 2
+    assert not [p for p in probed if "Union" in p], probed
+    assert {r.id: r.component for r in comp.collect()} == {
+        1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20
+    }
+    assert sorted(r.id for r in ranks.collect()) == [1, 2, 3, 10, 11, 20, 21, 22]
+    for out in (comp, ranks):
+        plan = out._jdf.queryExecution().optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LocalRelation", plan
+        assert 0 < int(str(plan.stats().sizeInBytes())) < (1 << 63) - 1
 
 
 def test_bpe_merge_fold_leftmost_first(spark):
