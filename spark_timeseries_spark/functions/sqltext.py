@@ -73,6 +73,51 @@ def literal(value: str | bool | int | float) -> str:
     raise TypeError(f"no SQL literal for {type(value).__name__}")
 
 
+def solve_linear(aug: str, n: int, rtol: float) -> str:
+    """SQL text of the ``ARRAY<DOUBLE>`` solving an ``n×n`` system by
+    Gaussian elimination with partial pivoting. ``aug`` is the text of
+    the augmented matrix, an ``ARRAY<ARRAY<DOUBLE>>`` whose row ``i`` is
+    ``[a_i0, ..., a_i(n-1), b_i]``; it is evaluated once.
+
+    A column whose pivot is at most ``rtol`` times the largest absolute
+    diagonal entry is skipped and its unknown is 0: the solution of the
+    system with that column removed, so a singular system of normal
+    equations still gets the fit on its independent columns. The pivot
+    row search, the swap and the elimination of column ``k`` are one
+    step of an ``aggregate`` over ``sequence(0, n-1)``; back substitution
+    is a second ``aggregate`` over the pivot rows."""
+    last = n - 1
+    step = (
+        # s: (m matrix, r next pivot row, piv pivot row of each column or -1)
+        f"transform(array(array_max(transform(sequence(s.r, {last}),"
+        f" i -> named_struct('a', abs(s.m[i][k]), 'i', i)))), b ->"
+        f" CASE WHEN b.a <= tol"
+        f" THEN named_struct('m', s.m, 'r', s.r, 'piv', concat(s.piv, array(-1)))"
+        f" ELSE transform(array(transform(s.m, (u, i) -> CASE WHEN i = s.r"
+        f" THEN s.m[b.i] WHEN i = b.i THEN s.m[s.r] ELSE u END)), q ->"
+        f" named_struct('m', transform(q, (u, i) -> CASE WHEN i > s.r"
+        f" THEN zip_with(u, q[s.r], (x, y) -> x - u[k] / q[s.r][k] * y)"
+        f" ELSE u END), 'r', s.r + 1, 'piv', concat(s.piv, array(s.r))))[0]"
+        f" END)[0]"
+    )
+    back = (
+        # x: the unknowns solved so far (columns > k), 0 elsewhere
+        f"CASE WHEN e.piv[k] < 0 THEN x ELSE transform(x, (v, j) ->"
+        f" CASE WHEN j = k THEN (e.m[e.piv[k]][{n}] - aggregate(sequence(0, {last}),"
+        f" 0D, (t, c) -> t + e.m[e.piv[k]][c] * x[c])) / e.m[e.piv[k]][k]"
+        f" ELSE v END) END"
+    )
+    return (
+        f"transform(array({aug}), a -> transform(array({literal(float(rtol))}"
+        f" * array_max(transform(sequence(0, {last}), i -> abs(a[i][i])))), tol ->"
+        f" transform(array(aggregate(sequence(0, {last}),"
+        f" named_struct('m', a, 'r', 0, 'piv', CAST(array() AS ARRAY<INT>)),"
+        f" (s, k) -> {step})), e ->"
+        f" aggregate(sequence({last}, 0, -1), array_repeat(0D, {n}),"
+        f" (x, k) -> {back}))[0])[0])[0]"
+    )
+
+
 def expr_over(col: ColumnOrName, body: Callable[[str], str]) -> Column:
     """One parsed expression over ``col``; ``body`` maps the SQL text that
     stands for ``col`` to the expression's text. A column name is quoted

@@ -18,6 +18,13 @@ partitions, carrying only the columns the kernel reads (all of them where
 it returns the input rows); each series must fit in executor memory —
 the same envelope the reference assumes
 (``src/site/markdown/index.md:35-40``). Models never touch the driver.
+
+``model="ar"`` is the exception: its OLS fit is a function of per-key
+lag moments, so :func:`fit_models`, :func:`forecast` and
+:func:`residuals` build it in the JVM (:func:`_ar_fit`): one key-ordered
+window of positional lags and one ``groupBy(key)``, with no Python stage.
+An input already clustered by the key (a ``fill``/``rolling`` chain)
+adds no exchange.
 """
 
 from __future__ import annotations
@@ -27,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import ident, literal, solve_linear
 from ..parallel import map_groups
 from . import arima as arima_mod
 from . import arx as arx_mod
@@ -83,9 +91,6 @@ def _require(name: str, known: tuple) -> str:
 
 
 def _fit_one(model: str, y: np.ndarray, kwargs: dict):
-    if model == "ar":
-        m = uni.fit_ar(y, kwargs.get("max_lag", 1), kwargs.get("no_intercept", False))
-        return np.concatenate([[m.c], m.coefficients])
     if model == "ewma":
         return np.array([uni.fit_ewma(y).smoothing])
     if model == "ewma_grid":
@@ -154,6 +159,117 @@ def _model_obj(model: str, params: np.ndarray, kwargs: dict):
     raise ValueError(f"unknown model {model}")
 
 
+#: a lag whose elimination pivot is at most this share of the largest
+#: diagonal moment is collinear with the lags before it: its coefficient is 0
+AR_PIVOT_RTOL = 1e-10
+
+_NO_DOUBLES = "CAST(array() AS ARRAY<DOUBLE>)"
+
+
+def _ar_fit(
+    df: DataFrame,
+    key_col: str,
+    order_col: str,
+    value_col: str,
+    p: int,
+    no_intercept: bool,
+    fixed_params=None,
+    rows: bool = False,
+) -> DataFrame:
+    """The one JVM builder of ``model="ar"``: AR(``p``) by OLS per key →
+    (``key_col``, ``_params``, ``_tail``).
+
+    The series is ``value_col`` in ``order_col`` order with NULL and NaN
+    cells dropped. One window over (key, order) attaches its positional
+    lags ``_x1.._xp`` (``lag … IGNORE NULLS``: the j-th previous clean
+    value), the same window ``fill``/``rolling`` sort by. One
+    ``groupBy(key)`` then reduces the rows with all ``p`` lags to the
+    normal equations: centered moments (``var_pop``/``covar_pop`` of the
+    lags and the value, and their means) or, under ``no_intercept``, raw
+    second moments. :func:`~..functions.sqltext.solve_linear` solves
+    them per key; the intercept is ``mean(y) − Σ φ_j·mean(x_j)``.
+
+    ``_params`` is ``[c, φ1..φp]`` (``c = 0`` under ``no_intercept``).
+    It agrees with least squares on the lag matrix
+    (:func:`~.univariate.fit_ar`) on full-rank series. A lag whose pivot
+    falls to :data:`AR_PIVOT_RTOL` of the largest diagonal moment gets
+    coefficient 0, so a constant series forecasts its constant. A series
+    with at most ``p`` clean points has no fit: ``_params`` is NULL.
+    ``fixed_params`` replaces the fit with a literal ``[c, φ1..φp]``.
+
+    ``_tail`` is ``[y_n, …, y_(n-p+1)]``, the last ``p`` clean values
+    (NULL with fewer). ``rows=True`` also collects each key's input rows
+    with their lags into ``_rows``."""
+    lag_cols = [f"_x{j}" for j in range(1, p + 1)]
+    y = f"nanvl(CAST({ident(value_col)} AS DOUBLE), CAST(NULL AS DOUBLE))"
+    over = f"OVER (PARTITION BY {ident(key_col)} ORDER BY {ident(order_col)})"
+    # _y first, so an exchange under the window carries one value column
+    lagged = df.selectExpr("*", f"{y} AS _y").selectExpr(
+        "*", *[f"lag(_y, {j}) IGNORE NULLS {over} AS _x{j}" for j in range(1, p + 1)]
+    )
+    # the tail row is the last clean row with p - 1 lags
+    tail_cond = "_y IS NOT NULL" + (f" AND _x{p - 1} IS NOT NULL" if p > 1 else "")
+    # one max_by per value: scalar buffers keep the aggregate a
+    # code-generated hash aggregate (an array buffer forces a sort one)
+    tail_at = f"CASE WHEN {tail_cond} THEN {ident(order_col)} END"
+    tail_cols = ["_y", *lag_cols][:p]
+    aggs = [f"max_by({c}, {tail_at}) AS _t{c}" for c in tail_cols]
+    aggs.append(f"count({tail_at}) AS _tn")
+    tail = (
+        f"CASE WHEN _tn > 0 THEN array({', '.join('_t' + c for c in tail_cols)}) END"
+        if p else _NO_DOUBLES
+    )
+    if rows:
+        fields = ", ".join(ident(c) for c in (*df.columns, "_y", *lag_cols))
+        aggs.append(f"collect_list(struct({fields})) AS _rows")
+    if fixed_params is not None:
+        params = "array(" + ", ".join(literal(float(v)) for v in fixed_params) + ")"
+    else:
+        # only rows with all p lags enter the regression
+        def c(col: str) -> str:
+            return f"CASE WHEN _y IS NOT NULL AND _x{p} IS NOT NULL THEN {col} END"
+
+        xs = [c(x) for x in lag_cols]
+        if no_intercept:
+            def second(a: str, b: str) -> str:
+                return f"avg({a} * {b})"
+        else:
+            def second(a: str, b: str) -> str:
+                return f"var_pop({a})" if a == b else f"covar_pop({a}, {b})"
+        aggs += ["count(_y) AS _n", f"avg({c('_y')}) AS _my"]
+        aggs += [f"avg({x}) AS _m{i}" for i, x in enumerate(xs)]
+        aggs += [
+            f"{second(xs[i], xs[j])} AS _s{i}_{j}"
+            for i in range(p) for j in range(i, p)
+        ]
+        aggs += [f"{second(x, c('_y'))} AS _q{i}" for i, x in enumerate(xs)]
+        aug = "array(" + ", ".join(
+            "array(" + ", ".join(
+                [f"_s{min(i, j)}_{max(i, j)}" for j in range(p)] + [f"_q{i}"]
+            ) + ")"
+            for i in range(p)
+        ) + ")"
+        phi = solve_linear(aug, p, AR_PIVOT_RTOL)
+        if no_intercept:
+            body = f"concat(array(0D), {phi})"
+        else:
+            dot = " + ".join(f"f[{i}] * _m{i}" for i in range(p))
+            body = f"transform(array({phi}), f -> concat(array(_my - ({dot})), f))[0]"
+        params = f"CASE WHEN _n > {p} THEN {body} END"
+    fit = lagged.groupBy(key_col).agg(*[F.expr(a) for a in aggs])
+    return fit.selectExpr(
+        ident(key_col), *(["_rows"] if rows else []),
+        f"{tail} AS _tail", f"{params} AS _params",
+    )
+
+
+def _ar_order(kwargs: dict) -> int:
+    p = kwargs.get("max_lag", 1)
+    if p < 1:
+        raise ValueError(f"max_lag must be >= 1, got {p}")
+    return p
+
+
 def fit_models(
     df: DataFrame,
     model: str,
@@ -162,8 +278,23 @@ def fit_models(
     value_col: str = "value",
     **kwargs,
 ) -> DataFrame:
-    """Per-series estimation → (key, model, params)."""
+    """Per-series estimation → (key, model, params).
+
+    ``model="ar"`` (kwargs ``max_lag`` = p, default 1, and
+    ``no_intercept``) runs in the JVM (:func:`_ar_fit`): params
+    ``[c, φ1..φp]``, the OLS fit on the NULL/NaN-dropped series; a lag
+    collinear with the lags before it gets 0, and a series with at most
+    p clean points gets ``params == []``."""
     model = _require(model, _KNOWN_MODELS)
+    if model == "ar":
+        fit = _ar_fit(
+            df, key_col, order_col, value_col, _ar_order(kwargs),
+            kwargs.get("no_intercept", False),
+        )
+        return fit.selectExpr(
+            f"CAST({ident(key_col)} AS STRING) AS key", "'ar' AS model",
+            f"coalesce(_params, {_NO_DOUBLES}) AS params",
+        )
 
     def _fit(pdf: pd.DataFrame) -> pd.DataFrame:
         key = pdf[key_col].iloc[0]
@@ -194,9 +325,42 @@ def forecast(
     """Fit per series and forecast ``horizon`` steps → (key, step, forecast).
 
     Pass ``params=[...]`` to skip the fit and forecast with a known parameter
-    vector (the distributed analog of forecasting from a pre-fit model)."""
+    vector (the distributed analog of forecasting from a pre-fit model).
+
+    ``model="ar"`` fits as :func:`fit_models` does and runs the recursion
+    ``y_(t+1) = c + Σ φ_j·y_(t+1-j)`` from the last p clean values as one
+    ``aggregate(sequence(1, horizon), …)`` per key, in the JVM. A series
+    with no fit (at most p clean points; fewer than p under ``params``)
+    forecasts NaN."""
     model = _require(model, _FORECASTABLE)
     fixed_params = kwargs.pop("params", None)
+    if model == "ar":
+        if horizon < 1:
+            raise ValueError(f"horizon must be >= 1, got {horizon}")
+        p = _ar_order(kwargs) if fixed_params is None else len(fixed_params) - 1
+        fit = _ar_fit(
+            df, key_col, order_col, value_col, p,
+            kwargs.get("no_intercept", False), fixed_params,
+        )
+        # w: [c, φ1..φp]; s.t: the last p values, the latest first
+        dot = (
+            f"aggregate(sequence(1, {p}), 0D, (a, j) -> a + w[j] * s.t[j - 1])"
+            if p else "0D"
+        )
+        path = (
+            f"transform(array(_params), w -> CASE WHEN w IS NULL OR _tail IS NULL"
+            f" THEN array_repeat(CAST('NaN' AS DOUBLE), {horizon})"
+            f" ELSE aggregate(sequence(1, {horizon}),"
+            f" named_struct('t', _tail, 'f', {_NO_DOUBLES}),"
+            f" (s, i) -> transform(array(w[0] + {dot}), v -> named_struct("
+            f"'t', slice(concat(array(v), s.t), 1, {p}),"
+            f" 'f', concat(s.f, array(v))))[0], s -> s.f) END)[0]"
+        )
+        return fit.selectExpr(
+            f"CAST({ident(key_col)} AS STRING) AS key",
+            f"inline(zip_with(sequence(1L, {horizon}L), {path},"
+            f" (i, v) -> named_struct('step', i, 'forecast', v)))",
+        )
 
     def _fc(pdf: pd.DataFrame) -> pd.DataFrame:
         key = pdf[key_col].iloc[0]
@@ -243,8 +407,36 @@ def residuals(
     **kwargs,
 ) -> DataFrame:
     """Fit per series and remove time-dependent effects
-    (``TimeSeriesModel.removeTimeDependentEffects``)."""
+    (``TimeSeriesModel.removeTimeDependentEffects``).
+
+    ``model="ar"`` fits as :func:`fit_models` does, in the same
+    ``groupBy(key)`` that collects the key's rows, and returns every
+    input row once: a clean value becomes ``y_t − c − Σ φ_j·y_(t−j)``
+    over the lags the clean series has before it, a NULL or NaN value
+    and every value of a series with no fit become NULL."""
     model = _require(model, _RESIDUAL_MODELS)
+    if model == "ar":
+        p = _ar_order(kwargs)
+        fit = _ar_fit(
+            df, key_col, order_col, value_col, p,
+            kwargs.get("no_intercept", False), rows=True,
+        )
+        lags = "".join(
+            f" - coalesce(w[{j}] * r._x{j}, 0D)" for j in range(1, p + 1)
+        )
+        resid = (
+            f"CAST(CASE WHEN w IS NOT NULL AND r._y IS NOT NULL"
+            f" THEN r._y - w[0]{lags} END"
+            f" AS {df.schema[value_col].dataType.simpleString()})"
+        )
+        fields = ", ".join(
+            f"{literal(c)}, {resid if c == value_col else 'r.' + ident(c)}"
+            for c in df.columns
+        )
+        return fit.selectExpr(
+            f"inline(transform(array(_params), w -> transform(_rows,"
+            f" r -> named_struct({fields})))[0])"
+        )
 
     def _resid(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order_col).reset_index(drop=True)

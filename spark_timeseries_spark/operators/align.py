@@ -16,7 +16,9 @@ we join the (small) index DataFrame; Catalyst broadcasts it automatically.
 Densification (materializing missing cells as NULL) is ``resample._conform``,
 the one conform step this module shares with ``resample``: one
 ``groupBy(key, loc)`` over the unfiltered observations (one scan), then a
-per-key ``loc → value`` map crossed with the broadcast index — or, above
+per-key ``loc → value`` map, clustered by the key in
+``spark.sql.shuffle.partitions`` partitions, crossed with the broadcast
+index — or, above
 ``MAP_GRID_MAX_INSTANTS`` instants, a key×index left join keyed from that
 same aggregate. The grid is exactly the size of the reference's dense
 vectors. The reference's four hand-specialized rebaser

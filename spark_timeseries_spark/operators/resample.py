@@ -33,10 +33,12 @@ conform step shared with ``align.from_observations``/``with_index``
 (``TimeSeriesRDD.scala:694-745`` and ``:554-563`` conform every series to
 one index the same way). One ``groupBy(key, loc)`` over the unfiltered
 input — a single scan — then, up to :data:`MAP_GRID_MAX_INSTANTS`
-instants, a second aggregate folds each key's cells into a
-``loc → value`` map that is crossed with the broadcast index; above the
-bound the grid is a key×index left join whose keys come from that same
-aggregate. Empty windows come out NULL (the reference's NaN).
+instants, one explicit ``repartition(shuffle.partitions, key)`` and a
+second aggregate fold each key's cells into a ``loc → value`` map that
+is crossed with the broadcast index, so the grid comes out clustered by
+the key for the series windows after it; above the bound the grid is a
+key×index left join whose keys come from that same aggregate. Empty
+windows come out NULL (the reference's NaN).
 """
 
 from __future__ import annotations
@@ -143,6 +145,13 @@ def _conform(
 
     A NULL key is one series, like any other key: the map grid groups it,
     and the join grid matches it with null-safe equality.
+
+    The map grid comes out clustered by the key in
+    ``spark.sql.shuffle.partitions`` partitions: one explicit
+    ``repartition(n, key)`` after the ``(key, loc)`` partial aggregate,
+    which adaptive execution never coalesces. A ``PARTITION BY key``
+    window or per-key aggregate over the grid adds no exchange and runs
+    that many tasks wide.
     """
     idx_df = F.broadcast(index.to_df(located.sparkSession))
     in_index = F.col("loc").isNotNull()
@@ -153,7 +162,12 @@ def _conform(
         return cells.join(idx_df, "loc").select(key_col, "loc", "ts", value_col)
     binned = located.groupBy(key_col, "loc").agg(agg.alias(value_col))
     if len(index) <= MAP_GRID_MAX_INSTANTS:
-        per_key = binned.groupBy(key_col).agg(
+        # an explicit count: adaptive execution coalesces a small
+        # groupBy(key) exchange into one task, and the grid, every
+        # PARTITION BY key window after it and a per-key aggregate after
+        # those would all run in that task
+        parts = int(located.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        per_key = binned.repartition(parts, key_col).groupBy(key_col).agg(
             F.map_from_entries(
                 F.collect_list(F.when(in_index, F.struct("loc", value_col)))
             ).alias("_cells")

@@ -2,8 +2,14 @@
 
 A Python task has a fixed cost a JVM task does not: on a 4-vCPU
 container at ``local[4]``, 40 trivial Python tasks (ten waves) took
-2.26 s against 0.23 s for 40 JVM tasks, ~0.2 s per wave even on reused
-workers (``python -m tools.python_task_cost`` measures it on any box).
+259–321 ms per wave even on reused workers, against 17–23 ms for JVM
+tasks (``python -m tools.python_task_cost`` measures it on any box).
+Most of it is import-cache upkeep: each task's ``setup_spark_files``
+calls ``importlib.invalidate_caches()``, which on CPython 3.11 re-reads
+``pyspark.zip``'s 1,328-entry directory once per zipimporter; a worker
+holds 16 zipimporters, and one call took 130–310 ms inside a worker.
+Library code cannot remove this cost: it comes from the deployment
+putting ``$SPARK_HOME/python/lib/pyspark.zip`` on the worker path.
 So :func:`map_groups`, the grouped-map primitive every per-series Python
 kernel runs on, uses ONE wave of ``defaultParallelism`` tasks and ONE
 ``mapInPandas`` call per task, where ``groupBy().applyInPandas`` frames

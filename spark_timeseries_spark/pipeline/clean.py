@@ -107,7 +107,8 @@ def pretrain_clean(
     (:func:`..dedup.remove_dup_spans`, Lee et al. 2021 removal), keeping
     one canonical copy. Both run on the gated survivor set only, and each
     costs its documented shuffle budget (paragraph: hash groupBy + join
-    back + per-doc rebuild; spans: gram-hash groupBy + doc_id window).
+    back + rebuild per (id, text hash), so documents sharing an id stay
+    apart; spans: gram-hash groupBy + doc_id window).
     ``hash_fn`` selects their gram/paragraph hash (``md5_60`` for
     oracle-replayable runs)."""
     from .dedup import dedup_paragraphs, remove_dup_spans
@@ -160,9 +161,16 @@ def pretrain_clean(
         # the gates and joins ahead of it
         survivors = cached = survivors.persist()
     if dedup_paragraph:
-        para = dedup_paragraphs(survivors, text_col, id_col, hash_fn=hash_fn)
-        survivors = survivors.drop(text_col).join(
-            para.select(id_col, text_col), id_col
+        # paragraphs are rebuilt per document, not per id: the key is
+        # (id, text hash), so two documents sharing an id (or both NULL)
+        # stay two rows
+        doc = F.struct(F.col(id_col).alias("i"), F.xxhash64(text_col).alias("h"))
+        keyed = survivors.withColumn("_doc", doc)
+        para = dedup_paragraphs(keyed, text_col, "_doc", hash_fn=hash_fn)
+        survivors = (
+            keyed.drop(text_col)
+            .join(para.select("_doc", text_col), "_doc")
+            .drop("_doc")
         )
     if remove_span_grams is not None:
         spans = remove_dup_spans(

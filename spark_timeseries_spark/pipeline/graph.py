@@ -66,7 +66,8 @@ def pagerank(
     (each pair contributes both directions). ``pr_int`` is the exact
     integer score in 10^-digits units (the engine-independent value);
     ``pr`` divides it out for reading. Nodes = every id appearing in
-    any pair; a pair with a NULL id is dropped. Dangling nodes cannot
+    any pair; a pair with a NULL id is dropped, and a table with no
+    pair left ranks no node (an empty frame). Dangling nodes cannot
     exist after symmetrization (directed = True keeps them: their rank
     mass leaks, the standard simplification, stated).
 
@@ -117,6 +118,10 @@ def pagerank(
         .localCheckpoint(eager=False)
     )
     n_nodes = nodes.count()  # fills the checkpoint: one job
+    if n_nodes == 0:
+        return nodes.select(
+            "id", F.lit(0).cast("long").alias("pr_int"), F.lit(0.0).alias("pr")
+        )
     deg = edges.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -175,14 +180,16 @@ def _pagerank_local(spark, edges, iters, scale, id_type):
         nodes.add(src)
         nodes.add(dst)
     n_nodes = len(nodes)
-    init = scale // n_nodes
-    base = (3 * scale) // (20 * n_nodes)
-    pr = {nid: init for nid in nodes}
-    for _ in range(iters):
-        inflow = {}
-        for src, dst in edges:
-            inflow[dst] = inflow.get(dst, 0) + pr[src] // deg[src]
-        pr = {nid: base + (17 * inflow.get(nid, 0)) // 20 for nid in nodes}
+    pr = {}
+    if n_nodes:
+        init = scale // n_nodes
+        base = (3 * scale) // (20 * n_nodes)
+        pr = {nid: init for nid in nodes}
+        for _ in range(iters):
+            inflow = {}
+            for src, dst in edges:
+                inflow[dst] = inflow.get(dst, 0) + pr[src] // deg[src]
+            pr = {nid: base + (17 * inflow.get(nid, 0)) // 20 for nid in nodes}
     ids = sorted(nodes)
     schema = T.StructType([
         T.StructField("id", id_type, True),

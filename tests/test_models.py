@@ -864,3 +864,84 @@ def test_kalman_textbook_recursion_pinned(spark):
             out[t].smoothed_var, p_s[t] * r_hat, rel_tol=1e-9, abs_tol=1e-12
         )
         assert out[t].r_hat == r_hat and out[t].q_hat == q
+
+
+def _ar_frame(spark, p):
+    """Random series with NULL and NaN gaps and a NULL key, one constant
+    series and one with exactly p clean points → (frame, clean series)."""
+    rng = np.random.default_rng(20 + p)
+    rows, clean = [], {}
+    for key in ("a", "b", None, "const", "short"):
+        n = 60 if key != "short" else p + 3
+        y = np.full(n, 4.25) if key == "const" else (
+            np.cumsum(rng.normal(size=n)) * 0.4 + rng.normal(size=n)
+        )
+        u = rng.random(n)
+        vals = [
+            None if r < 0.1 else float("nan") if r < 0.15 else float(v)
+            for r, v in zip(u, y)
+        ]
+        if key == "short":
+            vals = [float(v) if i < p else None for i, v in enumerate(y)]
+        rows += [(key, i, v) for i, v in enumerate(vals)]
+        clean[key] = np.array([v for v in vals if v is not None and v == v])
+    df = spark.createDataFrame(rows, "key string, loc long, value double")
+    return df, clean, rows
+
+
+@pytest.mark.parametrize("no_intercept", [False, True])
+@pytest.mark.parametrize("p", [1, 2, 3])
+def test_ar_jvm_fit_matches_least_squares(spark, p, no_intercept):
+    """fit_models / forecast / residuals with model="ar" run in the JVM
+    and keep the local fit_ar contract: on full-rank series params,
+    forecasts and residuals agree with lstsq to 1e-9 relative; a
+    collinear lag gets coefficient 0, so a constant series forecasts its
+    constant; a series with at most p clean points has no fit (params
+    [], NaN forecasts, NULL residuals)."""
+    from spark_timeseries_spark.models import fit_models, forecast, residuals
+
+    df, clean, rows = _ar_frame(spark, p)
+    kw = {"max_lag": p, "no_intercept": no_intercept}
+    params = {r.key: r.params for r in fit_models(df, "ar", **kw).collect()}
+    fc: dict = {}
+    for r in forecast(df, "ar", 5, **kw).collect():
+        fc.setdefault(r.key, [None] * 5)[r.step - 1] = r.forecast
+    res = {(r.key, r.loc): r.value for r in residuals(df, "ar", **kw).collect()}
+    assert set(params) == set(fc) == set(clean) and len(res) == len(rows)
+
+    def close(got, want):
+        np.testing.assert_allclose(got, want, rtol=1e-9, atol=1e-9)
+
+    for key in ("a", "b", None):
+        m = fit_ar(clean[key], p, no_intercept)
+        close(params[key], np.concatenate([[m.c], m.coefficients]))
+        close(fc[key], m.forecast(clean[key], 5))
+        got = [res[(k, i)] for k, i, v in rows if k == key and v is not None and v == v]
+        close(got, m.remove_effects(clean[key]))
+        assert all(
+            res[(k, i)] is None for k, i, v in rows
+            if k == key and (v is None or v != v)
+        )
+    const = params["const"]
+    assert len(const) == p + 1
+    assert const[2:] == [0.0] * (p - 1)  # only one lag carries the level
+    close(fc["const"], [4.25] * 5)
+    assert params["short"] == []
+    assert all(np.isnan(fc["short"]))
+    assert all(res[(k, i)] is None for k, i, _ in rows if k == "short")
+
+
+def test_ar_forecast_with_fixed_params(spark):
+    """params=[c, φ…] skips the fit: the recursion runs from the last p
+    clean values, and a series with fewer than p forecasts NaN."""
+    from spark_timeseries_spark.models import ARModel, forecast
+
+    rows = [("a", i, v) for i, v in enumerate([1.0, None, 2.0, float("nan"), 3.0])]
+    rows += [("b", 0, 5.0)]
+    df = spark.createDataFrame(rows, "key string, loc long, value double")
+    got = {}
+    for r in forecast(df, "ar", 3, params=[0.5, 0.6, 0.3]).collect():
+        got.setdefault(r.key, {})[r.step] = r.forecast
+    want = ARModel(0.5, np.array([0.6, 0.3])).forecast(np.array([1.0, 2.0, 3.0]), 3)
+    np.testing.assert_allclose([got["a"][s] for s in (1, 2, 3)], want, rtol=1e-12)
+    assert all(np.isnan(v) for v in got["b"].values())

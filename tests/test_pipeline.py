@@ -3168,3 +3168,44 @@ def test_filter_audit(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         filter_audit(df, {})
+
+
+@pytest.mark.parametrize("edge_rows", [None, 0], ids=["driver_local", "distributed"])
+def test_pagerank_of_an_empty_pair_table_is_empty(spark, monkeypatch, edge_rows):
+    """A pair table with no pair (or only NULL-id pairs) ranks no node:
+    both paths return an empty (id, pr_int, pr) frame, as
+    connected_components does, instead of dividing by zero nodes."""
+    import spark_timeseries_spark.pipeline.graph as graph
+
+    if edge_rows is not None:
+        monkeypatch.setattr(graph, "DRIVER_EDGE_ROWS", edge_rows)
+    empty = spark.createDataFrame([], "id_a long, id_b long")
+    nulls = spark.createDataFrame([(None, 1), (2, None)], "id_a long, id_b long")
+    for pairs in (empty, nulls):
+        for directed in (False, True):
+            ranks = graph.pagerank(pairs, directed=directed)
+            assert ranks.columns == ["id", "pr_int", "pr"]
+            assert ranks.collect() == []
+
+
+def test_paragraph_dedup_keeps_documents_sharing_an_id(spark):
+    """pretrain_clean(dedup_paragraph=True) rebuilds each document row,
+    not each id: two different documents with id 7 come back as two rows
+    (a join back on the id merged them into one row holding both
+    bodies), and a NULL-id document comes back too."""
+    from spark_timeseries_spark.pipeline.clean import pretrain_clean
+
+    a = "\n\n".join(f"the a{i} of x{i} and y{i} in z{i}" for i in range(6))
+    b = "\n\n".join(f"the b{i} of u{i} and t{i} in s{i}" for i in range(6))
+    c = "\n\n".join(f"the c{i} of q{i} and r{i} in p{i}" for i in range(6))
+    shared = "the shared paragraph of this corpus and that one"
+    rows = [(7, a + "\n\n" + shared), (7, b + "\n\n" + shared), (None, c)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    plain = pretrain_clean(df, min_quality=0.0).collect()
+    out = pretrain_clean(df, min_quality=0.0, dedup_paragraph=True).collect()
+    assert len(plain) == len(out) == 3
+    got = sorted(((r.doc_id is None, r.text) for r in out), key=repr)
+    # the shared paragraph survives once, in one of the two id-7 documents
+    assert sum(shared in t for _, t in got) == 1
+    assert {t.replace("\n\n" + shared, "") for _, t in got} == {a, b, c}
+    assert [n for n, _ in got].count(True) == 1

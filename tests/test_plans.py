@@ -247,8 +247,9 @@ def test_resample_is_one_shuffle_plus_broadcasts(spark):
     idx = sts.uniform("2024-01-01", 31, sts.DayFrequency(1))
     out = resample_ops.resample(obs, idx, "avg")
     shuffles, sorts, p = _counts(out)
-    # one shuffle for the (key, loc) aggregate + one to fold each key's
-    # cells into its loc→value map; the index side broadcasts
+    # one shuffle for the (key, loc) aggregate + the explicit key
+    # clustering that folds each key's cells into its loc→value map; the
+    # index side broadcasts
     assert shuffles == 2, p
     assert "BroadcastExchange" in p
 
@@ -407,13 +408,58 @@ def test_model_fit_single_exchange(spark, grid):
     n = spark.sparkContext.defaultParallelism
     assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
     src = rolling.roll_mean(grid.where(F.col("value").isNotNull()), 3)
-    p = _plan(fit_models(src, "ar", max_lag=1))
+    p = _plan(fit_models(src, "ewma"))
     exchanges = re.findall(r"Exchange hashpartitioning\(([^()]*)\), (\w+)", p)
     assert [origin for _, origin in exchanges] == [
         "REPARTITION_BY_NUM", "ENSURE_REQUIREMENTS",
     ], p
     assert exchanges[0][0].endswith(f", {n}"), p
     assert "MapInPandas" in p and "FlatMapGroupsInPandas" not in p, p
+
+
+def test_ts_chain_runs_key_clustered_in_the_jvm(spark):
+    """observations → align → fill_linear → roll_mean(24) → AR(2)
+    forecast plans no Python stage, and its only shuffles are the (key,
+    loc) partial aggregate's exchange and ONE explicit key clustering at
+    shuffle.partitions, which adaptive execution cannot coalesce: the
+    grid, the fill and rolling windows, the AR lag window and its
+    per-key moment aggregate then run that many tasks wide."""
+    from spark_timeseries_spark.models import forecast
+    from spark_timeseries_spark.operators import align
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    idx = sts.uniform("2024-01-01", 31, sts.DayFrequency(1))
+    grid = align.from_observations(events_observations(spark, SF), idx)
+    fc = forecast(
+        rolling.roll_mean(fill_ops.fill_linear(grid), 24), "ar", 5, max_lag=2
+    )
+    p = _plan(fc)  # the plan as planned, before adaptive execution runs it
+    sc = spark.sparkContext
+    sc.setJobGroup("ts_chain_plan", "ts_chain_plan")
+    try:
+        assert fc.collect()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert "MapInPandas" not in p and "ArrowEvalPython" not in p, p
+    exchanges = re.findall(r"Exchange (\w+)\(([^()]*)\), (\w+)", p)
+    assert sorted((kind, origin) for kind, _, origin in exchanges) == [
+        ("hashpartitioning", "ENSURE_REQUIREMENTS"),
+        ("hashpartitioning", "REPARTITION_BY_NUM"),
+    ], p
+    by_num = [cols for _, cols, origin in exchanges if origin == "REPARTITION_BY_NUM"]
+    assert re.fullmatch(rf"key#\d+, {n}", by_num[0]), p
+    tracker = sc.statusTracker()
+    stages = [
+        tracker.getStageInfo(s)
+        for j in tracker.getJobIdsForGroup("ts_chain_plan")
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    # the last stage runs the windows and the per-key aggregate
+    last = max((s for s in stages if s is not None), key=lambda s: s.stageId)
+    assert last.numTasks == n, [(s.stageId, s.numTasks) for s in stages if s]
 
 
 def test_sessionize_single_exchange(spark, grid):

@@ -11,7 +11,14 @@ and its workers are started and reused), and prints one JSON line:
 - ``python_ms_per_wave`` / ``jvm_ms_per_wave``: the fixed latency one
   round of tasks costs. Their difference is what every extra wave of a
   Python kernel stage pays, which is why ``parallel.map_groups`` runs in
-  one wave.
+  one wave;
+- ``worker_zipimporters`` / ``worker_invalidate_caches_ms``, read inside
+  one ``mapInPandas`` task: how many ``zipimport.zipimporter`` objects
+  the worker's ``sys.path_importer_cache`` holds, and the milliseconds
+  of one ``importlib.invalidate_caches()``. PySpark's
+  ``setup_spark_files`` calls it at the start of every task, and on
+  CPython 3.11 it re-reads the directory of each zip archive once per
+  zipimporter of that archive (``pyspark.zip`` among them).
 
 Usage::
 
@@ -36,6 +43,27 @@ def _time(job, reps: int) -> float:
         job()
         runs.append(time.perf_counter() - t0)
     return statistics.median(runs)
+
+
+def _worker_probe(batches):
+    """One row read inside a Python task: the zipimporter count and the
+    wall milliseconds of one ``importlib.invalidate_caches()``."""
+    import importlib
+    import sys
+    import zipimport
+
+    import pandas as pd
+
+    for _ in batches:
+        pass
+    zips = sum(
+        isinstance(f, zipimport.zipimporter)
+        for f in sys.path_importer_cache.values()
+    )
+    t0 = time.perf_counter()
+    importlib.invalidate_caches()
+    ms = 1000 * (time.perf_counter() - t0)
+    yield pd.DataFrame({"zipimporters": [zips], "invalidate_ms": [ms]})
 
 
 def main() -> None:
@@ -63,6 +91,9 @@ def main() -> None:
 
         jvm_s = _time(noop(rows.selectExpr("id + 1 AS id")), args.reps)
         python_s = _time(noop(rows.mapInPandas(lambda it: it, "id long")), args.reps)
+        probe = spark.range(0, 1, 1, 1).mapInPandas(
+            _worker_probe, "zipimporters long, invalidate_ms double"
+        ).first()
     finally:
         spark.stop()
     waves = math.ceil(args.tasks / args.cores)
@@ -74,6 +105,8 @@ def main() -> None:
         "jvm_s": round(jvm_s, 3),
         "python_ms_per_wave": round(1000 * python_s / waves, 1),
         "jvm_ms_per_wave": round(1000 * jvm_s / waves, 1),
+        "worker_zipimporters": int(probe["zipimporters"]),
+        "worker_invalidate_caches_ms": round(probe["invalidate_ms"], 1),
     }))
 
 
